@@ -175,8 +175,8 @@ object Dedup {
     graft.functions.CharWindowHash64.register(docs.sparkSession)
     val pos = docs.filter(length(col(textCol)) >= minLen)
       .select(col(idCol),
-        posexplode(expr(s"${graft.functions.CharWindowHash64.FnName}(" +
-          s"$textCol, $minLen)")))
+        posexplode(call_function(graft.functions.CharWindowHash64.FnName,
+          col(textCol), lit(minLen))))
       .select(col(idCol), (col("pos") + 1).as("pos"), col("col").as("__g"))
     val dup = pos
       .withColumn("__c", count(lit(1)).over(Window.partitionBy(col("__g"))))

@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 face of the Open-Meteo source (SURVEY.md S1 "at scale"):
-  * the fetch itself becomes a distributed scan — one input partition per
-  * city, each executor-side `PartitionReader` fetching and emitting its
-  * city's payload — instead of a driver-side loop. Usage:
+/** The reference's HTTP sources (SURVEY.md S1/S2): Open-Meteo
+  * `/v1/forecast` and `/v1/archive` URL construction, and a DataSource V2
+  * forecast source whose fetch is a distributed scan — one input
+  * partition per city, each executor-side `PartitionReader` fetching and
+  * emitting its city's payload — instead of a driver-side loop. Usage:
   *
   * {{{
   * spark.read.format("graft.sources.OpenMeteoV2Source")
@@ -71,13 +72,31 @@ object OpenMeteoV2Source {
     def apply(name: String): String => String = registry(name)
   }
 
-  final case class CitySpec(name: String, lat: Double, lon: Double)
+  final case class City(name: String, lat: Double, lon: Double)
 
-  def parseCities(spec: String): Seq[CitySpec] =
+  val HourlyVars = "temperature_2m,precipitation,wind_speed_10m"
+
+  /** openmeteo_client.py:19-25 — forecast endpoint query (hourly variable
+    * list, timezone parameter, ISO hour window).
+    */
+  def forecastUrl(lat: Double, lon: Double, startIso: String, endIso: String,
+      tz: String = "Europe/Berlin"): String =
+    s"https://api.open-meteo.com/v1/forecast?latitude=$lat&longitude=$lon" +
+      s"&hourly=$HourlyVars&timezone=$tz" +
+      s"&start_hour=$startIso&end_hour=$endIso"
+
+  /** openmeteo_client.py:40-56 — archive endpoint query (ISO date window). */
+  def archiveUrl(lat: Double, lon: Double, startDate: String, endDate: String,
+      tz: String = "auto"): String =
+    s"https://archive-api.open-meteo.com/v1/archive?latitude=$lat&longitude=$lon" +
+      s"&hourly=$HourlyVars&timezone=$tz" +
+      s"&start_date=$startDate&end_date=$endDate"
+
+  def parseCities(spec: String): Seq[City] =
     spec.split(";").toSeq.filter(_.nonEmpty).map { s =>
       s.split(":") match {
         case Array(n, lat, lon) =>
-          try CitySpec(n, lat.toDouble, lon.toDouble)
+          try City(n, lat.toDouble, lon.toDouble)
           catch { case _: NumberFormatException =>
             throw new IllegalArgumentException(
               s"OpenMeteoV2Source: option 'cities' segment '$s' has non-numeric lat/lon")
@@ -106,7 +125,7 @@ object OpenMeteoV2Source {
       }
   }
 
-  final case class CityPartition(city: CitySpec, window: String,
+  final case class CityPartition(city: City, window: String,
       transport: String) extends InputPartition
 
   class CityReaderFactory extends PartitionReaderFactory {
@@ -119,7 +138,7 @@ object OpenMeteoV2Source {
           if (done) false
           else {
             val Array(start, end) = p.window.split("/")
-            val url = OpenMeteoSource.forecastUrl(p.city.lat, p.city.lon, start, end)
+            val url = forecastUrl(p.city.lat, p.city.lon, start, end)
             payload = Transports(p.transport)(url)
             done = true
             true

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Stateful streaming conversion funnel — the streaming twin of the batch
   * q52 funnel (view → click → purchase, strictly ordered first-touch).
@@ -21,10 +21,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (ts, event_id), but an event arriving in a LATER batch with an EARLIER
   * timestamp cannot retroactively re-open a stage (streams trade exact
   * retro-updates for bounded state; run the batch query for the exact
-  * backfill answer).
+  * backfill answer, or [[funnelEventTime]] for in-watermark lateness).
   */
 // Serializable: funnelEventTime's updater closes over the module's private
-// helpers (advance/toOut), so the stateless module itself ships with the task
+// fold, so the stateless module itself ships with the task
 object FunnelStream extends Serializable {
 
   final case class Event(
@@ -66,44 +66,87 @@ object FunnelStream extends Serializable {
     FunnelOut(userId, stageOf(st), st.viewUs, st.clickUs, st.purchaseUs,
       completed = st.purchaseUs != Unset, closed = closed)
 
-  /** Fold a user's new events into funnel state; emit one row per stage
-    * ADVANCE (not per event), remove state on completion or timeout.
+  /** Fold events into funnel state in (ts_us, event_id) order; emit one row
+    * per stage ADVANCE (not per event), the completing row marked closed.
     */
-  def updateFunnel(timeoutMs: Long)(
-      userId: Long,
-      events: Iterator[Event],
-      state: GroupState[FunnelState]): Iterator[FunnelOut] = {
-    if (state.hasTimedOut) {
-      val st = state.get
-      state.remove()
-      return Iterator(toOut(userId, st, closed = true)) // abandoned
-    }
-    var st = state.getOption.getOrElse(FunnelState(Unset, Unset, Unset))
+  private def fold(userId: Long, from: FunnelState,
+      events: Seq[Event]): (FunnelState, Vector[FunnelOut]) = {
+    var st = from
     var out = Vector.empty[FunnelOut]
-    for (e <- events.toSeq.sortBy(e => (e.ts_us, e.event_id)))
+    for (e <- events.sortBy(e => (e.ts_us, e.event_id)))
       advance(st, e).foreach { next =>
         st = next
         out :+= toOut(userId, st, closed = st.purchaseUs != Unset)
       }
-    if (st.purchaseUs != Unset) state.remove() // done: free the key
-    else if (stageOf(st) > 0) {
-      state.update(st)
-      state.setTimeoutDuration(s"$timeoutMs milliseconds")
-    }
-    out.iterator
+    (st, out)
   }
 
-  /** Wire the updater over a (possibly streaming) typed event Dataset.
+  /** Processing-time funnel on `transformWithState`. Each stage's
+    * first-touch timestamp lives in its OWN named value store ("view",
+    * "click", "purchase"), so adding a fourth funnel stage later is one new
+    * named state, not a checkpoint-breaking rewrite of a packed blob. The
+    * idle expiry is an explicit per-key timer, re-armed on every batch that
+    * advances the key, whose firing emits the final `completed=false` row.
+    */
+  class FunnelProcessor(timeoutMs: Long)
+      extends StatefulProcessor[Long, Event, FunnelOut] {
+    @transient private var view: ValueState[Long] = _
+    @transient private var click: ValueState[Long] = _
+    @transient private var purchase: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      view = getHandle.getValueState[Long]("view", Encoders.scalaLong, TTLConfig.NONE)
+      click = getHandle.getValueState[Long]("click", Encoders.scalaLong, TTLConfig.NONE)
+      purchase = getHandle.getValueState[Long]("purchase", Encoders.scalaLong, TTLConfig.NONE)
+    }
+
+    private def read(s: ValueState[Long]): Long =
+      if (s.exists()) s.get() else Unset
+
+    private def stateNow: FunnelState =
+      FunnelState(read(view), read(click), read(purchase))
+
+    private def clearAll(): Unit = {
+      view.clear(); click.clear(); purchase.clear()
+      getHandle.listTimers().foreach(getHandle.deleteTimer)
+    }
+
+    override def handleInputRows(userId: Long, events: Iterator[Event],
+        timerValues: TimerValues): Iterator[FunnelOut] = {
+      val (st, out) = fold(userId, stateNow, events.toSeq)
+      if (st.purchaseUs != Unset) clearAll() // done: free the key
+      else if (stageOf(st) > 0) {
+        if (st.viewUs != Unset) view.update(st.viewUs)
+        if (st.clickUs != Unset) click.update(st.clickUs)
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(
+          timerValues.getCurrentProcessingTimeInMs() + timeoutMs)
+      }
+      out.iterator
+    }
+
+    override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[FunnelOut] = {
+      val st = stateNow
+      if (stageOf(st) == 0) return Iterator.empty
+      clearAll()
+      Iterator(toOut(userId, st, closed = true)) // abandoned
+    }
+  }
+
+  /** Wire the processor over a (possibly streaming) typed event Dataset.
     * `timeoutMs` bounds how long an idle, unconverted funnel's state lives.
+    * Requires [[RequiredStateStoreProvider]].
     */
   def funnel(spark: SparkSession, events: Dataset[Event],
       timeoutMs: Long = 60000L): Dataset[FunnelOut] = {
     import spark.implicits._
+    startStateStoreCoordinator(spark)
     events
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        updateFunnel(timeoutMs))
+      .transformWithState(
+        new FunnelProcessor(timeoutMs),
+        TimeMode.ProcessingTime(), OutputMode.Append())
   }
 
   /** Event-time state: the funnel timestamps plus the BUFFER of events the
@@ -113,20 +156,20 @@ object FunnelStream extends Serializable {
   final case class EventTimeFunnelState(
       viewUs: Long, clickUs: Long, purchaseUs: Long, pending: Seq[Event])
 
-  /** Event-time twin of [[funnel]] (EventTimeTimeout + watermark, the
-    * sessionizeEventTime precedent): events BUFFER until the watermark
-    * passes their timestamp, then fold in (ts, event_id) order — at that
-    * point no earlier in-watermark event can still arrive, so the fold is
-    * FINAL. An in-watermark late event therefore retroactively advances
-    * the funnel: the click that unblocks an already-buffered purchase
-    * completes the funnel here, where the processing-time variant (which
-    * rejected and forgot that purchase on arrival) provably cannot. The
-    * honest cost: state per user is O(events inside the watermark window),
-    * not O(1) — the same buffered-lateness trade
-    * `dropDuplicatesWithinWatermark` makes. Events at or below the
-    * watermark on arrival are dropped (the standard allowed-lateness
-    * contract). Unconverted funnels expire `idleGapUs` of EVENT time after
-    * their newest activity, emitting the final `completed=false` row.
+  /** Event-time variant of [[funnel]] (EventTimeTimeout + watermark):
+    * events BUFFER until the watermark passes their timestamp, then fold
+    * in (ts, event_id) order — at that point no earlier in-watermark event
+    * can still arrive, so the fold is FINAL. An in-watermark late event
+    * therefore retroactively advances the funnel: the click that unblocks
+    * an already-buffered purchase completes the funnel here, where the
+    * processing-time variant (which rejected and forgot that purchase on
+    * arrival) provably cannot. The honest cost: state per user is
+    * O(events inside the watermark window), not O(1) — the same
+    * buffered-lateness trade `dropDuplicatesWithinWatermark` makes. Events
+    * at or below the watermark on arrival are dropped (the standard
+    * allowed-lateness contract). Unconverted funnels expire `idleGapUs` of
+    * EVENT time after their newest activity, emitting the final
+    * `completed=false` row.
     */
   def funnelEventTime(
       spark: SparkSession,
@@ -144,13 +187,9 @@ object FunnelStream extends Serializable {
         st = st.copy(pending = st.pending ++ it.filter(_.ts_us > wmUs))
       // events the watermark has passed are finalizable NOW
       val (ripe, hold) = st.pending.partition(_.ts_us <= wmUs)
-      var out = Vector.empty[FunnelOut]
-      var fs = FunnelState(st.viewUs, st.clickUs, st.purchaseUs)
-      for (e <- ripe.sortBy(e => (e.ts_us, e.event_id)))
-        advance(fs, e).foreach { next =>
-          fs = next
-          out :+= toOut(userId, fs, closed = fs.purchaseUs != Unset)
-        }
+      val (fs, folded) =
+        fold(userId, FunnelState(st.viewUs, st.clickUs, st.purchaseUs), ripe)
+      var out = folded
       val latestUs = Seq(fs.viewUs, fs.clickUs, fs.purchaseUs).max max
         (if (hold.nonEmpty) hold.map(_.ts_us).max else Unset)
       if (fs.purchaseUs != Unset) {

@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.util.sketch.CountMinSketch
 
 /** Streaming heavy hitters — qa5's streaming twin: per group (event
@@ -30,59 +30,81 @@ import org.apache.spark.util.sketch.CountMinSketch
 object HeavyHitterStream extends Serializable {
 
   final case class Obs(group: String, item: Long)
-  final case class HHState(sketch: Array[Byte], candidates: Seq[Long])
   final case class HHOut(group: String, item: Long, est_count: Long, rank: Int)
 
   private val Seed = 42
 
-  private[streaming] def newSketch(eps: Double, confidence: Double): CountMinSketch =
+  private def newSketch(eps: Double, confidence: Double): CountMinSketch =
     CountMinSketch.create(eps, confidence, Seed)
 
-  private[streaming] def deserialize(bytes: Array[Byte]): CountMinSketch =
+  private def deserialize(bytes: Array[Byte]): CountMinSketch =
     CountMinSketch.readFrom(new ByteArrayInputStream(bytes))
 
-  private[streaming] def serialize(cms: CountMinSketch): Array[Byte] = {
+  private def serialize(cms: CountMinSketch): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     cms.writeTo(out)
     out.toByteArray
   }
 
-  /** Fold one group's batch into its sketch + candidate state; emit the
-    * group's current top-k (rank 1 = heaviest).
+  /** Sketch-plus-candidates processor on `transformWithState`; k/eps/
+    * confidence fixed at wiring. The sketch and the candidate set are two
+    * independently named stores — the serialized CMS in a
+    * `ValueState[Array[Byte]]` ("cms") and the top-k candidate ids in a
+    * `ListState[Long]` ("candidates") — each evolvable (or TTL-able) on
+    * its own.
     */
-  def updateHitters(k: Int, eps: Double, confidence: Double)(
-      group: String,
-      obs: Iterator[Obs],
-      state: GroupState[HHState]): Iterator[HHOut] = {
-    val prior = state.getOption
-    val cms = prior.map(s => deserialize(s.sketch))
-      .getOrElse(newSketch(eps, confidence))
-    val batchItems = scala.collection.mutable.LinkedHashSet.empty[Long]
-    obs.foreach { o =>
-      cms.addLong(o.item)
-      batchItems += o.item
+  class HitterProcessor(k: Int, eps: Double, confidence: Double)
+      extends StatefulProcessor[String, Obs, HHOut] {
+    @transient private var sketch: ValueState[Array[Byte]] = _
+    @transient private var candidates: ListState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      sketch = getHandle.getValueState[Array[Byte]](
+        "cms", Encoders.BINARY, TTLConfig.NONE)
+      candidates = getHandle.getListState[Long](
+        "candidates", Encoders.scalaLong, TTLConfig.NONE)
     }
-    val candidates = (prior.map(_.candidates).getOrElse(Seq.empty) ++ batchItems)
-      .distinct
-      .map(item => item -> cms.estimateCount(item))
-      .sortBy { case (item, est) => (-est, item) }
-      .take(k)
-    state.update(HHState(serialize(cms), candidates.map(_._1)))
-    candidates.iterator.zipWithIndex.map { case ((item, est), i) =>
-      HHOut(group, item, est, i + 1)
+
+    /** Fold one group's batch into its sketch + candidate state; emit the
+      * group's current top-k (rank 1 = heaviest).
+      */
+    override def handleInputRows(group: String, obs: Iterator[Obs],
+        timerValues: TimerValues): Iterator[HHOut] = {
+      val cms =
+        if (sketch.exists()) deserialize(sketch.get())
+        else newSketch(eps, confidence)
+      val batchItems = scala.collection.mutable.LinkedHashSet.empty[Long]
+      obs.foreach { o =>
+        cms.addLong(o.item)
+        batchItems += o.item
+      }
+      // incumbents ++ batch ids, re-estimated against the updated sketch,
+      // top-k by (-est, id)
+      val top = (candidates.get().toSeq ++ batchItems)
+        .distinct
+        .map(item => item -> cms.estimateCount(item))
+        .sortBy { case (item, est) => (-est, item) }
+        .take(k)
+      sketch.update(serialize(cms))
+      candidates.clear()
+      candidates.appendList(top.map(_._1).toArray)
+      top.iterator.zipWithIndex.map { case ((item, est), i) =>
+        HHOut(group, item, est, i + 1)
+      }
     }
   }
 
-  /** Wire the updater over a (possibly streaming) typed observation
-    * Dataset. No timeout: the sketch IS the durable frequency ledger.
+  /** Wire the processor over a (possibly streaming) typed observation
+    * Dataset. No timers: the sketch IS the durable frequency ledger.
+    * Requires [[RequiredStateStoreProvider]].
     */
   def hitters(spark: SparkSession, obs: Dataset[Obs], k: Int = 3,
       eps: Double = 0.001, confidence: Double = 0.99): Dataset[HHOut] = {
     import spark.implicits._
+    startStateStoreCoordinator(spark)
     obs
       .groupByKey(_.group)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        updateHitters(k, eps, confidence))
+      .transformWithState(
+        new HitterProcessor(k, eps, confidence), TimeMode.None(), OutputMode.Append())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming per-source admission quota — the streaming twin of the batch
   * per-source document cap (`Relational.capPerGroup`, t14): admit at most
@@ -30,9 +30,10 @@ object QuotaStream extends Serializable {
   final case class Admission(doc_id: Long, source: String, admitted: Boolean,
       admitted_so_far: Long)
 
-  /** Fold one source's new docs against its running quota count. Emits an
-    * admit/reject row per doc; `admitted_so_far` carries the post-decision
-    * count so downstream can see quota pressure without re-aggregating.
+  /** Per-source quota ledger on `transformWithState`: one named long
+    * ("admitted") per key, individually evolvable. Emits an admit/reject
+    * row per doc; `admitted_so_far` carries the post-decision count so
+    * downstream can see quota pressure without re-aggregating.
     *
     * MEMORY: the deterministic sort materializes ONE source's share of ONE
     * micro-batch on the executor (`docs.toSeq`) — and the hot source this
@@ -42,30 +43,40 @@ object QuotaStream extends Serializable {
     * slice fits in executor heap; when strict replay-determinism isn't
     * required, admit in iterator order instead and the fold is O(1).
     */
-  def updateQuota(maxDocs: Long)(
-      source: String,
-      docs: Iterator[Doc],
-      state: GroupState[Long]): Iterator[Admission] = {
-    var admitted = state.getOption.getOrElse(0L)
-    val out = docs.toSeq.sortBy(_.doc_id).map { d =>
-      val admit = admitted < maxDocs
-      if (admit) admitted += 1
-      Admission(d.doc_id, source, admit, admitted)
+  class QuotaProcessor(maxDocs: Long)
+      extends StatefulProcessor[String, Doc, Admission] {
+    @transient private var admitted: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      admitted = getHandle.getValueState[Long](
+        "admitted", Encoders.scalaLong, TTLConfig.NONE)
+
+    override def handleInputRows(source: String, docs: Iterator[Doc],
+        timerValues: TimerValues): Iterator[Admission] = {
+      var n = if (admitted.exists()) admitted.get() else 0L
+      // sort the batch's candidates so a replayed micro-batch admits
+      // identically
+      val out = docs.toSeq.sortBy(_.doc_id).map { d =>
+        val admit = n < maxDocs
+        if (admit) n += 1
+        Admission(d.doc_id, source, admit, n)
+      }
+      admitted.update(n)
+      out.iterator
     }
-    state.update(admitted)
-    out.iterator
   }
 
-  /** Wire the updater over a (possibly streaming) typed doc Dataset. No
-    * timeout: a source's one-long state is the durable quota ledger.
+  /** Wire the processor over a (possibly streaming) typed doc Dataset. No
+    * timers: a source's one-long state is the durable quota ledger.
+    * Requires [[RequiredStateStoreProvider]].
     */
   def admissions(spark: SparkSession, docs: Dataset[Doc],
       maxDocs: Long): Dataset[Admission] = {
     import spark.implicits._
+    startStateStoreCoordinator(spark)
     docs
       .groupByKey(_.source)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        updateQuota(maxDocs))
+      .transformWithState(
+        new QuotaProcessor(maxDocs), TimeMode.None(), OutputMode.Append())
   }
 }

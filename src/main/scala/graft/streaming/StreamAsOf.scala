@@ -26,12 +26,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * row-for-row (StreamAsOfSpec pins parity against q76's shape). A right
   * row older than the buffered one is ignored outright: backward as-of
   * only ever needs the newest right at-or-before each left, and the
-  * buffer is already newer for every future left.
+  * buffer is already newer for every future left. Requires
+  * [[RequiredStateStoreProvider]].
   */
 object StreamAsOf extends Serializable {
-
-  /** `transformWithState` only runs on RocksDB-backed state. */
-  val RequiredStateStoreProvider: String = QuotaStreamV2.RequiredStateStoreProvider
 
   /** One input tick — both sides union into a single keyed stream
     * (`is_right = true` for the reference side).

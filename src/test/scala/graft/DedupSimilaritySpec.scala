@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.similarity.Similarity
@@ -313,9 +314,11 @@ class DedupSimilaritySpec extends SparkSpec {
       (2L, shared + " BBBB_other_suffix_123"),
       (3L, "totally unique text with no repeats whatsoever here"))
       .toDF("doc_id", "text")
-    val got = Dedup.exactSubstrSpans(docs, minLen = 20).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    def spans(df: DataFrame, textCol: String) =
+      Dedup.exactSubstrSpans(df, minLen = 20, textCol = textCol).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    val got = spans(docs, "text")
     assert(!got.contains(3L)) // no duplicated window → no rows
     // NOTE: "abcdefghij"*6 repeats internally with period 10, so within
     // ONE doc the 20-char windows starting 10 apart are also equal — the
@@ -323,6 +326,9 @@ class DedupSimilaritySpec extends SparkSpec {
     // doc 1: run occupies positions 24..83; doc 2: positions 1..60.
     assert(got(1L) == ((1L, 24L, 83L, 60L)))
     assert(got(2L) == ((1L, 1L, 60L, 60L)))
+    // the text column is referenced as a column, never spliced into SQL
+    // text: a name that needs quoting yields the same spans
+    assert(spans(docs.withColumnRenamed("text", "body text"), "body text") == got)
   }
 
   test("archiveScreen: exact copies flag exact_dup, near-dups verify by " +

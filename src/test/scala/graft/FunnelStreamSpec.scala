@@ -7,22 +7,29 @@ import graft.streaming.FunnelStream.{Event, FunnelOut}
 
 class FunnelStreamSpec extends SparkSpec {
 
-  private def run(dir: String, timeoutMs: Long = 1000L): Seq[FunnelOut] = {
-    val s = spark
-    import s.implicits._
-    val stream = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-      .parquet(dir).as[Event]
-    val name = s"funnel_out_${System.nanoTime()}"
-    val q = FunnelStream.funnel(spark, stream, timeoutMs).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    q.stop()
-    spark.table(name).as[FunnelOut].collect().toSeq
-  }
+  /** Processing-time funnel over `dir`, drained until `expectInput` events
+    * have committed and the sink holds `expectRows` rows (timer expiries
+    * included). `filesPerTrigger` = 1 makes each file its own micro-batch.
+    */
+  private def run(dir: String, expectInput: Long, expectRows: Long,
+      timeoutMs: Long = 1000L, filesPerTrigger: Int = Int.MaxValue): Seq[FunnelOut] =
+    withRocksDb {
+      val s = spark
+      import s.implicits._
+      val stream = spark.readStream
+        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+        .parquet(dir).as[Event]
+      val name = s"funnel_out_${System.nanoTime()}"
+      val q = FunnelStream.funnel(spark, stream, timeoutMs).writeStream
+        .format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      drainThenStop(q, expectInput, expectRows,
+        () => spark.table(name).count())
+      spark.table(name).as[FunnelOut].collect().toSeq
+    }
 
   test("funnel advances strictly ordered stages, one emission per advance") {
     val s = spark
@@ -40,7 +47,7 @@ class FunnelStreamSpec extends SparkSpec {
       Event(2L, 100L, 6L, "click"),
       Event(2L, 200L, 7L, "purchase")
     ).toDS().coalesce(1).write.parquet(dir)
-    val got = run(dir)
+    val got = run(dir, expectInput = 7L, expectRows = 3L)
     assert(got.filter(_.user_id == 2L).isEmpty,
       "stage order is strict: no view → no funnel entry")
     val u1 = got.filter(_.user_id == 1L).sortBy(_.stage)
@@ -55,7 +62,7 @@ class FunnelStreamSpec extends SparkSpec {
     val dir = Files.createTempDirectory("funnelTo").toString + "/ev"
     Seq(Event(3L, 100L, 1L, "view"), Event(3L, 200L, 2L, "click"))
       .toDS().coalesce(1).write.parquet(dir)
-    val got = run(dir) // AvailableNow flushes the timed-out state at the end
+    val got = run(dir, expectInput = 2L, expectRows = 3L) // 2 advances + the timer expiry row
     assert(got.exists(o => o.stage == 2 && o.closed && !o.completed &&
       o.purchase_us == -1L), s"expected an expiry row, got $got")
   }
@@ -65,7 +72,9 @@ class FunnelStreamSpec extends SparkSpec {
     import s.implicits._
     val base = Files.createTempDirectory("funnelCp").toString
     val dir = s"$base/ev"; val cp = s"$base/cp"; val out = s"$base/out"
-    def run(): Unit = {
+    def outRows(): Long =
+      try spark.read.parquet(out).count() catch { case _: Exception => 0L }
+    def runCp(expectInput: Long, expectRows: Long): Unit = withRocksDb {
       // parquet sink: memory sink can't recover from a checkpoint, and
       // checkpoint recovery is exactly what this spec exercises
       val stream = spark.readStream
@@ -78,17 +87,17 @@ class FunnelStreamSpec extends SparkSpec {
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000); q.stop()
+      drainThenStop(q, expectInput, expectRows, outRows _)
     }
     // run 1: the user only views
     Seq(Event(7L, 100L, 1L, "view"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    run()
+    runCp(expectInput = 1L, expectRows = 1L)
     // run 2 (fresh query, same checkpoint): click+purchase must gate on
-    // the view recovered FROM STATE, not from reprocessed input
+    // the view recovered FROM the named "view" store, not reprocessed input
     Seq(Event(7L, 200L, 2L, "click"), Event(7L, 300L, 3L, "purchase"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    run()
+    runCp(expectInput = 2L, expectRows = 3L)
     val got = spark.read.parquet(out).as[FunnelOut].collect().toSeq
       .filter(_.user_id == 7L)
     assert(got.map(_.stage).sorted == Seq(1, 2, 3),
@@ -144,19 +153,11 @@ class FunnelStreamSpec extends SparkSpec {
     assert(u1.last ==
       FunnelOut(1L, 3, 1000000L, 2000000L, 3000000L,
         completed = true, closed = true))
-    // the processing-time variant on the SAME input provably cannot: it
-    // rejected the premature purchase on arrival and forgot it
-    val name = s"funnel_pt_${System.nanoTime()}"
-    val stream = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir).as[Event]
-    val q = FunnelStream.funnel(spark, stream, timeoutMs = 3600000L)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val pt = spark.table(name).as[FunnelOut].collect().toSeq
-      .filter(_.user_id == 1L)
+    // the processing-time variant on the SAME batches provably cannot: it
+    // rejected the premature purchase on arrival and forgot it (user 1
+    // reaches view and click, user 999 view and click: 4 rows)
+    val pt = run(dir, expectInput = 5L, expectRows = 4L,
+      timeoutMs = 3600000L, filesPerTrigger = 1).filter(_.user_id == 1L)
     assert(pt.map(_.stage).max == 2 && !pt.exists(_.completed),
       s"processing-time variant should stall at stage 2, got $pt")
   }
@@ -190,19 +191,8 @@ class FunnelStreamSpec extends SparkSpec {
     Thread.sleep(200) // file source orders batches by modTime
     Seq(Event(4L, 200L, 2L, "click"), Event(4L, 300L, 3L, "purchase"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    val stream = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir).as[Event]
-    val q = FunnelStream.funnel(spark, stream, 1000L).writeStream
-      .format("memory").queryName("funnel_mb")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    q.stop()
-    val got = spark.table("funnel_mb").as[FunnelOut].collect().toSeq
-      .filter(_.user_id == 4L)
+    val got = run(dir, expectInput = 3L, expectRows = 3L,
+      timeoutMs = 3600000L, filesPerTrigger = 1).filter(_.user_id == 4L)
     assert(got.map(_.stage).sorted == Seq(1, 2, 3))
     assert(got.exists(o => o.stage == 3 && o.completed))
   }

@@ -2,82 +2,76 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{FunnelStream, FunnelStreamV2}
+import graft.streaming.FunnelStream
 import graft.streaming.FunnelStream.{Event, FunnelOut}
 
-/** The transformWithState twin of FunnelStream.funnel: same strict stage
-  * gating and one-emission-per-advance, with each stage's first-touch
-  * timestamp in its own named store and the idle expiry as an explicit
-  * per-key timer.
+/** The processing-time funnel beyond FunnelStreamSpec's single streaming
+  * run: its batch Dataset face, per-key timer isolation, and each named
+  * store recovered through two checkpointed restarts. Suite and test names
+  * date from when the processor had a `flatMapGroupsWithState` twin (V1);
+  * the "V1 semantics" check pins the rows that twin produced on a batch.
   */
 class FunnelStreamV2Spec extends SparkSpec {
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[T](f: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, FunnelStreamV2.RequiredStateStoreProvider)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
-  private def run(dir: String, expectInput: Long, expectRows: Long,
-      timeoutMs: Long = 1000L): Seq[FunnelOut] =
-    withRocksDb {
-      val s = spark
-      import s.implicits._
-      val stream = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-        .parquet(dir).as[Event]
-      val name = s"funnel_v2_${System.nanoTime()}"
-      val q = FunnelStreamV2.funnel(spark, stream, timeoutMs).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drainThenStop(q, expectInput, expectRows,
-        () => spark.table(name).count())
-      spark.table(name).as[FunnelOut].collect().toSeq
-    }
 
   test("V2 funnel matches V1 semantics on the same batch") {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("funnelV2").toString + "/ev"
-    val events = Seq(
+    Seq(
       Event(1L, 100L, 1L, "view"),
       Event(1L, 50L, 2L, "click"),   // before first view → not stage 2
       Event(1L, 200L, 3L, "view"),   // duplicate stage → ignored
       Event(1L, 300L, 4L, "click"),
       Event(1L, 400L, 5L, "purchase"),
       Event(2L, 100L, 6L, "click"),  // no view → never enters
-      Event(2L, 200L, 7L, "purchase"))
-    events.toDS().coalesce(1).write.parquet(dir)
-    val got = run(dir, expectInput = 7L, expectRows = 3L)
-    assert(got.filter(_.user_id == 2L).isEmpty,
-      "stage order is strict: no view → no funnel entry")
-    val u1 = got.filter(_.user_id == 1L).sortBy(_.stage)
-    assert(u1.map(_.stage) == Seq(1, 2, 3), s"one emission per advance: $u1")
-    assert(u1.last ==
-      FunnelOut(1L, 3, 100L, 300L, 400L, completed = true, closed = true))
-    // literal parity with the V1 operator on identical input (batch mode)
-    val v1 = FunnelStream.funnel(spark,
-      spark.read.parquet(dir).as[Event], timeoutMs = 1000L).collect().toSet
-    assert(got.toSet == v1, "V2 diverged from V1 on the same input")
+      Event(2L, 200L, 7L, "purchase"),
+      Event(3L, 100L, 8L, "view"))   // open at end of batch → no timer row
+      .toDS().coalesce(1).write.parquet(dir)
+    // the batch face: no timer fires, so an open funnel emits only its
+    // advances — the rows the V1 operator gave on this batch
+    val got = withRocksDb {
+      FunnelStream.funnel(spark, spark.read.parquet(dir).as[Event],
+        timeoutMs = 1000L).collect().toSet
+    }
+    assert(got == Set(
+      FunnelOut(1L, 1, 100L, -1L, -1L, completed = false, closed = false),
+      FunnelOut(1L, 2, 100L, 300L, -1L, completed = false, closed = false),
+      FunnelOut(1L, 3, 100L, 300L, 400L, completed = true, closed = true),
+      FunnelOut(3L, 1, 100L, -1L, -1L, completed = false, closed = false)),
+      got.toString)
   }
 
   test("V2 abandoned funnels expire via the per-key timer with completed=false") {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("funnelV2To").toString + "/ev"
-    Seq(Event(3L, 100L, 1L, "view"), Event(3L, 200L, 2L, "click"))
+    // user 3 abandons after the click; user 4 converts in the same batch,
+    // which must clear ITS timer without touching user 3's
+    Seq(Event(3L, 100L, 1L, "view"), Event(3L, 200L, 2L, "click"),
+      Event(4L, 100L, 3L, "view"), Event(4L, 200L, 4L, "click"),
+      Event(4L, 300L, 5L, "purchase"))
       .toDS().coalesce(1).write.parquet(dir)
-    val got = run(dir, expectInput = 2L, expectRows = 3L) // 2 advances + the timer expiry row
-    assert(got.exists(o => o.stage == 2 && o.closed && !o.completed &&
-      o.purchase_us == -1L), s"expected an expiry row, got $got")
+    val got = withRocksDb {
+      val stream = spark.readStream
+        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
+        .parquet(dir).as[Event]
+      val name = s"funnel_v2_${System.nanoTime()}"
+      val q = FunnelStream.funnel(spark, stream, timeoutMs = 1000L).writeStream
+        .format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      // 2 + 3 advances and user 3's expiry row; both users' timers were
+      // registered by the same batch, so a stray expiry for user 4 would
+      // land in the same commit as user 3's
+      drainThenStop(q, expectInput = 5L, expectRows = 6L,
+        () => spark.table(name).count())
+      spark.table(name).as[FunnelOut].collect().toSeq
+    }
+    assert(got.filter(o => o.closed && !o.completed) ==
+      Seq(FunnelOut(3L, 2, 100L, 200L, -1L, completed = false, closed = true)),
+      s"exactly one expiry row, for the abandoned user: $got")
+    assert(got.filter(_.user_id == 4L).map(_.stage).sorted == Seq(1, 2, 3))
   }
 
   test("V2 funnel state survives a checkpointed RESTART: stages chain across runs") {
@@ -91,7 +85,7 @@ class FunnelStreamV2Spec extends SparkSpec {
       val stream = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
         .parquet(dir).as[Event]
-      val q = FunnelStreamV2.funnel(spark, stream, timeoutMs = 3600000L)
+      val q = FunnelStream.funnel(spark, stream, timeoutMs = 3600000L)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", cp)
@@ -100,19 +94,23 @@ class FunnelStreamV2Spec extends SparkSpec {
         .start()
       drainThenStop(q, expectInput, expectRows, outRows _)
     }
-    Seq(Event(7L, 100L, 1L, "view"))
+    // one stage per run, so each named store is read back after a restart
+    Seq(Event(8L, 100L, 1L, "view"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
     runCp(expectInput = 1L, expectRows = 1L)
-    // run 2 (fresh query, same checkpoint): click+purchase must gate on
-    // the view recovered FROM the named "view" store, not reprocessed input
-    Seq(Event(7L, 200L, 2L, "click"), Event(7L, 300L, 3L, "purchase"))
+    // run 2: the click advances only if "view" came back from the checkpoint
+    Seq(Event(8L, 200L, 2L, "click"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    runCp(expectInput = 2L, expectRows = 3L)
-    val got = spark.read.parquet(out).as[FunnelOut].collect().toSeq
-      .filter(_.user_id == 7L)
-    assert(got.map(_.stage).sorted == Seq(1, 2, 3),
-      s"stages must chain across the restart, got $got")
-    assert(got.exists(o => o.stage == 3 && o.completed && o.view_us == 100L),
-      "the completed row must carry the pre-restart view timestamp from state")
+    runCp(expectInput = 1L, expectRows = 2L)
+    // run 3: the purchase completes only if "click" came back too
+    Seq(Event(8L, 300L, 3L, "purchase"))
+      .toDS().coalesce(1).write.mode("append").parquet(dir)
+    runCp(expectInput = 1L, expectRows = 3L)
+    val got = spark.read.parquet(out).as[FunnelOut].collect().toSet
+    assert(got == Set(
+      FunnelOut(8L, 1, 100L, -1L, -1L, completed = false, closed = false),
+      FunnelOut(8L, 2, 100L, 200L, -1L, completed = false, closed = false),
+      FunnelOut(8L, 3, 100L, 200L, 300L, completed = true, closed = true)),
+      s"stages must chain across both restarts, got $got")
   }
 }

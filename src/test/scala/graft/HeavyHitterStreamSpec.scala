@@ -7,7 +7,7 @@ import graft.streaming.HeavyHitterStream.{HHOut, Obs}
 
 class HeavyHitterStreamSpec extends SparkSpec {
 
-  private def run(dir: String, k: Int): Seq[HHOut] = {
+  private def run(dir: String, k: Int): Seq[HHOut] = withRocksDb {
     val s = spark
     import s.implicits._
     val stream = spark.readStream
@@ -50,7 +50,7 @@ class HeavyHitterStreamSpec extends SparkSpec {
     import s.implicits._
     val base = Files.createTempDirectory("hhCp").toString
     val dir = s"$base/obs"; val cp = s"$base/cp"; val out = s"$base/out"
-    def run(): Unit = {
+    def run(): Unit = withRocksDb {
       val stream = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Obs]].schema)
         .parquet(dir).as[Obs]

@@ -7,7 +7,7 @@ import graft.streaming.QuotaStream.{Admission, Doc}
 
 class QuotaStreamSpec extends SparkSpec {
 
-  private def run(dir: String, maxDocs: Long): Seq[Admission] = {
+  private def run(dir: String, maxDocs: Long): Seq[Admission] = withRocksDb {
     val s = spark
     import s.implicits._
     val stream = spark.readStream
@@ -49,7 +49,7 @@ class QuotaStreamSpec extends SparkSpec {
     import s.implicits._
     val base = Files.createTempDirectory("quotaCp").toString
     val dir = s"$base/docs"; val cp = s"$base/cp"; val out = s"$base/out"
-    def run(): Unit = {
+    def run(): Unit = withRocksDb {
       val stream = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Doc]].schema)
         .parquet(dir).as[Doc]

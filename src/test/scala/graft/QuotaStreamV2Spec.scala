@@ -2,27 +2,16 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{QuotaStream, QuotaStreamV2}
+import graft.streaming.QuotaStream
 import graft.streaming.QuotaStream.{Admission, Doc}
 
-/** The transformWithState twin must behave exactly like the
-  * flatMapGroupsWithState original: same deterministic admissions, same
-  * cross-restart ledger. Runs under the RocksDB state store provider the
-  * new operator requires, restoring the session's provider afterwards.
+/** The quota ledger beyond QuotaStreamSpec's streaming runs: its batch
+  * Dataset face, and per-source ledgers kept apart through two
+  * checkpointed restarts. Suite and test names date from when the
+  * processor had a `flatMapGroupsWithState` twin (V1); the "V1 semantics"
+  * check pins the rows that twin produced on a batch.
   */
 class QuotaStreamV2Spec extends SparkSpec {
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[T](f: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, QuotaStreamV2.RequiredStateStoreProvider)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
 
   test("V2 quota matches V1 semantics on the same batch") {
     val s = spark
@@ -32,28 +21,17 @@ class QuotaStreamV2Spec extends SparkSpec {
       Seq(Doc(10L, "cold"), Doc(11L, "cold")))
       .toDS().coalesce(1).write.parquet(dir)
     val got = withRocksDb {
-      val stream = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Doc]].schema)
-        .parquet(dir).as[Doc]
-      val name = s"quota_v2_${System.nanoTime()}"
-      val q = QuotaStreamV2.admissions(spark, stream, maxDocs = 3L).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(60000); q.stop()
-      spark.table(name).as[Admission].collect().toSeq
+      QuotaStream.admissions(spark, spark.read.parquet(dir).as[Doc],
+        maxDocs = 3L).collect().toSet
     }
-    val hot = got.filter(_.source == "hot")
-    assert(hot.filter(_.admitted).map(_.doc_id).sorted == Seq(1L, 2L, 3L),
-      s"cap admits the LOWEST ids of the batch, got $hot")
-    assert(hot.filter(!_.admitted).map(_.doc_id).sorted == Seq(4L, 5L))
-    assert(hot.filter(!_.admitted).forall(_.admitted_so_far == 3L))
-    assert(got.filter(_.source == "cold").forall(_.admitted))
-    // literal parity with the V1 operator on identical input (batch mode)
-    val v1 = QuotaStream.admissions(spark,
-      spark.read.parquet(dir).as[Doc], maxDocs = 3L).collect().toSet
-    assert(got.toSet == v1, "V2 diverged from V1 on the same input")
+    assert(got == Set(
+      Admission(1L, "hot", admitted = true, 1L),
+      Admission(2L, "hot", admitted = true, 2L),
+      Admission(3L, "hot", admitted = true, 3L),
+      Admission(4L, "hot", admitted = false, 3L),
+      Admission(5L, "hot", admitted = false, 3L),
+      Admission(10L, "cold", admitted = true, 1L),
+      Admission(11L, "cold", admitted = true, 2L)), got.toString)
   }
 
   test("V2 quota ledger survives a checkpointed RESTART: cap spans runs") {
@@ -65,7 +43,7 @@ class QuotaStreamV2Spec extends SparkSpec {
       val stream = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Doc]].schema)
         .parquet(dir).as[Doc]
-      val q = QuotaStreamV2.admissions(spark, stream, maxDocs = 3L)
+      val q = QuotaStream.admissions(spark, stream, maxDocs = 3L)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", cp)
@@ -74,18 +52,30 @@ class QuotaStreamV2Spec extends SparkSpec {
         .start()
       q.awaitTermination(60000); q.stop()
     }
-    Seq(Doc(1L, "src"), Doc(2L, "src"))
+    // run 1: "a" takes 2 of its 3 slots, "b" 1 of its 3
+    Seq(Doc(1L, "a"), Doc(2L, "a"), Doc(10L, "b"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
     run()
-    // fresh query, same checkpoint: only ONE slot remains — the ledger
-    // must come from recovered RocksDB state, not reprocessed input
-    Seq(Doc(3L, "src"), Doc(4L, "src"))
+    // run 2: each source sees only ITS recovered count — "a" has one slot
+    // left, "b" two
+    Seq(Doc(3L, "a"), Doc(4L, "a"), Doc(11L, "b"), Doc(12L, "b"), Doc(13L, "b"))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
     run()
-    val got = spark.read.parquet(out).as[Admission].collect().toSeq
-      .filter(_.source == "src")
-    assert(got.filter(_.admitted).map(_.doc_id).sorted == Seq(1L, 2L, 3L),
-      s"exactly the cap admits across both runs, got $got")
-    assert(got.filter(!_.admitted).map(_.doc_id) == Seq(4L))
+    // run 3: the saturated ledger stays saturated after a second restart
+    Seq(Doc(5L, "a"))
+      .toDS().coalesce(1).write.mode("append").parquet(dir)
+    run()
+    val got = spark.read.parquet(out).as[Admission].collect().toSet
+    assert(got == Set(
+      Admission(1L, "a", admitted = true, 1L),
+      Admission(2L, "a", admitted = true, 2L),
+      Admission(10L, "b", admitted = true, 1L),
+      Admission(3L, "a", admitted = true, 3L),
+      Admission(4L, "a", admitted = false, 3L),
+      Admission(11L, "b", admitted = true, 2L),
+      Admission(12L, "b", admitted = true, 3L),
+      Admission(13L, "b", admitted = false, 3L),
+      Admission(5L, "a", admitted = false, 3L)),
+      s"each source's cap spans all three runs, got $got")
   }
 }

@@ -1,11 +1,37 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.ops.Relational
 import graft.streaming.SessionStream
-import graft.streaming.SessionStream.Event
+import graft.streaming.SessionStream.{Event, SessionOut}
 
 class SessionStreamSpec extends SparkSpec {
+
+  /** Processing-time sessionizer over `dir`, drained until `expectInput`
+    * events have committed and the sink holds `expectRows` sessions (timer
+    * flushes included).
+    */
+  private def run(dir: String, gapUs: Long, timeoutMs: Long,
+      expectInput: Long, expectRows: Long): Seq[SessionOut] =
+    withRocksDb {
+      val s = spark
+      import s.implicits._
+      val stream = spark.readStream
+        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
+        .parquet(dir).as[Event]
+      val name = s"sessions_out_${System.nanoTime()}"
+      val q = SessionStream.sessionize(spark, stream, gapUs, timeoutMs)
+        .writeStream
+        .format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      drainThenStop(q, expectInput, expectRows,
+        () => spark.table(name).count())
+      spark.table(name).as[SessionOut].collect().toSeq
+    }
 
   test("stateful streaming sessionization closes sessions on gap") {
     val s = spark
@@ -18,28 +44,17 @@ class SessionStreamSpec extends SparkSpec {
       Event(1L, 0L, 1L), Event(1L, 10L * 1000000L, 2L),
       Event(1L, 10L * 1000000L + 2L * minuteUs, 3L),
       Event(2L, 0L, 4L))
-      .toDS().write.parquet(dir)
-    val stream = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-      .parquet(dir).as[Event]
-    val out = SessionStream.sessionize(spark, stream, gapUs = minuteUs,
-      timeoutMs = 1000L) // short processing-time flush so the test observes it
-    val q = out.writeStream
-      .format("memory").queryName("sessions_out")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    q.stop()
+      .toDS().coalesce(1).write.parquet(dir)
+    // short processing-time flush so the test observes it
+    val emitted = run(dir, gapUs = minuteUs, timeoutMs = 1000L,
+      expectInput = 4L, expectRows = 3L)
     // user 1's first session closes on the observed 120s gap; the
-    // remaining live sessions close on the timeout flush at end of input.
+    // remaining live sessions close on the timer flush at end of input.
     // Sessions are keyed by (user_id, start_us) — stable across state loss.
-    val emitted = spark.table("sessions_out").as[SessionStream.SessionOut]
-      .collect().toSeq
     assert(emitted.map(e => (e.user_id, e.start_us, e.n_events, e.closed)).toSet ==
       Set((1L, 0L, 2L, true),
         (1L, 10L * 1000000L + 2L * minuteUs, 1L, true),
-        (2L, 0L, 1L, true)))
+        (2L, 0L, 1L, true)), emitted.toString)
     val first = emitted.find(e => e.user_id == 1L && e.start_us == 0L).get
     assert(first.end_us == 10L * 1000000L)
   }
@@ -49,48 +64,14 @@ class SessionStreamSpec extends SparkSpec {
     import s.implicits._
     val dir = Files.createTempDirectory("sessET").toString + "/events"
     val minuteUs = 60L * 1000000L
-    // user 1 finishes early; user 2's much later activity drives the
-    // watermark far past user 1's last-event+gap, closing 1's session
+    // user 1 finishes early (two events 10s apart, one session); user 2's
+    // activity an hour later drives the watermark far past user 1's
+    // last-event+gap, closing 1's session
     val base = 1000L * minuteUs // keep clear of the epoch==initial-watermark edge
     Seq(
       Event(1L, base, 1L), Event(1L, base + 10L * 1000000L, 2L),
       Event(2L, base + 60L * minuteUs, 3L), Event(2L, base + 61L * minuteUs, 4L))
       .toDS().coalesce(1).write.parquet(dir) // ONE file → one data batch
-    // one batch for all events: the post-batch watermark (61min − 1s)
-    // passes user 1's last-event+gap (70s) deterministically, and the
-    // engine schedules the extra timeout batch before AvailableNow stops
-    val stream = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-      .parquet(dir).as[Event]
-    val out = SessionStream.sessionizeEventTime(spark, stream,
-      gapUs = minuteUs, watermarkDelay = "1 second")
-    val q = out.writeStream
-      .format("memory").queryName("sessions_et")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    q.stop()
-    val emitted = spark.table("sessions_et").as[SessionStream.SessionOut]
-      .collect().toSeq.map(e => (e.user_id, e.start_us, e.n_events, e.closed))
-    // user 1's session must be closed by event-time timeout; user 2's may
-    // remain open state (no wall-clock involved) and thus unemitted
-    assert(emitted.contains((1L, base, 2L, true)), emitted.toString)
-  }
-
-  test("built-in session_window closes the same sessions the custom " +
-      "event-time updater does once the watermark passes the gap") {
-    val s = spark
-    import s.implicits._
-    val dir = Files.createTempDirectory("sessSW").toString + "/events"
-    val minuteUs = 60L * 1000000L
-    val base = 1000L * minuteUs
-    // user 1: two events 10s apart (one session), then user 2's activity
-    // an hour later drives the watermark past user 1's session-window end
-    Seq(
-      Event(1L, base, 1L), Event(1L, base + 10L * 1000000L, 2L),
-      Event(2L, base + 60L * minuteUs, 3L), Event(2L, base + 61L * minuteUs, 4L))
-      .toDS().coalesce(1).write.parquet(dir)
     val stream = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
       .parquet(dir).as[Event]
@@ -114,28 +95,32 @@ class SessionStreamSpec extends SparkSpec {
   test("batch semantics agree with the window-based sessionizer") {
     val s = spark
     import s.implicits._
+    val dir = Files.createTempDirectory("sessBatch").toString + "/events"
+    val gapUs = 1800L * 1000000L
+    // user 7: a gap-split pair of sessions; user 8: three events, the last
+    // exactly ON the gap (still the same session in both sessionizers);
+    // user 9: one event
     val events = Seq(
       Event(7L, 0L, 1L), Event(7L, 1000000L, 2L),
-      Event(7L, 1000000L + 3600L * 1000000L, 3L))
-      .toDS()
-    // run the stateful updater directly in batch form
-    val grouped = events.groupByKey(_.user_id)
-    val out = grouped.flatMapGroups { (uid, it) =>
-      // feed all events as one group with no timeout: emulate via the
-      // pure fold the streaming updater applies
-      val sorted = it.toSeq.sortBy(e => (e.ts_us, e.event_id))
-      var sessions = Vector.empty[(Long, Long)] // (seq, nEvents)
-      var seq = 0L; var n = 0L; var last = Long.MinValue
-      for (e <- sorted) {
-        if (last == Long.MinValue || e.ts_us - last > 1800L * 1000000L) {
-          if (n > 0) sessions :+= (seq, n)
-          seq += 1; n = 1L
-        } else n += 1
-        last = e.ts_us
-      }
-      if (n > 0) sessions :+= (seq, n)
-      sessions.map { case (sq, cnt) => (uid, sq, cnt) }.iterator
-    }.collect().toSet
-    assert(out == Set((7L, 1L, 2L), (7L, 2L, 1L)))
+      Event(7L, 1000000L + 3600L * 1000000L, 3L),
+      Event(8L, 5000000L, 4L), Event(8L, 6000000L, 5L),
+      Event(8L, 6000000L + gapUs, 6L),
+      Event(9L, 42L, 7L))
+    events.toDS().coalesce(1).write.parquet(dir)
+    // q17's batch sessionizer: (user, session) → count, start, end
+    val batch = Relational.sessionize(
+        spark.read.parquet(dir).withColumn("ts", timestamp_micros(col("ts_us"))),
+        "user_id", "ts", gapSeconds = gapUs / 1000000L, tieBreak = Seq("event_id"))
+      .groupBy("user_id", "session_id")
+      .agg(count(lit(1)), min(col("ts_us")), max(col("ts_us")))
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSet
+    // the streaming sessionizer over the same events, every session
+    // closed by the gap or the end-of-input timer flush
+    val streamed = run(dir, gapUs, timeoutMs = 1000L,
+        expectInput = events.size.toLong, expectRows = batch.size.toLong)
+      .map(o => (o.user_id, o.n_events, o.start_us, o.end_us)).toSet
+    assert(batch.size == 4, batch.toString)
+    assert(streamed == batch)
   }
 }

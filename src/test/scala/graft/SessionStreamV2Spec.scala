@@ -2,28 +2,16 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{SessionStream, SessionStreamV2}
+import graft.streaming.SessionStream
 import graft.streaming.SessionStream.{Event, SessionOut}
 
-/** The transformWithState twin of SessionStream.sessionize: same gap
-  * splitting, same (user_id, start_us) session identity, state recovered
-  * across checkpointed restarts — with the session fields in split named
-  * stores and the idle flush as an explicit per-key timer.
+/** The processing-time sessionizer beyond SessionStreamSpec's streaming
+  * runs: its batch Dataset face and an open session recovered from a
+  * checkpoint. Suite and test names date from when the processor had a
+  * `flatMapGroupsWithState` twin (V1); the "V1 semantics" check pins the
+  * rows that twin produced on a batch.
   */
 class SessionStreamV2Spec extends SparkSpec {
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[T](f: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, SessionStreamV2.RequiredStateStoreProvider)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
 
   test("V2 sessionization matches V1 semantics on the same batch") {
     val s = spark
@@ -35,29 +23,14 @@ class SessionStreamV2Spec extends SparkSpec {
       Event(1L, 10L * 1000000L + 2L * minuteUs, 3L),
       Event(2L, 0L, 4L))
       .toDS().coalesce(1).write.parquet(dir)
+    // the batch face: no idle flush fires, so only the session the 120s
+    // gap closed is emitted — the row the V1 operator gave on this batch
     val got = withRocksDb {
-      val stream = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-        .parquet(dir).as[Event]
-      val name = s"sessions_v2_${System.nanoTime()}"
-      val q = SessionStreamV2.sessionize(spark, stream, gapUs = minuteUs,
-          timeoutMs = 1000L).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      drainThenStop(q, expectInput = 4L, expectRows = 3L,
-        () => spark.table(name).count())
-      spark.table(name).as[SessionOut].collect().toSeq
+      SessionStream.sessionize(spark, spark.read.parquet(dir).as[Event],
+        gapUs = minuteUs, timeoutMs = 1000L).collect().toSeq
     }
-    // the V1 spec's exact expectation: gap-closed first session plus the
-    // idle-flushed live ones
-    assert(got.map(e => (e.user_id, e.start_us, e.n_events, e.closed)).toSet ==
-      Set((1L, 0L, 2L, true),
-        (1L, 10L * 1000000L + 2L * minuteUs, 1L, true),
-        (2L, 0L, 1L, true)), got.toString)
-    assert(got.find(e => e.user_id == 1L && e.start_us == 0L).get.end_us ==
-      10L * 1000000L)
+    assert(got == Seq(SessionOut(1L, 2L, 0L, 10L * 1000000L, closed = true)),
+      got.toString)
   }
 
   test("V2 open session survives a checkpointed RESTART and keeps counting") {
@@ -68,11 +41,11 @@ class SessionStreamV2Spec extends SparkSpec {
     val minuteUs = 60L * 1000000L
     def outRows(): Long =
       try spark.read.parquet(out).count() catch { case _: Exception => 0L }
-    def run(timeoutMs: Long, expectInput: Long, expectRows: Long): Unit = withRocksDb {
+    def runCp(timeoutMs: Long, expectInput: Long, expectRows: Long): Unit = withRocksDb {
       val stream = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
         .parquet(dir).as[Event]
-      val q = SessionStreamV2.sessionize(spark, stream, gapUs = minuteUs,
+      val q = SessionStream.sessionize(spark, stream, gapUs = minuteUs,
           timeoutMs = timeoutMs)
         .writeStream.format("parquet")
         .option("path", out)
@@ -85,13 +58,13 @@ class SessionStreamV2Spec extends SparkSpec {
     // run 1: two events, session stays open (long timeout)
     Seq(Event(5L, 0L, 1L), Event(5L, 1000000L, 2L))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    run(timeoutMs = 3600000L, expectInput = 2L, expectRows = 0L)
+    runCp(timeoutMs = 3600000L, expectInput = 2L, expectRows = 0L)
     // run 2 (fresh query, same checkpoint): one more in-gap event, then a
     // short timer so the flush emits — the session must count all THREE
     // events and keep the run-1 start, i.e. state came from the checkpoint
     Seq(Event(5L, 2000000L, 3L))
       .toDS().coalesce(1).write.mode("append").parquet(dir)
-    run(timeoutMs = 500L, expectInput = 1L, expectRows = 1L)
+    runCp(timeoutMs = 500L, expectInput = 1L, expectRows = 1L)
     val got = spark.read.parquet(out).as[SessionOut].collect().toSeq
     assert(got.map(e => (e.user_id, e.start_us, e.n_events, e.closed)) ==
       Seq((5L, 0L, 3L, true)),

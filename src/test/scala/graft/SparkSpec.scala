@@ -25,6 +25,22 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf0001 = "/root/testdata/sf0.001"
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Run `f` under the RocksDB state store provider that
+    * `transformWithState` operators require, restoring the session's
+    * provider afterwards.
+    */
+  def withRocksDb[T](f: => T): T = {
+    val prev = spark.conf.getOption(ProviderKey)
+    spark.conf.set(ProviderKey, graft.streaming.RequiredStateStoreProvider)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(ProviderKey, v)
+      case None => spark.conf.unset(ProviderKey)
+    }
+  }
+
   /** Drain a streaming query whose trigger cannot self-terminate — an
     * AvailableNow query in `transformWithState`'s ProcessingTime time-mode
     * keeps scheduling batches while any per-key timer is registered (that

@@ -13,18 +13,6 @@ import graft.streaming.StreamAsOf.{AsOfMatch, Tick}
   */
 class StreamAsOfSpec extends SparkSpec {
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[T](f: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, StreamAsOf.RequiredStateStoreProvider)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private def runAvailableNow(dir: String, toleranceUs: Long = -1L): Seq[AsOfMatch] =
     withRocksDb {
       val s = spark

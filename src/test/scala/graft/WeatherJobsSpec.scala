@@ -2,24 +2,26 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.OpenMeteoSource
-import graft.sources.OpenMeteoSource.City
+import graft.sources.OpenMeteoV2Source
 import graft.weather.{Weather, WeatherJobs}
 
 class WeatherJobsSpec extends SparkSpec {
 
-  test("OpenMeteoSource builds reference-shaped URLs and parses payloads") {
-    val url = OpenMeteoSource.forecastUrl(52.23, 21.01,
+  test("Open-Meteo forecast and archive URLs are reference-shaped") {
+    val url = OpenMeteoV2Source.forecastUrl(52.23, 21.01,
       "2025-10-31T10:00", "2025-10-31T12:00")
+    assert(url.startsWith("https://api.open-meteo.com/v1/forecast?"))
+    assert(url.contains("latitude=52.23&longitude=21.01"))
     assert(url.contains("hourly=temperature_2m,precipitation,wind_speed_10m"))
     assert(url.contains("timezone=Europe/Berlin"))
-    val payload = Weather.fixturePayloads.head._3
-    val fetched = OpenMeteoSource.fetch(spark,
-      Seq(City("Warsaw", 52.23, 21.01)), _ => "unused://", _ => payload)
-    assert(fetched.count() == 1)
-    val staged = Weather.clean(Weather.explodeHourly(fetched))
-    assert(staged.count() == 3)
-    assert(staged.filter(col("city") === "Warsaw").count() == 3)
+    assert(url.contains("start_hour=2025-10-31T10:00&end_hour=2025-10-31T12:00"))
+    val archive = OpenMeteoV2Source.archiveUrl(52.23, 21.01,
+      "2025-10-01", "2025-10-31")
+    assert(archive.startsWith("https://archive-api.open-meteo.com/v1/archive?"))
+    assert(archive.contains("latitude=52.23&longitude=21.01"))
+    assert(archive.contains("hourly=temperature_2m,precipitation,wind_speed_10m"))
+    assert(archive.contains("timezone=auto"))
+    assert(archive.contains("start_date=2025-10-01&end_date=2025-10-31"))
   }
 
   test("loadIncremental is incremental and idempotent (EP2)") {
