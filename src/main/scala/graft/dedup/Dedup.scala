@@ -326,10 +326,12 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     graft.functions.CharGramHash64.register(docs.sparkSession)
-    val t = docs.select(
-      col(idCol).as("id"),
-      expr(s"${graft.functions.CharGramHash64.FnName}(" +
-        s"$textCol, $n, xxhash64($blockCol))").as("toks"))
+    // caller column names are aliased before the SQL text references
+    // them, so a name that needs quoting (a space, a dot) still resolves
+    val t = docs.select(col(idCol).as("id"), col(textCol).as("txt"),
+        col(blockCol).as("blk"))
+      .select(col("id"), expr(s"${graft.functions.CharGramHash64.FnName}(" +
+        s"txt, $n, xxhash64(blk))").as("toks"))
       .withColumn("sz", size(col("toks")).cast("long"))
     prefixJoinVerify(t, threshold)
   }
@@ -869,9 +871,12 @@ object Dedup {
     // `aggregate(sequence(0,30), 0L, (acc, j) -> acc + if(size(filter(hs,
     // h -> (h div 2^j) % 2 = 1)) * 2 > size(hs), 2^j, 0))`, which walked
     // the token array once per bit in interpreted lambdas
+    // the text column is aliased before the SQL text references it, so a
+    // name that needs quoting (a space, a dot) still resolves
     docs
-      .select(col(idCol).as("id"),
-        expr(s"transform(filter(split(trim($textCol), '\\\\s+'), t -> t <> '')," +
+      .select(col(idCol).as("id"), col(textCol).as("txt"))
+      .select(col("id"),
+        expr(s"transform(filter(split(trim(txt), '\\\\s+'), t -> t <> '')," +
           s" t -> ($tokHash))").as("hs"))
       .select(col("id"),
         expr(s"${graft.functions.SimHashSig.FnName}(hs, 31)").as("simhash"))

@@ -67,30 +67,26 @@ object DriverListing {
       files: Seq[String]): Seq[FileStatus] = {
     if (files.isEmpty) return Nil // empty relation, like spark.read.parquet()
     val conf = spark.sessionState.newHadoopConf()
-    val headFs = new Path(files.head).getFileSystem(conf)
-    if (headFs.getScheme == "file") {
-      files.map(f => headFs.getFileStatus(new Path(f)))
-    } else {
-      val byDir = files.map(new Path(_)).groupBy(_.getParent)
-      val found = new java.util.HashMap[Path, FileStatus]()
-      byDir.foreach { case (dir, wanted) =>
-        val fs = dir.getFileSystem(conf)
-        val listed = fs.listStatus(dir)
-        val names = wanted.map(_.getName).toSet
-        listed.foreach { st =>
-          if (names(st.getPath.getName)) found.put(st.getPath, st)
+    val paths = files.map(new Path(_))
+    val found = new java.util.HashMap[Path, FileStatus]()
+    // each path takes the branch of ITS OWN filesystem — a list may mix
+    // schemes (a local file beside store paths)
+    val byFs = paths.groupBy(p => (p.toUri.getScheme, p.toUri.getAuthority))
+    byFs.values.foreach { group =>
+      val fs = group.head.getFileSystem(conf)
+      if (fs.getScheme == "file")
+        group.foreach(p => found.put(p, fs.getFileStatus(p)))
+      else group.groupBy(_.getParent).foreach { case (dir, wanted) =>
+        val listed = fs.listStatus(dir).map(st => st.getPath.getName -> st).toMap
+        wanted.foreach { p =>
+          found.put(p, listed.getOrElse(p.getName,
+            throw new java.io.FileNotFoundException(
+              s"DriverListing: manifest-listed file absent from its " +
+                s"directory listing: $p")))
         }
       }
-      files.map { f =>
-        val fs = new Path(f).getFileSystem(conf)
-        val q = fs.makeQualified(new Path(f))
-        val st = found.get(q)
-        if (st == null) throw new java.io.FileNotFoundException(
-          s"DriverListing: manifest-listed file absent from its " +
-            s"directory listing: $f")
-        st
-      }
     }
+    paths.map(found.get)
   }
 
   /** An [[InMemoryFileIndex]] over exactly `files`, built from batched

@@ -745,13 +745,11 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     val spellings = hist.values.flatten.map(_.toLowerCase).toSet
     val conf = LakeIO.conf
     val dataFs = new Path(location).getFileSystem(conf)
-    val history = WeatherLakeV2Sink.manifestHistory(location)
+    val log = WeatherLakeV2Sink.loadSnapshot(location)
     val candidates =
-      (history.flatMap(m => WeatherLakeV2Sink
-          .entryLinesByManifest(location, Seq(m)).flatMap(_._2))
-        .map(l => l.split('\t').head) ++
-        history.flatMap(m => WeatherLakeV2Sink
-          .morDeleteFilesAsOf(location, Seq(m)))
+      (log.names.flatMap(log.entryLines).map(WeatherLakeV2Sink.entryPath) ++
+        log.morDirectives(log.names).map(l => WeatherLakeV2Sink.entryPath(
+          l.stripPrefix(WeatherLakeV2Sink.MorDeletePrefix).trim))
           .filterNot(TypedLake.isPosDelete))
         .distinct.filter(f => dataFs.exists(new Path(f)))
     val anyOld = candidates.exists { f =>
@@ -1281,12 +1279,11 @@ object LakeCatalog {
           // and appends the staged entry lines, stats intact.
           val mainLines =
             if (morInline)
-              WeatherLakeV2Sink
-                .entryLinesByManifest(path, morContext.get._1)
-                .flatMap(_._2)
+              WeatherLakeV2Sink.snapshotOf(path, morContext.get._1)
+                .liveEntryLines
             else wapReadBranch match {
-              case Some(b) => WeatherLakeV2Sink.entryLinesByManifest(path,
-                WeatherLakeV2Sink.readBranchBase(path, b)).flatMap(_._2)
+              case Some(b) => WeatherLakeV2Sink.snapshotOf(path,
+                WeatherLakeV2Sink.readBranchBase(path, b)).liveEntryLines
               case None => WeatherLakeV2Sink.committedEntryLines(path)
             }
           val lines = mainLines ++ wapReadBranch.toSeq.flatMap(b =>
@@ -1382,9 +1379,9 @@ object LakeCatalog {
                 .RequiresDistributionAndOrdering {
             private val overwriting =
               truncateFirst || overwriteEq.isDefined || dynamicOverwrite
-            private val overwriteSnapshot: Seq[String] =
-              if (overwriting) WeatherLakeV2Sink.liveManifests(path)
-              else Seq.empty
+            private val overwriteSnapshot =
+              if (overwriting) Some(WeatherLakeV2Sink.loadSnapshot(path))
+              else None
             // bucketed tables CLUSTER the write by the bucket transform
             // (resolved through this catalog's own V2 bucket function)
             // with one task per bucket — each bucket lands in ONE file
@@ -1429,20 +1426,20 @@ object LakeCatalog {
                       // on first write — Iceberg wap.branch behavior)
                       WeatherLakeV2Sink.branchCommit(path, b, jobId,
                         entries, payload = Some(TypedLake.Payload))
-                    case None =>
-                      if (truncateFirst)
+                    case None => overwriteSnapshot match {
+                      case Some(snap) if truncateFirst =>
                         WeatherLakeV2Sink.publishCommit(path, "overwrite",
-                          snapshot = overwriteSnapshot,
-                          supersedes = overwriteSnapshot, lines = entries,
-                          payload = Some(TypedLake.Payload))
-                      else if (overwriteEq.isDefined || dynamicOverwrite)
-                        WeatherLakeV2Sink.commitPartitionOverwrite(path,
-                          overwriteSnapshot, entries, overwriteEq,
-                          dynamicOverwrite, payload = Some(TypedLake.Payload),
+                          snapshot = snap.live, supersedes = snap.live,
+                          lines = entries, payload = Some(TypedLake.Payload))
+                      case Some(snap) =>
+                        WeatherLakeV2Sink.commitPartitionOverwrite(snap,
+                          entries, overwriteEq, dynamicOverwrite,
+                          payload = Some(TypedLake.Payload),
                           decodeValue = org.apache.spark.sql.catalyst.catalog
                             .ExternalCatalogUtils.unescapePathName)
-                      else WeatherLakeV2Sink.writeManifest(path, jobId,
+                      case None => WeatherLakeV2Sink.writeManifest(path, jobId,
                         entries, payload = Some(TypedLake.Payload))
+                    }
                   }
                 }
                 override def abort(
@@ -2408,8 +2405,8 @@ object LakeCatalog {
       val consumed = start.asInstanceOf[WeatherLakeV2StreamSource.LakeOffset].consumed
       val fresh = end.asInstanceOf[WeatherLakeV2StreamSource.LakeOffset]
         .consumed -- consumed
-      if (fresh.nonEmpty &&
-          WeatherLakeV2Sink.morDirectivesOf(path, fresh.toSeq.sorted).nonEmpty)
+      val window = WeatherLakeV2Sink.snapshotOf(path, fresh.toSeq.sorted)
+      if (window.morDirectives(window.names).nonEmpty)
         throw new IllegalStateException(
           s"LakeCatalog: the stream over $path reached a commit carrying " +
             "merge-on-read delete files — an append-only stream cannot " +
@@ -3751,7 +3748,8 @@ object LakeCatalog {
           case "detail" =>
             // one row of table health — all O(committed files) driver
             // metadata (the same class as the manifest read itself)
-            val lines = WeatherLakeV2Sink.committedEntryLines(path)
+            val log = WeatherLakeV2Sink.loadSnapshot(path)
+            val lines = log.liveEntryLines
             val fs = new Path(path).getFileSystem(LakeIO.conf)
             val files = lines.map(WeatherLakeV2Sink.entryPath)
             val bytes = files.map(f =>
@@ -3764,9 +3762,8 @@ object LakeCatalog {
             // anti-join over mor_targeted_files until reconcile (or a
             // compaction of those directories) folds it back;
             // compact_deletes bounds the delete-file count itself
-            val liveDel = WeatherLakeV2Sink.committedMorDeleteFiles(path)
-            val delLines = WeatherLakeV2Sink.morDeleteLinesAsOf(path,
-              WeatherLakeV2Sink.liveManifests(path))
+            val delLines = log.liveMorDeleteLines
+            val liveDel = delLines.map(WeatherLakeV2Sink.entryPath)
             val targeted =
               if (delLines.isEmpty) 0
               else TypedLake.possiblyTargetedFiles(files, delLines).size
@@ -3782,9 +3779,7 @@ object LakeCatalog {
               })
             }).getOrElse(0)
             Array(InternalRow(UTF8String.fromString(path), files.size,
-              bytes, partitions,
-              WeatherLakeV2Sink.liveManifests(path).size,
-              WeatherLakeV2Sink.manifestNames(path).size, withStats,
+              bytes, partitions, log.live.size, log.names.size, withStats,
               liveDel.size,
               liveDel.count(TypedLake.isPosDelete), targeted,
               WeatherLakeV2Sink.tagNames(path).size,
@@ -3792,19 +3787,16 @@ object LakeCatalog {
           case "history" =>
             val fs = new Path(path).getFileSystem(LakeIO.conf)
             val mdir = new Path(path, WeatherLakeV2Sink.ManifestDir)
-            val live = WeatherLakeV2Sink.liveManifests(path).toSet
-            WeatherLakeV2Sink.manifestHistory(path).zipWithIndex.map {
-              case (n, i) =>
-                val mp = new Path(mdir, n)
-                val in = fs.open(mp)
-                val lines =
-                  try scala.io.Source.fromInputStream(in, "UTF-8")
-                    .getLines().toList
-                  finally in.close()
-                val op = WeatherLakeV2Sink.manifestOp(lines).getOrElse("append")
-                InternalRow(i, UTF8String.fromString(n),
-                  UTF8String.fromString(op),
-                  fs.getFileStatus(mp).getModificationTime, live(n))
+            val history = WeatherLakeV2Sink.manifestHistory(path)
+            val log = WeatherLakeV2Sink.loadSnapshot(path)
+            val live = log.live.toSet
+            history.zipWithIndex.map { case (n, i) =>
+              val op = WeatherLakeV2Sink.manifestOp(log.lines(n))
+                .getOrElse("append")
+              InternalRow(i, UTF8String.fromString(n),
+                UTF8String.fromString(op),
+                fs.getFileStatus(new Path(mdir, n)).getModificationTime,
+                live(n))
             }.toArray
         }
         val schema = resultSchema

@@ -43,17 +43,21 @@ object LakeIO {
   lazy val conf: Configuration = new Configuration()
 
   /** Create `f` for writing. Local scheme: java.nio, no chmod fork, no
-    * `.crc` sibling; `overwrite = false` keeps Hadoop's atomic
-    * fail-if-exists contract (`CREATE_NEW` is a single atomic open).
+    * `.crc` sibling (an overwrite deletes a stale one); `overwrite =
+    * false` keeps Hadoop's atomic fail-if-exists contract (`CREATE_NEW`
+    * is a single atomic open).
     */
   def newOutput(fs: FileSystem, f: Path, overwrite: Boolean): OutputStream =
     if (fs.getScheme == "file") {
       val p = Paths.get(f.toUri.getPath)
       if (p.getParent != null) Files.createDirectories(p.getParent)
-      if (overwrite)
+      if (overwrite) {
+        // a `.crc` sibling Hadoop's checksummed local filesystem wrote for
+        // the old bytes would fail every later read through it
+        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
         Files.newOutputStream(p, StandardOpenOption.CREATE,
           StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-      else
+      } else
         try Files.newOutputStream(p, StandardOpenOption.CREATE_NEW,
           StandardOpenOption.WRITE)
         catch {

@@ -54,7 +54,7 @@ import org.apache.spark.sql.types._
   * whole-line JSON parsing.
   */
 object TypedLake {
-  import WeatherLakeV2Sink.{FieldAcc, FieldStats, entryPath, lineStats, manifestJoinKey, partitionValues, statsToJson}
+  import WeatherLakeV2Sink.{FieldAcc, FieldStats, LakeSnapshot, entryPath, lineStats, loadSnapshot, manifestJoinKey, partitionValues, statsToJson}
 
   val Payload = "parquet"
 
@@ -412,13 +412,26 @@ object TypedLake {
       case None if partCols.isEmpty => aligned
       case None => aligned.repartition(partCols.map(col): _*)
     }
+    writeArranged(routed, basePath, op, schema, partCols, statsFields,
+      maxRecordsPerFile, bucketSpec)
+  }
+
+  /** Write `rows` (the table's columns, in order) as already arranged —
+    * one [[TypedTaskWriter]] per partition, no re-shuffle, so a sort
+    * within partitions survives into the rolled files — and return the
+    * entry lines.
+    */
+  private def writeArranged(rows: DataFrame, basePath: String, op: String,
+      schema: StructType, partCols: Seq[String], statsFields: Seq[String],
+      maxRecordsPerFile: Long,
+      bucketSpec: Option[(String, Int)] = None): Seq[String] = {
     val base = basePath
     val sch = schema
     val pc = partCols
     val sf = statsFields
     val mrpf = maxRecordsPerFile
     val bs = bucketSpec
-    routed.queryExecution.toRdd.mapPartitions { it =>
+    rows.queryExecution.toRdd.mapPartitions { it =>
       val w = new TypedTaskWriter(base, op, sch, pc, sf, mrpf, bs)
       try {
         it.foreach(w.write)
@@ -505,13 +518,12 @@ object TypedLake {
 
   def readCommittedTyped(spark: SparkSession, basePath: String,
       schema: StructType): DataFrame = {
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "readCommittedTyped")
     // ONE snapshot for files AND delete rows: resolving them separately
     // could mix a racing commit's data with the old delete set
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val files = WeatherLakeV2Sink.filesAsOf(basePath, snapshot)
-    val deleteLines = morDeleteLinesOf(basePath, snapshot)
-    readResolvedSplit(spark, basePath, schema, files, deleteLines)
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "readCommittedTyped")
+    readResolvedSplit(spark, basePath, schema,
+      snap.liveEntryLines.map(entryPath), snap.liveMorDeleteLines)
   }
 
   /** Append `df` as one manifest commit (the typed twin of the classic
@@ -787,19 +799,6 @@ object TypedLake {
       .collect().map(_.getString(0))
   }
 
-  /** The live mor-delete directive PAYLOAD lines (path + optional
-    * target-range stats) of a snapshot's manifests.
-    */
-  private def morDeleteLinesOf(basePath: String,
-      manifests: Seq[String]): Seq[String] =
-    WeatherLakeV2Sink.morDirectivesOf(basePath, manifests)
-      .map(_.stripPrefix(WeatherLakeV2Sink.MorDeletePrefix).trim)
-
-  /** The live mor-delete file paths of a snapshot's manifests. */
-  private def morDeleteFilesOf(basePath: String,
-      manifests: Seq[String]): Seq[String] =
-    morDeleteLinesOf(basePath, manifests).map(entryPath)
-
   /** Prune a delete-file ENTRY-LINE list to the files that can target
     * any of `dataFiles` — the delete-side skipping leg: delete files
     * carry min/max stats over [[MorTargetCol]] (written like any
@@ -990,53 +989,73 @@ object TypedLake {
       maxRecordsPerFile: Long = 0L,
       positionDeletes: Boolean = true,
       statsFields: Seq[String] = Nil): WeatherLakeV2Sink.DeleteStats = {
-    import org.apache.spark.sql.functions.coalesce
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "deleteTypedMor")
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
+    def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
+    rewriteMor(spark, basePath, "delete", schema, partCols, hit, prune,
+        positionDeletes, statsFields, maxRecordsPerFile, None)(_ => None)
+      .map { case (m, files) =>
+        WeatherLakeV2Sink.DeleteStats(m.perFile.length, files, m.count) }
+      .getOrElse(WeatherLakeV2Sink.DeleteStats(0, 0, 0L))
+  }
+
+  /** The mor DELETE/UPDATE core: ONE snapshot read; the predicate pass
+    * over the MOR-RESOLVED view (`matching` selects the rows the op
+    * replaces, under SQL NULL semantics); the matches' delete rows
+    * written in the chosen flavor, then `images(matches)` — the new
+    * images, if any — appended as data files; ONE directive commit
+    * superseding nothing. The predicate's own stats domain also prunes
+    * DELETE files: a delete file whose old images provably cannot match
+    * need not be opened or broadcast — sound because unsubtracted ghost
+    * rows never match either, and a mor op rewrites nothing. None when
+    * no row matched. Returns the matches and the files written.
+    */
+  private def rewriteMor(spark: SparkSession, basePath: String, op: String,
+      schema: StructType, partCols: Seq[String],
+      matching: DataFrame => Column,
+      prune: (Map[String, String], Map[String, FieldStats]) => Boolean,
+      positionDeletes: Boolean, statsFields: Seq[String],
+      maxRecordsPerFile: Long, bucketSpec: Option[(String, Int)])(
+      images: DataFrame => Option[DataFrame]):
+      Option[(WeatherLakeV2Sink.Matches, Int)] = {
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, s"${op}TypedMor")
     def inReadDomain(l: String): Boolean =
       prune(partitionValuesTyped(basePath, entryPath(l)), lineStats(l))
-    val candidates = committedLines.collect {
-      case l if inReadDomain(l) => entryPath(l)
-    }
-    if (candidates.isEmpty) return WeatherLakeV2Sink.DeleteStats(0, 0, 0L)
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
-    def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
-    // the predicate's own stats domain also prunes DELETE files: a
-    // delete file whose old images provably cannot match `hit` need not
-    // be opened or broadcast — sound here because unsubtracted ghost
-    // rows never match `hit` either, and a mor delete rewrites nothing
-    val cand = resolvedFramed(spark, basePath, schema, candidates,
-      liveDeleteLines, needPos = positionDeletes, lineKeep = inReadDomain)
-    val matches = cand.filter(hit(cand))
-    val perFile = matches.groupBy(col("__file"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    if (perFile.isEmpty) return WeatherLakeV2Sink.DeleteStats(0, 0, 0L)
-    val deletedRows = perFile.map(_._2).sum
-    val newDeleteFiles =
-      if (positionDeletes)
-        writeMorPosDeleteFiles(matches.select(
-          col("__file").as(MorTargetCol), col(PosFrameCol).as(MorPosCol)),
-          deletedRows, basePath, maxRecordsPerFile)
-      else writeMorDeleteFiles(matches.select(
-        col("__file").as(MorTargetCol) +:
-          schema.fieldNames.toSeq.map(col): _*),
-        deletedRows, basePath, schema, maxRecordsPerFile, statsFields)
-    // fileIdentityDependent: the delete rows target data-file PATHS, so
-    // a racing compaction/reconcile (which rewrites in-domain rows under
-    // new paths) must conflict — only identity-preserving maintenance
-    // (checkpoint/measure) is exempt
-    WeatherLakeV2Sink.publishCommit(basePath, "mordelete",
-      snapshot = snapshot, supersedes = Seq.empty,
-      lines = newDeleteFiles.map(l =>
+    snap.matchPass(inReadDomain, "__file",
+        resolvedFramed(spark, basePath, schema, _, snap.liveMorDeleteLines,
+          needPos = positionDeletes, lineKeep = inReadDomain), matching)
+      .map { m =>
+        val deleteFiles =
+          if (positionDeletes)
+            writeMorPosDeleteFiles(m.rows.select(
+              col("__file").as(MorTargetCol), col(PosFrameCol).as(MorPosCol)),
+              m.count, basePath, maxRecordsPerFile)
+          else writeMorDeleteFiles(m.rows.select(
+            col("__file").as(MorTargetCol) +:
+              schema.fieldNames.toSeq.map(col): _*),
+            m.count, basePath, schema, maxRecordsPerFile, statsFields)
+        val dataFiles = images(m.rows).toSeq.flatMap(writeTypedFrame(_,
+          basePath, s"mor$op", schema, partCols, statsFields,
+          maxRecordsPerFile, bucketSpec))
+        publishMor(snap, s"mor$op", dataFiles, deleteFiles, inReadDomain)
+        (m, dataFiles.size + deleteFiles.size)
+      }
+  }
+
+  /** Publish a mor commit: appended data lines plus `#mordelete`
+    * directives, superseding nothing. `fileIdentityDependent`: the delete
+    * rows target data-file PATHS, so a racing compaction/reconcile (which
+    * rewrites in-domain rows under new paths) must conflict — only
+    * identity-preserving maintenance (checkpoint/measure) is exempt.
+    */
+  private def publishMor(snap: LakeSnapshot, op: String,
+      dataLines: Seq[String], deleteLines: Seq[String],
+      inReadDomain: String => Boolean): Unit =
+    WeatherLakeV2Sink.publishCommit(snap.basePath, op,
+      snapshot = snap.live, supersedes = Seq.empty,
+      lines = dataLines ++ deleteLines.map(l =>
         s"${WeatherLakeV2Sink.MorDeletePrefix}$l"),
       readDomain = Some(inReadDomain), payload = Some(Payload),
       fileIdentityDependent = true)
-    WeatherLakeV2Sink.DeleteStats(perFile.length, newDeleteFiles.size,
-      deletedRows)
-  }
 
   /** MERGE-ON-READ MERGE — the CDC-rate upsert without rewrite
     * amplification (the reference's whole loader contract is an hourly
@@ -1061,92 +1080,26 @@ object TypedLake {
       maxRecordsPerFile: Long = 0L,
       positionDeletes: Boolean = true,
       bucketSpec: Option[(String, Int)] = None): WeatherLakeV2Sink.MergeStats = {
-    import org.apache.spark.sql.functions.{coalesce, when}
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "mergeTypedMor")
+    import org.apache.spark.sql.functions.when
+    val (snap, inReadDomain, touched) = mergeTouched(spark, basePath,
+      "mergeTypedMor", schema, partCols, batch, keyCols,
+      fullSync = actions.notMatchedBySourceDelete.isDefined)
     val names = schema.fieldNames.toSeq
-    require(keyCols.nonEmpty && keyCols.forall(names.contains),
-      s"TypedLake: merge key columns (${keyCols.mkString(", ")}) must be " +
-        s"table columns (${names.mkString(", ")})")
-    val fullSync = actions.notMatchedBySourceDelete.isDefined
-
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
-    val committed = committedLines.map(entryPath)
-
-    // ---- read domain / candidate pruning: exactly mergeTyped's rules
-    val partitionPrunable =
-      partCols.nonEmpty && partCols.forall(keyCols.contains) && !fullSync
-    val batchParts: Set[Seq[String]] =
-      if (!partitionPrunable) Set.empty
-      else batch.select(partCols.map(c =>
-          col(c).cast(StringType)).toSeq: _*)
-        .distinct().collect()
-        .map(r => partCols.indices.map(i => r.getString(i)).toSeq).toSet
-    def inReadDomain(line: String): Boolean =
-      if (!partitionPrunable) true
-      else {
-        val pv = partitionValuesTyped(basePath, entryPath(line))
-        val tuple = partCols.map(pv.get)
-        if (tuple.exists(_.isEmpty)) true
-        else batchParts(tuple.map(_.get))
-      }
-    val candidates = committed.filter(inReadDomain)
-
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
-    def resolved(files: Seq[String], needPos: Boolean): DataFrame =
-      resolvedFramed(spark, basePath, schema, files, liveDeleteLines,
-        needPos = needPos)
-    val batchKeys = batch.select(keyCols.map(col).toSeq: _*).distinct()
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else if (fullSync) candidates
-      else {
-        val cand = resolved(candidates, needPos = false)
-        cand.join(batchKeys, keyCols, "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq
-      }
 
     // ---- relational classification over ONE joined frame (tgt keeps
     // __file — and, for position deletes, __pos — so every old image
     // knows the (file, ordinal) its delete row targets)
-    val tgt = resolved(touched, needPos = positionDeletes)
-      .withColumn("__t", lit(true))
-    val src = batch
-      .select(keyCols.map(col) ++
-        batch.columns.toSeq.filterNot(keyCols.contains)
-          .map(n => col(n).as(srcCol(n))) :+
-        lit(true).as("__s"): _*)
-    val joined = tgt.join(src, keyCols, "full_outer")
-    def cond(c: Option[DataFrame => Column]): Column =
-      c.map(f => coalesce(f(joined), lit(false))).getOrElse(lit(true))
-    val matched = joined("__t").isNotNull && joined("__s").isNotNull
-    val sourceOnly = joined("__t").isNull
-    val targetOnly = joined("__s").isNull
+    val mj = new MergeJoin(resolvedFramed(spark, basePath, schema, touched,
+      snap.liveMorDeleteLines, needPos = positionDeletes), batch, keyCols,
+      actions)
+    import mj.{joined, matched, sourceOnly, targetOnly, updCond, insCond,
+      updatedValue, insertedValue}
 
     val matchedDel = actions.matchedDelete.map(c =>
       coalesce(c(joined), lit(false))).getOrElse(lit(false))
-    val updCond = cond(actions.matchedUpdateCond)
-    val insCond = cond(actions.insertCond)
     val nmbsDel = actions.notMatchedBySourceDelete.map(c =>
-      cond(Some(c.getOrElse(_ => lit(true))))).getOrElse(lit(false))
+      mj.cond(Some(c.getOrElse(_ => lit(true))))).getOrElse(lit(false))
 
-    def updatedValue(n: String): Column = actions.matchedUpdate match {
-      case None => joined(n)
-      case Some(None) =>
-        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
-      case Some(Some(assigns)) =>
-        assigns.toMap.get(n).map(_(joined)).getOrElse(joined(n))
-    }
-    def insertedValue(n: String): Column = actions.insert match {
-      case None => lit(null)
-      case Some(None) =>
-        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
-      case Some(Some(assigns)) =>
-        assigns.toMap.get(n).map(_(joined)).getOrElse(
-          if (keyCols.contains(n)) joined(n) else joined(srcCol(n)))
-    }
     // an UPDATE whose every column is unchanged neither deletes nor
     // appends (idempotent re-merges publish no churn; SQL-visible state
     // is identical, and CDF classifies by value either way)
@@ -1188,12 +1141,7 @@ object TypedLake {
       schema, partCols, statsFields, maxRecordsPerFile, bucketSpec)
     if (newDeleteFiles.isEmpty && newDataFiles.isEmpty)
       return WeatherLakeV2Sink.MergeStats(0, 0) // true no-op: no commit
-    WeatherLakeV2Sink.publishCommit(basePath, "mormerge",
-      snapshot = snapshot, supersedes = Seq.empty,
-      lines = newDataFiles ++ newDeleteFiles.map(l =>
-        s"${WeatherLakeV2Sink.MorDeletePrefix}$l"),
-      readDomain = Some(inReadDomain), payload = Some(Payload),
-      fileIdentityDependent = true) // see deleteTypedMor's publish note
+    publishMor(snap, "mormerge", newDataFiles, newDeleteFiles, inReadDomain)
     WeatherLakeV2Sink.MergeStats(perFile.length,
       newDataFiles.size + newDeleteFiles.size)
   }
@@ -1217,58 +1165,25 @@ object TypedLake {
       maxRecordsPerFile: Long = 0L,
       positionDeletes: Boolean = true,
       bucketSpec: Option[(String, Int)] = None): WeatherLakeV2Sink.UpdateStats = {
-    import org.apache.spark.sql.functions.coalesce
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "updateTypedMor")
     val names = schema.fieldNames.toSeq
     assignments.foreach { case (n, _) =>
       require(names.contains(n),
         s"TypedLake: UPDATE assigns unknown column '$n' (schema: " +
           s"${names.mkString(", ")})")
     }
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
-    def inReadDomain(l: String): Boolean =
-      prune(partitionValuesTyped(basePath, entryPath(l)), lineStats(l))
-    val candidates = committedLines.collect {
-      case l if inReadDomain(l) => entryPath(l)
-    }
-    if (candidates.isEmpty) return WeatherLakeV2Sink.UpdateStats(0, 0, 0L)
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
-    // see deleteTypedMor: the predicate domain prunes delete files too
-    val cand = resolvedFramed(spark, basePath, schema, candidates,
-      liveDeleteLines, needPos = positionDeletes, lineKeep = inReadDomain)
     val assigned = assignments.toMap
     def newVal(df: DataFrame)(n: String): Column =
       assigned.get(n).map(_(df)).getOrElse(df(n))
     def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
-    val changed = names.map(n => newVal(cand)(n) <=> cand(n))
+    def changed(df: DataFrame) = names.map(n => newVal(df)(n) <=> df(n))
       .reduce(_ && _).unary_!
-    val matches = cand.filter(hit(cand) && changed)
-    val perFile = matches.groupBy(col("__file"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    if (perFile.isEmpty) return WeatherLakeV2Sink.UpdateStats(0, 0, 0L)
-    val updatedRows = perFile.map(_._2).sum
-    val appendRows = matches.select(names.map(n =>
-      newVal(matches)(n).as(n)): _*)
-    val newDeleteFiles =
-      if (positionDeletes) writeMorPosDeleteFiles(matches.select(
-        col("__file").as(MorTargetCol), col(PosFrameCol).as(MorPosCol)),
-        updatedRows, basePath, maxRecordsPerFile)
-      else writeMorDeleteFiles(matches.select(
-        col("__file").as(MorTargetCol) +: names.map(col): _*),
-        updatedRows, basePath, schema, maxRecordsPerFile, statsFields)
-    val newDataFiles = writeTypedFrame(appendRows, basePath, "morupdate",
-      schema, partCols, statsFields, maxRecordsPerFile, bucketSpec)
-    WeatherLakeV2Sink.publishCommit(basePath, "morupdate",
-      snapshot = snapshot, supersedes = Seq.empty,
-      lines = newDataFiles ++ newDeleteFiles.map(l =>
-        s"${WeatherLakeV2Sink.MorDeletePrefix}$l"),
-      readDomain = Some(inReadDomain), payload = Some(Payload),
-      fileIdentityDependent = true)
-    WeatherLakeV2Sink.UpdateStats(perFile.length,
-      newDataFiles.size + newDeleteFiles.size, updatedRows)
+    rewriteMor(spark, basePath, "update", schema, partCols,
+        df => hit(df) && changed(df), prune, positionDeletes, statsFields,
+        maxRecordsPerFile, bucketSpec)(
+      rows => Some(rows.select(names.map(n => newVal(rows)(n).as(n)): _*)))
+      .map { case (m, files) =>
+        WeatherLakeV2Sink.UpdateStats(m.perFile.length, files, m.count) }
+      .getOrElse(WeatherLakeV2Sink.UpdateStats(0, 0, 0L))
   }
 
   /** RECONCILE: fold every live delete row back into clean data files —
@@ -1285,31 +1200,20 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
       bucketSpec: Option[(String, Int)] = None): Int = {
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "reconcileMor")
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val liveDeletes = morDeleteFilesOf(basePath, snapshot)
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "reconcileMor")
+    val liveDeletes = snap.liveMorDeleteLines.map(entryPath)
     if (liveDeletes.isEmpty) return 0
-    val committedSet = byManifest.flatMap(_._2).map(entryPath).toSet
+    val committedSet = snap.liveEntryLines.map(entryPath).toSet
     // targets still committed = the files to rewrite (bounded driver
     // metadata: distinct targets ≤ touched files) — both flavors
     val targets = morDeleteTargets(spark, schema, liveDeletes)
       .filter(committedSet).toSeq.sorted
-    val morManifests = snapshot.filter(n =>
-      WeatherLakeV2Sink.morDirectivesOf(basePath, Seq(n)).nonEmpty)
-    val targetSet = targets.toSet
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(l => targetSet(entryPath(l))) => n
-    }
-    val supersede = (touchedManifests ++ morManifests).distinct
-    // EVERY superseded manifest's untargeted DATA lines are re-listed —
-    // a mor-merge manifest is MIXED (appended files + directives): it is
-    // superseded for its directives, but its data files live on
-    val supersedeSet = supersede.toSet
-    val untouched = byManifest
-      .filter { case (n, _) => supersedeSet(n) }
-      .flatMap(_._2)
-      .filterNot(l => targetSet(entryPath(l)))
+    // EVERY directive-carrying manifest is superseded too, with its
+    // untargeted DATA lines re-listed — a mor-merge manifest is MIXED
+    // (appended files + directives): it is superseded for its
+    // directives, but its data files live on
+    val sup = snap.supersedeFiles(targets, also = snap.morManifests)
     val newFiles =
       if (targets.isEmpty) Seq.empty
       else {
@@ -1327,8 +1231,8 @@ object TypedLake {
     // delete rows this rewrite never applied (and whose targets it may
     // have just replaced) — loud conflict, never a silent resurrection.
     WeatherLakeV2Sink.publishCommit(basePath, "reconcile",
-      snapshot = snapshot, supersedes = supersede,
-      lines = untouched ++ newFiles,
+      snapshot = snap.live, supersedes = sup.manifests,
+      lines = sup.kept ++ newFiles,
       readDomain = Some(_ => false), payload = Some(Payload))
     targets.size
   }
@@ -1367,10 +1271,9 @@ object TypedLake {
     */
   def compactMorDeletes(spark: SparkSession, basePath: String,
       schema: StructType, maxRecordsPerFile: Long = 0L): (Int, Int) = {
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "compactMorDeletes")
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val liveDeleteFiles = morDeleteFilesOf(basePath, snapshot)
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "compactMorDeletes")
+    val liveDeleteFiles = snap.liveMorDeleteLines.map(entryPath)
     val (posFiles, eqFiles) = liveDeleteFiles.partition(isPosDelete)
     if (eqFiles.isEmpty && posFiles.size <= 1)
       return (liveDeleteFiles.size, liveDeleteFiles.size)
@@ -1379,7 +1282,7 @@ object TypedLake {
     // targets resolve against THIS snapshot's committed set; a data file
     // cannot leave it without a commit that either conflicts here
     // (supersede-liveness) or has already applied the deletions
-    val committedSet = byManifest.flatMap(_._2).map(entryPath).toSet
+    val committedSet = snap.liveEntryLines.map(entryPath).toSet
     val committedDf = committedSet.toSeq.toDF("__live_file")
     // live position rows pass through, dangling targets dropped
     val posRows =
@@ -1427,14 +1330,12 @@ object TypedLake {
           s"$basePath/$MorDeleteDir", "morpos", MorPosSchema, Seq.empty,
           Seq(MorTargetCol), maxRecordsPerFile)
     }
-    val directiveManifests = snapshot.filter(n =>
-      WeatherLakeV2Sink.morDirectivesOf(basePath, Seq(n)).nonEmpty)
-    val dSet = directiveManifests.toSet
-    val carried = byManifest
-      .filter { case (n, _) => dSet(n) }.flatMap(_._2)
+    // every directive-carrying manifest is superseded with its DATA lines
+    // re-listed verbatim; its directives are replaced, not carried
+    val sup = snap.supersede(_ => false, also = snap.morManifests)
     WeatherLakeV2Sink.publishCommit(basePath, "compactdel",
-      snapshot = snapshot, supersedes = directiveManifests,
-      lines = carried ++ newLines.map(l =>
+      snapshot = snap.live, supersedes = sup.manifests,
+      lines = sup.kept ++ newLines.map(l =>
         s"${WeatherLakeV2Sink.MorDeletePrefix}$l"),
       payload = Some(Payload))
     (liveDeleteFiles.size, newLines.size)
@@ -1460,52 +1361,50 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
       bucketSpec: Option[(String, Int)] = None): WeatherLakeV2Sink.DeleteStats = {
-    import org.apache.spark.sql.functions.{coalesce, count, not}
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "deleteTyped")
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
+    import org.apache.spark.sql.functions.not
+    rewriteMatchesTyped(spark, basePath, "delete", schema, partCols,
+        predicate, prune, statsFields, maxRecordsPerFile, bucketSpec)(
+      (tf, hit) => tf.filter(not(hit(tf))))
+      .map { case (m, newFiles) =>
+        WeatherLakeV2Sink.DeleteStats(m.touched.size, newFiles, m.count) }
+      .getOrElse(WeatherLakeV2Sink.DeleteStats(0, 0, 0L))
+  }
+
+  /** The typed copy-on-write DELETE/UPDATE core —
+    * [[WeatherLakeV2Sink]]'s classic one with the data legs on typed
+    * frames resolved through the snapshot's live delete rows
+    * (merge-on-read: already-deleted rows neither count nor survive):
+    * ONE snapshot read, the predicate pass, the touched files rewritten
+    * as `rewrite(frame, hit)`, ONE partially-superseding publish. A
+    * superseded MIXED manifest's mor directives ride along (their
+    * untouched targets still need them; touched-target directives
+    * dangle harmlessly). None when no row matched.
+    */
+  private def rewriteMatchesTyped(spark: SparkSession, basePath: String,
+      op: String, schema: StructType, partCols: Seq[String],
+      predicate: DataFrame => Column,
+      prune: (Map[String, String], Map[String, FieldStats]) => Boolean,
+      statsFields: Seq[String], maxRecordsPerFile: Long,
+      bucketSpec: Option[(String, Int)])(
+      rewrite: (DataFrame, DataFrame => Column) => DataFrame):
+      Option[(WeatherLakeV2Sink.Matches, Int)] = {
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, s"${op}Typed")
     def inReadDomain(l: String): Boolean =
       prune(partitionValuesTyped(basePath, entryPath(l)), lineStats(l))
-    val candidates = committedLines.collect {
-      case l if inReadDomain(l) => entryPath(l)
-    }
-    if (candidates.isEmpty) return WeatherLakeV2Sink.DeleteStats(0, 0, 0L)
-    // every data read resolves through the snapshot's live delete rows
-    // (merge-on-read): already-deleted rows neither count nor survive
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
     def resolved(files: Seq[String]): DataFrame =
-      resolvedFramed(spark, basePath, schema, files, liveDeleteLines)
+      resolvedFramed(spark, basePath, schema, files, snap.liveMorDeleteLines)
     def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
-    val cand = resolved(candidates)
-    val perFile = cand.filter(hit(cand))
-      .groupBy(col("__file")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val touched = perFile.map(_._1).toSeq
-    val deletedRows = perFile.map(_._2).sum
-    if (touched.isEmpty) return WeatherLakeV2Sink.DeleteStats(0, 0, 0L)
-    val touchedSet = touched.toSet
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
+    snap.matchPass(inReadDomain, "__file", resolved, hit).map { m =>
+      val sup = snap.supersedeFiles(m.touched)
+      val newFiles = writeTypedFrame(rewrite(resolved(m.touched), hit),
+        basePath, op, schema, partCols, statsFields, maxRecordsPerFile,
+        bucketSpec)
+      WeatherLakeV2Sink.publishCommit(basePath, op, snapshot = snap.live,
+        supersedes = sup.manifests, lines = sup.lines(newFiles),
+        readDomain = Some(inReadDomain), payload = Some(Payload))
+      (m, newFiles.size)
     }
-    val touchedManifestSet = touchedManifests.toSet
-    val untouched = byManifest
-      .filter { case (n, _) => touchedManifestSet(n) }
-      .flatMap(_._2)
-      .filterNot(l => touchedSet(entryPath(l)))
-    val tf = resolved(touched)
-    val survivors = tf.filter(not(hit(tf)))
-    val newFiles = writeTypedFrame(survivors, basePath, "delete", schema,
-      partCols, statsFields, maxRecordsPerFile, bucketSpec)
-    WeatherLakeV2Sink.publishCommit(basePath, "delete", snapshot = snapshot,
-      supersedes = touchedManifests,
-      // a superseded MIXED manifest's mor directives stay part of the
-      // view (their untouched targets still need them); touched-target
-      // directives dangle harmlessly
-      lines = untouched ++ newFiles ++
-        WeatherLakeV2Sink.morDirectivesOf(basePath, touchedManifests),
-      readDomain = Some(inReadDomain), payload = Some(Payload))
-    WeatherLakeV2Sink.DeleteStats(touched.size, newFiles.size, deletedRows)
   }
 
   // -----------------------------------------------------------------
@@ -1528,59 +1427,25 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
       bucketSpec: Option[(String, Int)] = None): WeatherLakeV2Sink.UpdateStats = {
-    import org.apache.spark.sql.functions.{coalesce, count, when}
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "updateTyped")
+    import org.apache.spark.sql.functions.when
     val names = schema.fieldNames.toSeq
     assignments.foreach { case (n, _) =>
       require(names.contains(n),
         s"TypedLake: UPDATE assigns unknown column '$n' (schema: " +
           s"${names.mkString(", ")})")
     }
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
-    def inReadDomain(l: String): Boolean =
-      prune(partitionValuesTyped(basePath, entryPath(l)), lineStats(l))
-    val candidates = committedLines.collect {
-      case l if inReadDomain(l) => entryPath(l)
-    }
-    if (candidates.isEmpty) return WeatherLakeV2Sink.UpdateStats(0, 0, 0L)
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
-    def resolved(files: Seq[String]): DataFrame =
-      resolvedFramed(spark, basePath, schema, files, liveDeleteLines)
-    def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
-    val cand = resolved(candidates)
-    val perFile = cand.filter(hit(cand))
-      .groupBy(col("__file")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val touched = perFile.map(_._1).toSeq
-    val updatedRows = perFile.map(_._2).sum
-    if (touched.isEmpty) return WeatherLakeV2Sink.UpdateStats(0, 0, 0L)
-    val touchedSet = touched.toSet
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
-    }
-    val touchedManifestSet = touchedManifests.toSet
-    val untouched = byManifest
-      .filter { case (n, _) => touchedManifestSet(n) }
-      .flatMap(_._2)
-      .filterNot(l => touchedSet(entryPath(l)))
-    val tf = resolved(touched)
     val assigned = assignments.toMap
-    val rewrite = tf.select(names.map { n =>
-      assigned.get(n) match {
-        case Some(a) => when(hit(tf), a(tf)).otherwise(tf(n)).as(n)
-        case None => tf(n)
-      }
-    }: _*)
-    val newFiles = writeTypedFrame(rewrite, basePath, "update", schema,
-      partCols, statsFields, maxRecordsPerFile, bucketSpec)
-    WeatherLakeV2Sink.publishCommit(basePath, "update", snapshot = snapshot,
-      supersedes = touchedManifests,
-      lines = untouched ++ newFiles ++
-        WeatherLakeV2Sink.morDirectivesOf(basePath, touchedManifests),
-      readDomain = Some(inReadDomain), payload = Some(Payload))
-    WeatherLakeV2Sink.UpdateStats(touched.size, newFiles.size, updatedRows)
+    rewriteMatchesTyped(spark, basePath, "update", schema, partCols,
+        predicate, prune, statsFields, maxRecordsPerFile, bucketSpec)(
+      (tf, hit) => tf.select(names.map { n =>
+        assigned.get(n) match {
+          case Some(a) => when(hit(tf), a(tf)).otherwise(tf(n)).as(n)
+          case None => tf(n)
+        }
+      }: _*))
+      .map { case (m, newFiles) =>
+        WeatherLakeV2Sink.UpdateStats(m.touched.size, newFiles, m.count) }
+      .getOrElse(WeatherLakeV2Sink.UpdateStats(0, 0, 0L))
   }
 
   // -----------------------------------------------------------------
@@ -1638,109 +1503,27 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
       bucketSpec: Option[(String, Int)] = None): WeatherLakeV2Sink.MergeStats = {
-    import org.apache.spark.sql.functions.{coalesce, when}
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "mergeTyped")
+    import org.apache.spark.sql.functions.when
+    val (snap, inReadDomain, touched) = mergeTouched(spark, basePath,
+      "mergeTyped", schema, partCols, batch, keyCols,
+      fullSync = actions.notMatchedBySourceDelete.isDefined)
     val names = schema.fieldNames.toSeq
-    require(keyCols.nonEmpty && keyCols.forall(names.contains),
-      s"TypedLake: merge key columns (${keyCols.mkString(", ")}) must be " +
-        s"table columns (${names.mkString(", ")})")
-    val dataCols = names.filterNot(keyCols.contains)
-    val fullSync = actions.notMatchedBySourceDelete.isDefined
-
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val committedLines = byManifest.flatMap(_._2)
-    val committed = committedLines.map(entryPath)
-
-    // ---- read domain / candidate pruning (driver, O(files) metadata)
-    val partitionPrunable =
-      partCols.nonEmpty && partCols.forall(keyCols.contains) && !fullSync
-    val batchParts: Set[Seq[String]] =
-      if (!partitionPrunable) Set.empty
-      else batch.select(partCols.map(c =>
-          col(c).cast(StringType)).toSeq: _*)
-        .distinct().collect()
-        .map(r => partCols.indices.map(i => r.getString(i)).toSeq).toSet
-    def inReadDomain(line: String): Boolean =
-      if (!partitionPrunable) true
-      else {
-        val pv = partitionValuesTyped(basePath, entryPath(line))
-        val tuple = partCols.map(pv.get)
-        if (tuple.exists(_.isEmpty)) true // can't rule out, fail open
-        else batchParts(tuple.map(_.get))
-      }
-    val candidates = committed.filter(inReadDomain)
-
-    // ---- one distributed pass: which candidate files are touched
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
-    def resolved(files: Seq[String]): DataFrame =
-      resolvedFramed(spark, basePath, schema, files, liveDeleteLines)
-    val batchKeys = batch.select(keyCols.map(col).toSeq: _*).distinct()
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else if (fullSync) candidates // full-sync rewrites its whole domain
-      else {
-        // no broadcast hint: the merge source can be arbitrarily large
-        // (CDC backfills), and a forced broadcast of its whole key set
-        // would OOM the driver — AQE elects broadcast when small
-        val cand = resolved(candidates)
-        cand.join(batchKeys, keyCols, "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq
-      }
-    val touchedSet = touched.toSet
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
-    }
-    val touchedManifestSet = touchedManifests.toSet
-    val untouched = byManifest
-      .filter { case (n, _) => touchedManifestSet(n) }
-      .flatMap(_._2)
-      .filterNot(l => touchedSet(entryPath(l)))
+    val sup = snap.supersedeFiles(touched)
 
     // ---- relational rewrite: target rows of touched files ⟗ batch
     // (MOR-resolved: a delete-vectored row must not present as matched —
     // its key has to INSERT, not update a ghost)
-    val tgt = resolved(touched).drop("__file")
-      .withColumn("__t", lit(true))
-    // EVERY non-key batch column rides prefixed — extra source columns
-    // (CDC op markers etc.) are legal condition inputs in SQL MERGE
-    val src = batch
-      .select(keyCols.map(col) ++
-        batch.columns.toSeq.filterNot(keyCols.contains)
-          .map(n => col(n).as(srcCol(n))) :+
-        lit(true).as("__s"): _*)
-    val joined = tgt.join(src, keyCols, "full_outer")
-    def cond(c: Option[DataFrame => Column]): Column =
-      c.map(f => coalesce(f(joined), lit(false))).getOrElse(lit(true))
-    val matched = joined("__t").isNotNull && joined("__s").isNotNull
-    val sourceOnly = joined("__t").isNull
-    val targetOnly = joined("__s").isNull
+    val mj = new MergeJoin(resolvedFramed(spark, basePath, schema, touched,
+      snap.liveMorDeleteLines).drop("__file"), batch, keyCols, actions)
+    import mj.{joined, matched, sourceOnly, targetOnly, updCond, insCond,
+      updatedValue, insertedValue}
 
     // per-column value of the output row, action semantics in ONE
     // codegen'd when-chain per column (no per-action passes)
     val matchedDel = actions.matchedDelete.map(c =>
       matched && coalesce(c(joined), lit(false)))
-    val updCond = cond(actions.matchedUpdateCond)
-    val insCond = cond(actions.insertCond)
     val nmbsDel = actions.notMatchedBySourceDelete.map(c =>
-      targetOnly && cond(Some(c.getOrElse(_ => lit(true)))))
-
-    def updatedValue(n: String): Column = actions.matchedUpdate match {
-      case None => joined(n) // no update action: keep the target value
-      case Some(None) => // UPDATE SET *: replace data cols by source
-        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
-      case Some(Some(assigns)) =>
-        assigns.toMap.get(n).map(_(joined)).getOrElse(joined(n))
-    }
-    def insertedValue(n: String): Column = actions.insert match {
-      case None => lit(null) // row dropped below; placeholder
-      case Some(None) =>
-        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
-      case Some(Some(assigns)) =>
-        assigns.toMap.get(n).map(_(joined)).getOrElse(
-          if (keyCols.contains(n)) joined(n) else joined(srcCol(n)))
-    }
+      targetOnly && mj.cond(Some(c.getOrElse(_ => lit(true)))))
 
     val keepRow =
       when(matched,
@@ -1762,12 +1545,94 @@ object TypedLake {
     val rewrite = joined.filter(keepRow).select(outCols: _*)
     val newFiles = writeTypedFrame(rewrite, basePath, "merge", schema,
       partCols, statsFields, maxRecordsPerFile, bucketSpec)
-    WeatherLakeV2Sink.publishCommit(basePath, "merge", snapshot = snapshot,
-      supersedes = touchedManifests,
-      lines = untouched ++ newFiles ++
-        WeatherLakeV2Sink.morDirectivesOf(basePath, touchedManifests),
+    WeatherLakeV2Sink.publishCommit(basePath, "merge", snapshot = snap.live,
+      supersedes = sup.manifests, lines = sup.lines(newFiles),
       readDomain = Some(inReadDomain), payload = Some(Payload))
     WeatherLakeV2Sink.MergeStats(touched.size, newFiles.size)
+  }
+
+  /** The typed MERGE's snapshot and touched files, shared by the
+    * copy-on-write and mor merges. Candidates prune to the read domain
+    * ([[WeatherLakeV2Sink.mergeReadDomain]]: partition-prunable when
+    * every partition column is a key column and no NOT MATCHED BY SOURCE
+    * clause exists — otherwise the domain is the whole table, since
+    * full-sync semantics genuinely read everything and a key that does
+    * not determine the partition cannot rule any file out); then ONE
+    * distributed semi-join of the MOR-resolved candidates against the
+    * batch keys names the files holding a batch key. A full-sync merge
+    * touches its whole domain. Returns (snapshot, read domain, touched
+    * files).
+    */
+  private def mergeTouched(spark: SparkSession, basePath: String,
+      who: String, schema: StructType, partCols: Seq[String],
+      batch: DataFrame, keyCols: Seq[String],
+      fullSync: Boolean): (LakeSnapshot, String => Boolean, Seq[String]) = {
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, who)
+    val names = schema.fieldNames.toSeq
+    require(keyCols.nonEmpty && keyCols.forall(names.contains),
+      s"TypedLake: merge key columns (${keyCols.mkString(", ")}) must be " +
+        s"table columns (${names.mkString(", ")})")
+    val inReadDomain = WeatherLakeV2Sink.mergeReadDomain(snap.basePath,
+      batch, partCols,
+      prunable = partCols.nonEmpty && partCols.forall(keyCols.contains) &&
+        !fullSync,
+      decode = ExternalCatalogUtils.unescapePathName)
+    val candidates = snap.liveEntryLines.filter(inReadDomain).map(entryPath)
+    val touched =
+      if (candidates.isEmpty) Seq.empty
+      else if (fullSync) candidates
+      else {
+        // no broadcast hint: the merge source can be arbitrarily large
+        // (CDC backfills), and a forced broadcast of its whole key set
+        // would OOM the driver — AQE elects broadcast when small
+        val batchKeys = batch.select(keyCols.map(col).toSeq: _*).distinct()
+        resolvedFramed(spark, snap.basePath, schema, candidates,
+            snap.liveMorDeleteLines)
+          .join(batchKeys, keyCols, "left_semi")
+          .select(col("__file")).distinct()
+          .collect().map(_.getString(0)).toSeq
+      }
+    (snap, inReadDomain, touched)
+  }
+
+  /** A typed MERGE's joined frame — target rows (`__t`) ⟗ the batch
+    * (`__s`) on the key — and the action classification both merges
+    * dispatch on. Target columns keep their names; EVERY non-key batch
+    * column rides under [[srcCol]] (extra source columns — CDC op markers
+    * etc. — are legal condition inputs in SQL MERGE).
+    */
+  private final class MergeJoin(tgt: DataFrame, batch: DataFrame,
+      keyCols: Seq[String], actions: TypedMergeActions) {
+    val joined: DataFrame = tgt.withColumn("__t", lit(true)).join(
+      batch.select(keyCols.map(col) ++
+        batch.columns.toSeq.filterNot(keyCols.contains)
+          .map(n => col(n).as(srcCol(n))) :+
+        lit(true).as("__s"): _*),
+      keyCols, "full_outer")
+    def cond(c: Option[DataFrame => Column]): Column =
+      c.map(f => coalesce(f(joined), lit(false))).getOrElse(lit(true))
+    val matched: Column = joined("__t").isNotNull && joined("__s").isNotNull
+    val sourceOnly: Column = joined("__t").isNull
+    val targetOnly: Column = joined("__s").isNull
+    val updCond: Column = cond(actions.matchedUpdateCond)
+    val insCond: Column = cond(actions.insertCond)
+
+    def updatedValue(n: String): Column = actions.matchedUpdate match {
+      case None => joined(n) // no update action: keep the target value
+      case Some(None) => // UPDATE SET *: replace data cols by source
+        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
+      case Some(Some(assigns)) =>
+        assigns.toMap.get(n).map(_(joined)).getOrElse(joined(n))
+    }
+    def insertedValue(n: String): Column = actions.insert match {
+      case None => lit(null) // row dropped by the caller; placeholder
+      case Some(None) =>
+        if (keyCols.contains(n)) joined(n) else joined(srcCol(n))
+      case Some(Some(assigns)) =>
+        assigns.toMap.get(n).map(_(joined)).getOrElse(
+          if (keyCols.contains(n)) joined(n) else joined(srcCol(n)))
+    }
   }
 
   // -----------------------------------------------------------------
@@ -1878,7 +1743,7 @@ object TypedLake {
     val to = (consumed ++ fresh).distinct
     (changesBetweenTyped(spark, basePath, schema, keyCols,
       from = consumed, to = to),
-      WeatherLakeV2Sink.liveWithinForTyped(basePath, to))
+      WeatherLakeV2Sink.liveWithin(basePath, to))
   }
 
   // -----------------------------------------------------------------
@@ -1897,16 +1762,15 @@ object TypedLake {
     import org.apache.spark.sql.functions.{max, min}
     require(fields.nonEmpty,
       "measureStatsTyped needs at least one column name to measure")
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "measureStatsTyped")
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "measureStatsTyped")
     val names = schema.fieldNames.toSeq
     fields.foreach { f =>
       require(names.contains(f),
         s"TypedLake: measure of unknown column '$f' (schema: " +
           s"${names.mkString(", ")})")
     }
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val lines = byManifest.flatMap(_._2)
+    val lines = snap.liveEntryLines
     if (lines.isEmpty) return 0
     val files = lines.map(entryPath)
     val numericOf = fields.map(f =>
@@ -1944,28 +1808,13 @@ object TypedLake {
         }.toMap
         r.getString(0) -> stats
       }.toMap // O(files x fields) driver metadata, the manifest-read class
-    val newLines = lines.map { l =>
-      val p = entryPath(l)
-      val merged = lineStats(l) ++ perFile.getOrElse(manifestJoinKey(p),
-        perFile.getOrElse(p, Map.empty))
-      if (merged.isEmpty) p else s"$p\t${statsToJson(merged)}"
-    }
     // stats are measured from FILE bytes, mor-unresolved — sound (a
-    // superset's min/max bounds the resolved rows); the directives
-    // themselves MUST ride the rollup or deleted rows would resurrect
-    WeatherLakeV2Sink.publishCommit(basePath, "measure", snapshot = snapshot,
-      supersedes = snapshot,
-      lines = newLines ++ WeatherLakeV2Sink.morDirectivesOf(basePath, snapshot),
-      payload = Some(Payload))
+    // superset's min/max bounds the resolved rows)
+    WeatherLakeV2Sink.publishMeasured(snap, p =>
+      perFile.getOrElse(manifestJoinKey(p), perFile.getOrElse(p, Map.empty)))
     files.size
   }
 
-  /** Typed small-file compaction — the classic [[WeatherLakeV2Sink
-    * .compact]] candidacy rule (directories with >1 file under half the
-    * byte target; `clusterExpr` widens candidacy and sorts-within for
-    * the OPTIMIZE ZORDER move) with the rewrite on typed frames. Rolls
-    * at `maxRecordsPerFile` when positive.
-    */
   /** BUCKET-PRESERVING compaction for hash-bucketed tables: every
     * append lands one file per bucket, so after k inserts each bucket
     * holds k small files — exactly the population a log-structured
@@ -1989,11 +1838,9 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
       priorCount: Option[Int] = None): Int = {
-    WeatherLakeV2Sink.requirePayload(basePath, Payload,
-      "compactTypedBucketed")
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val files = byManifest.flatMap(_._2).map(entryPath)
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "compactTypedBucketed")
+    val files = snap.liveEntryLines.map(entryPath)
     val tagged = files.map(f => f -> bucketGenOfFile(f))
     // a file's bucket GENERATION: the stamped count, else the table's
     // pre-evolution count (legacy markers), else the current count
@@ -2015,46 +1862,34 @@ object TypedLake {
     }
     if (strays.isEmpty && wrongGen.isEmpty && multi.isEmpty) return 0
     val victims = (multi.values.flatten ++ strays ++ wrongGen).toSeq
-    val victimSet = victims.toSet
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(l => victimSet(entryPath(l))) => n
-    }
-    val touchedSet = touchedManifests.toSet
-    val keep = byManifest
-      .filter { case (n, _) => touchedSet(n) }
-      .flatMap(_._2)
-      .filterNot(l => victimSet(entryPath(l)))
-    // victims read MOR-RESOLVED: a bucketed table with dmlMode='mor'
-    // holds live delete files, and rewriting raw file bytes would bake
-    // resurrected ghost rows into new files no delete targets
-    val rows = readResolvedSplit(spark, basePath, schema, victims,
-      morDeleteLinesOf(basePath, snapshot))
-    // route through the bucket writer: one task per bucket, markers on
-    val base = basePath; val sch = schema; val sf = statsFields
-    val mrpf = maxRecordsPerFile; val bc = bucketCol; val n = numBuckets
-    val bucketExpr = org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.hash(col(bc)), lit(n))
-    val newFiles = rows.select(schema.fieldNames.map(col).toSeq: _*)
-      .repartition(n, bucketExpr)
-      .queryExecution.toRdd.mapPartitions { it =>
-        val w = new TypedTaskWriter(base, "compact", sch, Seq.empty, sf,
-          mrpf, bucketSpec = Some((bc, n)))
-        try { it.foreach(w.write); w.closeAll().iterator }
-        catch { case e: Throwable => w.abortAll(); throw e }
-      }.collect().toSeq
     // directives of TOUCHED manifests re-list verbatim (compactTyped's
     // rule): a delete may target an UNTOUCHED bucket's file whose only
     // live listing rides a manifest this rewrite supersedes — dropping
     // the directive would resurrect those deletions table-wide
+    val sup = snap.supersedeFiles(victims)
+    // victims read MOR-RESOLVED: a bucketed table with dmlMode='mor'
+    // holds live delete files, and rewriting raw file bytes would bake
+    // resurrected ghost rows into new files no delete targets
+    val rows = readResolvedSplit(spark, basePath, schema, victims,
+      snap.liveMorDeleteLines)
+    // route through the bucket writer: one task per bucket, markers on
+    val newFiles = writeTypedFrame(rows, basePath, "compact", schema,
+      Seq.empty, statsFields, maxRecordsPerFile,
+      Some((bucketCol, numBuckets)))
     WeatherLakeV2Sink.publishCommit(basePath, "compact",
-      snapshot = snapshot, supersedes = touchedManifests,
-      lines = keep ++ newFiles ++
-        WeatherLakeV2Sink.morDirectivesOf(basePath, touchedManifests),
+      snapshot = snap.live, supersedes = sup.manifests,
+      lines = sup.lines(newFiles),
       readDomain = Some(_ => false), payload = Some(Payload))
     multi.size + (if (strays.nonEmpty) 1 else 0) +
       (if (wrongGen.nonEmpty) 1 else 0)
   }
 
+  /** Typed small-file compaction — the classic [[WeatherLakeV2Sink
+    * .compact]] candidacy rule (directories with >1 file under half the
+    * byte target; `clusterExpr` widens candidacy and sorts-within for
+    * the OPTIMIZE ZORDER move) with the rewrite on typed frames. Rolls
+    * at `maxRecordsPerFile` when positive.
+    */
   def compactTyped(spark: SparkSession, basePath: String,
       schema: StructType, partCols: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024,
@@ -2062,12 +1897,9 @@ object TypedLake {
       statsFields: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "compactTyped")
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload(Payload, "compactTyped")
     val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val snapshot = WeatherLakeV2Sink.liveManifests(basePath)
-    val byManifest = WeatherLakeV2Sink.entryLinesByManifest(basePath, snapshot)
-    val entriesByDir = byManifest.flatMap(_._2)
-      .groupBy(l => new Path(entryPath(l)).getParent.toString)
     // NAME-MAPPING STATS MIGRATION: post-rename, files written under a
     // historical spelling carry their per-file stats under the OLD key,
     // so predicate pruning on the renamed column fails open for them
@@ -2081,33 +1913,14 @@ object TypedLake {
     def oldSpelling(line: String): Boolean =
       histSpellings.nonEmpty &&
         lineStats(line).keysIterator.exists(k => histSpellings(k.toLowerCase))
-    val multi = entriesByDir.view.filter {
-      case (_, ls) =>
-        val fls = ls.map(entryPath)
-        val sizes = fls.map(f => fs.getFileStatus(new Path(f)).getLen)
-        ls.exists(oldSpelling) || {
-          if (clusterExpr.isDefined) fls.size > 1 || sizes.sum > targetBytes
-          else fls.size > 1 && sizes.sum.toDouble / fls.size < targetBytes / 2.0
-        }
-    }.mapValues(_.map(entryPath)).toMap
+    val (multi, sup) = WeatherLakeV2Sink.compactionPlan(snap, targetBytes,
+      clusterExpr.isDefined, force = oldSpelling)
     if (multi.isEmpty) return 0
-    val compactedDirs = multi.keySet
-    def inCompactedDir(l: String): Boolean =
-      compactedDirs(new Path(entryPath(l)).getParent.toString)
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(inCompactedDir) => n
-    }
-    val touchedManifestSet = touchedManifests.toSet
-    val keep = byManifest
-      .filter { case (n, _) => touchedManifestSet(n) }
-      .flatMap(_._2)
-      .filterNot(inCompactedDir)
     // compaction reads MOR-RESOLVED rows (deletions applied), so
     // compacting a directory doubles as its reconcile; the affected
     // delete rows dangle afterwards and vacuum/reconcile clears them
-    val liveDeleteLines = morDeleteLinesOf(basePath, snapshot)
     val rows = readResolvedSplit(spark, basePath, schema,
-      multi.values.flatten.toSeq, liveDeleteLines)
+      multi.values.flatten.toSeq, snap.liveMorDeleteLines)
     // honor targetBytes in the OUTPUT too, not only in candidacy: the
     // typed task writer rolls on maxRecordsPerFile alone, so without a
     // cap a clustered compaction would write ONE unbounded file per
@@ -2151,25 +1964,17 @@ object TypedLake {
     // own repartition); for clustered runs write the arranged frame
     // directly so the sort survives into the rolled files
     val newFiles =
-      if (clusterExpr.isDefined) {
-        val base = basePath; val sch = schema; val pc = partCols
-        val sf = statsFields; val mrpf = effectiveMrpf
-        arranged.select(schema.fieldNames.map(col).toSeq: _*)
-          .queryExecution.toRdd.mapPartitions { it =>
-            val w = new TypedTaskWriter(base, "compact", sch, pc, sf, mrpf)
-            try { it.foreach(w.write); w.closeAll().iterator }
-            catch { case e: Throwable => w.abortAll(); throw e }
-          }.collect().toSeq
-      } else writeTypedFrame(rows, basePath, "compact", schema, partCols,
+      if (clusterExpr.isDefined)
+        writeArranged(arranged.select(schema.fieldNames.map(col).toSeq: _*),
+          basePath, "compact", schema, partCols, statsFields, effectiveMrpf)
+      else writeTypedFrame(rows, basePath, "compact", schema, partCols,
         statsFields, effectiveMrpf)
     // the empty read domain arms the directive-conflict scan: a mor
     // delete/merge publishing since this compaction's snapshot targets
     // data-file paths this rewrite may have just replaced — loud
     // conflict instead of silently resurrecting its deletions
-    WeatherLakeV2Sink.publishCommit(basePath, "compact", snapshot = snapshot,
-      supersedes = touchedManifests,
-      lines = keep ++ newFiles ++
-        WeatherLakeV2Sink.morDirectivesOf(basePath, touchedManifests),
+    WeatherLakeV2Sink.publishCommit(basePath, "compact", snapshot = snap.live,
+      supersedes = sup.manifests, lines = sup.lines(newFiles),
       readDomain = Some(_ => false), payload = Some(Payload))
     multi.size
   }

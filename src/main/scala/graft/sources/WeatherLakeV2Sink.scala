@@ -142,8 +142,8 @@ object WeatherLakeV2Sink {
           // publish re-validates this exact set
           private val overwriting =
             truncateFirst || overwriteEq.isDefined || dynamicOverwrite
-          private val overwriteSnapshot: Seq[String] =
-            if (overwriting) liveManifests(path) else Seq.empty
+          private val overwriteSnapshot: Option[LakeSnapshot] =
+            if (overwriting) Some(loadSnapshot(path)) else None
           override def toBatch: BatchWrite = new BatchWrite {
             override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =
               new LakeWriterFactory(path, statsFields)
@@ -157,13 +157,14 @@ object WeatherLakeV2Sink {
             override def commit(messages: Array[WriterCommitMessage]): Unit = {
               val files = messages.collect { case FilesWritten(ps) => ps }
                 .flatten.toIndexedSeq
-              if (truncateFirst)
-                publishCommit(path, "overwrite", snapshot = overwriteSnapshot,
-                  supersedes = overwriteSnapshot, lines = files)
-              else if (overwriteEq.isDefined || dynamicOverwrite)
-                commitPartitionOverwrite(path, overwriteSnapshot, files,
+              overwriteSnapshot match {
+                case Some(snap) if truncateFirst =>
+                  publishCommit(path, "overwrite", snapshot = snap.live,
+                    supersedes = snap.live, lines = files)
+                case Some(snap) => commitPartitionOverwrite(snap, files,
                   overwriteEq, dynamicOverwrite)
-              else writeManifest(path, jobId, files)
+                case None => writeManifest(path, jobId, files)
+              }
             }
             override def abort(messages: Array[WriterCommitMessage]): Unit = ()
           }
@@ -283,23 +284,9 @@ object WeatherLakeV2Sink {
   def morDeletePaths(lines: Seq[String]): Seq[String] =
     morDeleteEntryLines(lines).map(entryPath)
 
-  /** The live mor-delete directive LINES (with their `#mordelete `
-    * prefix, re-publishable verbatim) of the named manifests — what every
-    * partial-supersede operation must CARRY OVER when it supersedes a
-    * manifest: dropping a directive would resurrect its deleted rows.
-    */
-  private[sources] def morDirectivesOf(basePath: String,
-      manifests: Seq[String]): Seq[String] = {
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val mdir = new Path(basePath, ManifestDir)
-    manifests.flatMap(n => readLines(fs, new Path(mdir, n))
-      .filter(_.startsWith(MorDeletePrefix)))
-  }
-
   /** The live mor-delete file paths of the CURRENT committed view. */
   def committedMorDeleteFiles(basePath: String): Seq[String] =
-    morDirectivesOf(basePath, liveManifests(basePath))
-      .map(l => entryPath(l.stripPrefix(MorDeletePrefix).trim))
+    loadSnapshot(basePath).liveMorDeleteLines.map(entryPath)
 
   /** The mor-delete file paths a captured snapshot resolves to — the
     * directive twin of [[filesAsOf]] (same within-set supersede
@@ -409,7 +396,11 @@ object WeatherLakeV2Sink {
     // a fresh typed table is legitimate; the gate exists to stop a
     // mis-routed read of COMMITTED bytes, not first contact)
     if (manifestNames(basePath).isEmpty) return
-    val actual = payloadFormat(basePath)
+    checkPayload(basePath, expected, payloadFormat(basePath), who)
+  }
+
+  private def checkPayload(basePath: String, expected: String,
+      actual: String, who: String): Unit = {
     if (actual != expected) throw new IllegalStateException(
       s"WeatherLakeV2Sink: $who reads '$expected' payloads but the lake " +
         s"at $basePath holds '$actual' data files — use the " +
@@ -575,42 +566,213 @@ object WeatherLakeV2Sink {
     * replacement file list in ONE atomic rename, so a concurrent reader
     * resolves either the old live set or the new one — never both).
     */
-  def liveManifests(basePath: String): Seq[String] = {
+  def liveManifests(basePath: String): Seq[String] =
+    loadSnapshot(basePath).live
+
+  /** ONE read of a table's manifest log: `_manifests/` listed once, every
+    * manifest opened once and version-checked. Every commit operation
+    * takes its live set, entry lines, `#mordelete` directives, payload
+    * check and supersede set from this value — never from a second
+    * [[liveManifests]] pass, which would race a concurrent append: the
+    * append's lines would be re-listed in the superseding manifest while
+    * its manifest stayed live (not in the snapshot, so not superseded),
+    * double-counting every row it wrote. Manifests are immutable per
+    * name, so the value cannot go stale within the operation;
+    * [[publishCommit]]'s in-lock re-read is the validation against
+    * commits that landed after it.
+    */
+  private[sources] final class LakeSnapshot(val basePath: String,
+      manifests: Seq[(String, Seq[String])]) {
+    private val byName = manifests.toMap
+
+    /** Every line of a manifest, directives included. */
+    def lines(name: String): Seq[String] = byName(name)
+
+    /** Every manifest read, in read order (sorted for a table read). */
+    val names: Seq[String] = manifests.map(_._1)
+
+    /** The names some read manifest's `#supersedes` directive names. */
+    val superseded: Set[String] = manifests.flatMap(_._2
+      .filter(_.startsWith(SupersedesPrefix))
+      .map(_.stripPrefix(SupersedesPrefix).trim)).toSet
+
+    /** The manifests still contributing files (see [[liveManifests]]). */
+    val live: Seq[String] = names.filterNot(superseded)
+
+    /** Superseded manifests vacuum has reclaimed, sorted — history a
+      * commit-log reader can no longer reconstruct.
+      */
+    lazy val reclaimed: Seq[String] =
+      superseded.filterNot(byName.contains).toSeq.sorted
+
+    /** The table's payload format, decided like [[payloadFormat]]. */
+    val payload: String =
+      names.headOption.flatMap(n => manifestPayload(byName(n)))
+        .getOrElse("json")
+
+    /** The `#payload` declaration a table-wide rollup must carry. */
+    def payloadDirective: Option[String] =
+      if (payload == "json") None else Some(payload)
+
+    /** [[WeatherLakeV2Sink.requirePayload]] decided from this read. */
+    def requirePayload(expected: String, who: String): Unit =
+      if (names.nonEmpty) checkPayload(basePath, expected, payload, who)
+
+    /** The data ENTRY LINES (path, or path + tab + stats) of a manifest. */
+    def entryLines(name: String): Seq[String] =
+      byName(name).filter(l => l.nonEmpty && !l.startsWith("#"))
+
+    /** The live manifests' entry lines — what maintenance re-lists
+      * verbatim so untouched files keep their stats.
+      */
+    lazy val liveEntryLines: Seq[String] = live.flatMap(entryLines)
+
+    /** The `#mordelete` directive lines (prefix kept, re-publishable
+      * verbatim) of the named manifests.
+      */
+    def morDirectives(of: Seq[String]): Seq[String] =
+      of.flatMap(n => byName(n).filter(_.startsWith(MorDeletePrefix)))
+
+    /** The live manifests carrying `#mordelete` directives. */
+    lazy val morManifests: Seq[String] =
+      live.filter(n => morDirectives(Seq(n)).nonEmpty)
+
+    /** The live mor-delete directive PAYLOAD lines (path + stats). */
+    lazy val liveMorDeleteLines: Seq[String] =
+      morDirectives(live).map(_.stripPrefix(MorDeletePrefix).trim)
+
+    /** The partial-supersede rule every rewriting commit publishes by:
+      * the live manifests owning a line `touches` selects — plus `also`,
+      * manifests superseded for their directives — are superseded; their
+      * other entry lines are re-listed verbatim (stats intact); their
+      * `#mordelete` directives are carried, since dropping one would
+      * resurrect its deleted rows. Every other live manifest stays live
+      * untouched, which is what lets disjoint commits coexist.
+      */
+    def supersede(touches: String => Boolean,
+        also: Seq[String] = Nil): Supersession = {
+      val owners = live.filter(n => entryLines(n).exists(touches))
+      val superseded = owners ++ also.filterNot(owners.toSet)
+      val set = superseded.toSet
+      Supersession(superseded,
+        live.filter(set).flatMap(entryLines).filterNot(touches),
+        morDirectives(superseded))
+    }
+
+    /** [[supersede]] for a rewrite of exactly the data `files`. */
+    def supersedeFiles(files: Seq[String],
+        also: Seq[String] = Nil): Supersession = {
+      val set = files.toSet
+      supersede(l => set(entryPath(l)), also)
+    }
+
+    /** The row-level predicate pass every DELETE and UPDATE shares: the
+      * fail-open driver-side candidate prune (`inDomain` over each live
+      * entry line — also the op's publish-time read domain), then ONE
+      * distributed count of definite matches per candidate file.
+      * `frame` reads candidate files into a frame carrying `fileCol`;
+      * `matching` selects the rows the op changes. None when no file
+      * holds a match — the op publishes nothing.
+      */
+    def matchPass(inDomain: String => Boolean, fileCol: String,
+        frame: Seq[String] => org.apache.spark.sql.DataFrame,
+        matching: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.Column): Option[Matches] = {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val candidates = liveEntryLines.collect {
+        case l if inDomain(l) => entryPath(l)
+      }
+      if (candidates.isEmpty) None
+      else {
+        val cand = frame(candidates)
+        val rows = cand.filter(matching(cand))
+        val perFile = rows.groupBy(col(fileCol)).agg(count(lit(1)).as("n"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        if (perFile.isEmpty) None else Some(Matches(rows, perFile))
+      }
+    }
+  }
+
+  /** What a partially-superseding commit publishes about the manifests
+    * it replaces ([[LakeSnapshot.supersede]]).
+    */
+  private[sources] final case class Supersession(manifests: Seq[String],
+      kept: Seq[String], carried: Seq[String]) {
+    /** The commit's lines: re-listed entries, then the commit's own
+      * `fresh` lines, then the carried directives.
+      */
+    def lines(fresh: Seq[String]): Seq[String] = kept ++ fresh ++ carried
+  }
+
+  /** The outcome of [[LakeSnapshot.matchPass]]: the matched rows and
+    * their count per touched file.
+    */
+  private[sources] final case class Matches(
+      rows: org.apache.spark.sql.DataFrame, perFile: Seq[(String, Long)]) {
+    def touched: Seq[String] = perFile.map(_._1)
+    def count: Long = perFile.map(_._2).sum
+  }
+
+  /** Read `basePath`'s manifest log once (see [[LakeSnapshot]]). */
+  private[sources] def loadSnapshot(basePath: String): LakeSnapshot =
+    snapshotOf(basePath, manifestNames(basePath))
+
+  /** A [[LakeSnapshot]] over exactly the named manifests, in the given
+    * order — for readers holding a set other than the current log (a
+    * branch base, a pinned mor context, a stream's fresh commits). Over
+    * a captured set, `live` is the set's within-set supersede resolution.
+    */
+  private[sources] def snapshotOf(basePath: String,
+      names: Seq[String]): LakeSnapshot = {
     val fs = new Path(basePath).getFileSystem(LakeIO.conf)
     val mdir = new Path(basePath, ManifestDir)
-    val names = manifestNames(basePath)
-    val superseded = names.flatMap { n =>
+    new LakeSnapshot(basePath, names.map { n =>
       val lines = readLines(fs, new Path(mdir, n))
       checkFormatVersion(n, lines)
-      lines.filter(_.startsWith(SupersedesPrefix))
-        .map(_.stripPrefix(SupersedesPrefix).trim)
-    }.toSet
-    names.filterNot(superseded)
+      n -> lines
+    })
   }
 
-  /** The data ENTRY LINES (path, or path + tab + stats) of a given
-    * manifest set. Maintenance ops resolve their lines from THEIR OWN
-    * snapshot through this — never via a second [[liveManifests]] pass,
-    * which would race a concurrent append: the append's lines would be
-    * re-listed in the superseding manifest while its manifest stayed
-    * live (not in the snapshot, so not superseded), double-counting
-    * every row it wrote.
-    */
-  private def entryLinesOf(basePath: String,
-      manifests: Seq[String]): Seq[String] = {
+  /** [[snapshotOf]] the members of a captured set still on disk. */
+  private def snapshotWithin(basePath: String, set: Seq[String]): LakeSnapshot = {
     val fs = new Path(basePath).getFileSystem(LakeIO.conf)
     val mdir = new Path(basePath, ManifestDir)
-    manifests
-      .flatMap(n => readLines(fs, new Path(mdir, n)))
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
+    snapshotOf(basePath, set.distinct.filter(n => fs.exists(new Path(mdir, n))))
   }
 
-  /** The live manifests' data ENTRY LINES (path, or path + tab + stats) —
-    * what maintenance re-lists verbatim so untouched files keep their
-    * stats through a compact/merge.
+  /** The MERGE read domain, classic and typed. When the partition
+    * columns are determined by the merge key (`prunable`: the classic
+    * partition-immutability contract, or every typed partition column a
+    * key column) and no NOT MATCHED BY SOURCE clause reads the whole
+    * table, a committed line is in the domain iff its partition tuple —
+    * path segments mapped through `decode` to logical values — appears
+    * among the batch's distinct tuples; a file missing any partition
+    * segment cannot be ruled out. Otherwise every line is in the domain.
+    * The domain prunes merge candidates on the driver and is the
+    * publish-time conflict domain; the batch's tuples are one bounded
+    * collect.
     */
+  private[sources] def mergeReadDomain(basePath: String,
+      batch: org.apache.spark.sql.DataFrame, partCols: Seq[String],
+      prunable: Boolean,
+      decode: String => String = identity): String => Boolean =
+    if (!prunable) _ => true
+    else {
+      import org.apache.spark.sql.functions.col
+      val batchParts: Set[Seq[String]] = batch
+        .select(partCols.map(c => col(c).cast(StringType)): _*)
+        .distinct().collect()
+        .map(r => partCols.indices.map(i => r.getString(i)).toSeq).toSet
+      line => {
+        val pv = partitionValues(basePath, entryPath(line))
+        val tuple = partCols.map(pv.get)
+        tuple.exists(_.isEmpty) || batchParts(tuple.map(v => decode(v.get)))
+      }
+    }
+
+  /** The live manifests' data ENTRY LINES (path, or path + tab + stats). */
   def committedEntryLines(basePath: String): Seq[String] =
-    entryLinesOf(basePath, liveManifests(basePath))
+    loadSnapshot(basePath).liveEntryLines
 
   /** Every file recorded by a COMPLETED job's live manifest — the
     * read-side filter that drops orphan files left by jobs that died
@@ -893,15 +1055,11 @@ object WeatherLakeV2Sink {
     */
   private def freshCommits(basePath: String, cursorPath: String):
       (Seq[String], Seq[String]) = {
+    val snap = loadSnapshot(basePath)
     // one guard covers all three incremental JSON-line readers
-    requirePayload(basePath, "json", "the incremental commit reader")
-    val fresh = liveManifests(basePath)
-      .filterNot(consumedManifests(cursorPath))
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val lines = fresh
-      .flatMap(n => readLines(fs, new Path(new Path(basePath, ManifestDir), n)))
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-    (fresh, lines)
+    snap.requirePayload("json", "the incremental commit reader")
+    val fresh = snap.live.filterNot(consumedManifests(cursorPath))
+    (fresh, fresh.flatMap(snap.entryLines))
   }
 
   private def textFrame(spark: org.apache.spark.sql.SparkSession,
@@ -1007,23 +1165,12 @@ object WeatherLakeV2Sink {
 
   /** The manifests of `set` that still contribute files after in-set
     * supersedes resolution — the NAMES twin of [[filesAsOf]]'s file
-    * resolution (same present/missing/tombstone rules, same loud
-    * vacuum-horizon failure).
+    * resolution (same present/tombstone rules; a member vacuum
+    * reclaimed is simply absent). Shared by the classic and typed feeds.
     */
-  /** [[liveWithin]] for the typed feed (same resolution rules). */
-  private[sources] def liveWithinForTyped(basePath: String,
-      set: Seq[String]): Seq[String] = liveWithin(basePath, set)
-
-  private def liveWithin(basePath: String, set: Seq[String]): Seq[String] = {
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val mdir = new Path(basePath, ManifestDir)
-    val present = set.distinct.filter(n => fs.exists(new Path(mdir, n)))
-    val superseded = present.flatMap(n =>
-      readLines(fs, new Path(mdir, n))
-        .filter(_.startsWith(SupersedesPrefix))
-        .map(_.stripPrefix(SupersedesPrefix).trim)).toSet
-    present.filterNot(superseded).sorted
-  }
+  private[sources] def liveWithin(basePath: String,
+      set: Seq[String]): Seq[String] =
+    snapshotWithin(basePath, set).live.sorted
 
   /** Durably mark manifests consumed: rewrite the cursor with the union of
     * old and new names ([[replaceCursor]] mechanics). The commit readers'
@@ -1155,34 +1302,21 @@ object WeatherLakeV2Sink {
     */
   private def survivingLinesAsOf(basePath: String,
       snap: Seq[String]): Seq[String] = {
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val mdir = new Path(basePath, ManifestDir)
-    def linesIfPresent(n: String): Option[Seq[String]] = {
-      val p = new Path(mdir, n)
-      if (fs.exists(p)) {
-        val ls = readLines(fs, p)
-        checkFormatVersion(n, ls)
-        Some(ls)
-      } else None
-    }
-    val present = snap.distinct.flatMap(n => linesIfPresent(n).map(n -> _))
-    val superseded = present.flatMap(_._2
-      .filter(_.startsWith(SupersedesPrefix))
-      .map(_.stripPrefix(SupersedesPrefix).trim)).toSet
+    val within = snapshotWithin(basePath, snap)
     // vacuum reclaims superseded manifests with their files: a snapshot
     // manifest that is GONE but superseded within the snapshot is exactly
     // the compacted-away case — its rows live on in the replacement.
     // Gone and NOT superseded means the snapshot predates the vacuum
     // horizon and its data is unrecoverable — fail loudly, never return
     // a silently partial table.
-    val missing = snap.distinct.toSet -- present.map(_._1).toSet
-    val lost = missing.filterNot(superseded)
+    val lost = (snap.distinct.toSet -- within.names)
+      .filterNot(within.superseded)
     if (lost.nonEmpty)
       throw new IllegalStateException(
         "WeatherLakeV2Sink.readAsOf: snapshot predates the vacuum horizon; " +
           s"manifests reclaimed without a superseding replacement: " +
           lost.toSeq.sorted.mkString(", "))
-    present.filterNot(p => superseded(p._1)).flatMap(_._2)
+    within.live.flatMap(within.lines)
   }
 
   /** CHANGE DATA FEED between two captured snapshots (the Delta CDF /
@@ -1212,6 +1346,7 @@ object WeatherLakeV2Sink {
       key: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column):
       org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
+    requirePayload(basePath, "json", "changesBetween")
     val fromFiles = filesAsOf(basePath, from).toSet
     val toFiles = filesAsOf(basePath, to).toSet
     val removed = (fromFiles -- toFiles).toSeq.sorted
@@ -1332,22 +1467,6 @@ object WeatherLakeV2Sink {
             "rename; no partial state was published")
     try body(verifyHeld)
     finally if (currentContent().contains(token)) fs.delete(lock, false)
-  }
-
-  /** The data ENTRY LINES of each manifest, keyed by name — the
-    * per-manifest granularity partial superseding needs: an operation
-    * supersedes ONLY the manifests whose files it rewrites and re-lists
-    * only THEIR untouched lines, leaving every other live manifest
-    * untouched (which is what lets disjoint commits coexist).
-    */
-  private[sources] def entryLinesByManifest(basePath: String,
-      manifests: Seq[String]): Seq[(String, Seq[String])] = {
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val mdir = new Path(basePath, ManifestDir)
-    manifests.map { n =>
-      n -> readLines(fs, new Path(mdir, n))
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-    }
   }
 
   /** Validate-and-publish, the whole optimistic-concurrency critical
@@ -1525,8 +1644,8 @@ object WeatherLakeV2Sink {
     * in dynamic mode a partition-less file is genuinely outside every
     * written tuple and is kept.
     */
-  private[sources] def commitPartitionOverwrite(basePath: String,
-      snapshot: Seq[String], newLines: Seq[String],
+  private[sources] def commitPartitionOverwrite(snap: LakeSnapshot,
+      newLines: Seq[String],
       eq: Option[Map[String, String]], dynamic: Boolean,
       payload: Option[String] = None,
       decodeValue: String => String = identity): Unit = {
@@ -1534,7 +1653,7 @@ object WeatherLakeV2Sink {
     // value — the typed writer Hive-escapes ('%'→'%25'), so its caller
     // passes unescapePathName; classic values are written raw (identity)
     def pvOf(line: String): Map[String, String] =
-      partitionValues(basePath, entryPath(line))
+      partitionValues(snap.basePath, entryPath(line))
         .map { case (k, v) => k -> decodeValue(v) }
     val writtenParts = newLines.map(pvOf).toSet
     eq.foreach { m =>
@@ -1563,18 +1682,13 @@ object WeatherLakeV2Sink {
         }
       case None => writtenParts.contains(pvOf(line))
     }
-    val byManifest = entryLinesByManifest(basePath, snapshot)
-    val touchedManifests = byManifest.collect {
-      case (n, ls) if ls.exists(inDomain) => n
-    }
+    // a superseded manifest's MOR-DELETE directives ride along:
+    // deletions of out-of-region files it owned remain part of the view
+    // (in-region targets are replaced and dangle harmlessly)
+    val sup = snap.supersede(inDomain)
     // dynamic overwrite of nothing (empty batch) replaces nothing: a
     // no-op publishes NOTHING, like a no-op delete
-    if (newLines.isEmpty && touchedManifests.isEmpty) return
-    val touchedSet = touchedManifests.toSet
-    val keep = byManifest
-      .filter { case (n, _) => touchedSet(n) }
-      .flatMap(_._2)
-      .filterNot(inDomain)
+    if (newLines.isEmpty && sup.manifests.isEmpty) return
     // the publish-time conflict check evaluates the domain over RACING
     // manifests' lines, which this op never vetted: one that cannot be
     // decided (no partition segments) counts as CONFLICTING — a
@@ -1582,12 +1696,8 @@ object WeatherLakeV2Sink {
     // commit, not the snapshot-side cannot-decide error above
     val conflictDomain: String => Boolean = l =>
       try inDomain(l) catch { case _: IllegalStateException => true }
-    publishCommit(basePath, "overwrite", snapshot = snapshot,
-      supersedes = touchedManifests,
-      // a superseded manifest's MOR-DELETE directives must ride along:
-      // deletions of out-of-region files it owned remain part of the
-      // view (in-region targets are replaced and dangle harmlessly)
-      lines = keep ++ newLines ++ morDirectivesOf(basePath, touchedManifests),
+    publishCommit(snap.basePath, "overwrite", snapshot = snap.live,
+      supersedes = sup.manifests, lines = sup.lines(newLines),
       readDomain = Some(conflictDomain), payload = payload)
   }
 
@@ -1749,9 +1859,6 @@ object WeatherLakeV2Sink {
   private def framedLines(spark: org.apache.spark.sql.SparkSession,
       basePath: String, files: Seq[String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    // one guard covers every line-oriented row-level op (merge/delete/
-    // update route here before any data IO)
-    requirePayload(basePath, "json", "the JSON-line row-level operation")
     val session = spark
     import session.implicits._
     val dirOf = files.map { f =>
@@ -1831,8 +1938,8 @@ object WeatherLakeV2Sink {
     * for the named raw_json fields on the REWRITTEN files (untouched
     * files keep their original entry lines either way), so merging never
     * erodes the stats-skipping layer.
-    */
-  /** `deleteMatched` (evaluated over the BATCH frame) marks rows whose
+    *
+    * `deleteMatched` (evaluated over the BATCH frame) marks rows whose
     * key must be REMOVED instead of upserted — the MERGE delete action
     * (`WHEN MATCHED AND src.op = 'D' THEN DELETE`), which is what lets a
     * change-feed consumer apply an epoch's net inserts+updates+deletes
@@ -1841,8 +1948,8 @@ object WeatherLakeV2Sink {
     * anti-join (the old copy goes away), but are excluded from the
     * rewrite union (nothing comes back); a delete row whose key does not
     * exist is a no-op. Distributed throughout — no driver-side key list.
-    */
-  /** `deleteNotMatchedBySource` (evaluated over the TARGET frame — there
+    *
+    * `deleteNotMatchedBySource` (evaluated over the TARGET frame — there
     * is no source row to reference) marks COMMITTED rows whose key is
     * absent from the batch for removal — `WHEN NOT MATCHED BY SOURCE
     * THEN DELETE [AND cond]`, the full-sync clause: one merge
@@ -1862,37 +1969,20 @@ object WeatherLakeV2Sink {
         org.apache.spark.sql.Column] = None,
       deleteNotMatchedBySource: Option[org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.Column] = None): MergeStats = {
-      import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+      import org.apache.spark.sql.functions.{coalesce, col, lit}
       require(targetBytes > 0, "targetBytes must be positive")
-      val snapshotNames = liveManifests(basePath)
-      // lines resolved from THE SNAPSHOT, per manifest (partial
-      // superseding needs to know which manifest owns each touched file;
-      // a second live pass would double-count a racing append)
-      val byManifest = entryLinesByManifest(basePath, snapshotNames)
-      val committedLines = byManifest.flatMap(_._2)
-      val committed = committedLines.map(entryPath)
-      // 1. driver-side partition pruning of the candidate set: bounded by
-      // the batch's distinct partition tuples (same class as the
-      // mergeUpsertParquet touched-ds collect), never by batch rows
-      val batchParts = batch
-        .select(col("city"), col("ds"), col("hour")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        .toSet
-      // the merge's READ DOMAIN, reused twice: driver-side candidate
-      // pruning here, and publish-time conflict detection against
-      // manifests that commit AFTER the snapshot (a concurrent append
-      // inside the domain may hold a batch key this merge decided to
-      // INSERT — committing would duplicate it). A file without full
-      // partition values can't be ruled out, in or out of band.
-      def inReadDomain(line: String): Boolean =
-        deleteNotMatchedBySource.isDefined || {
-          val pv = partitionValues(basePath, entryPath(line))
-          (pv.get("city"), pv.get("ds"), pv.get("hour")) match {
-            case (Some(c), Some(d), Some(h)) => batchParts((c, d, h))
-            case _ => true
-          }
-        }
-      val candidates = committed.filter(f => inReadDomain(f))
+      val snap = loadSnapshot(basePath)
+      snap.requirePayload("json", "the JSON-line row-level operation")
+      // 1. the merge's READ DOMAIN ([[mergeReadDomain]], bounded by the
+      // batch's distinct partition tuples, never by batch rows), reused
+      // twice: driver-side candidate pruning here, and publish-time
+      // conflict detection against manifests that commit AFTER the
+      // snapshot (a concurrent append inside the domain may hold a batch
+      // key this merge decided to INSERT — committing would duplicate it)
+      val inReadDomain = mergeReadDomain(basePath, batch,
+        Seq("city", "ds", "hour"),
+        prunable = deleteNotMatchedBySource.isEmpty)
+      val candidates = snap.liveEntryLines.filter(inReadDomain).map(entryPath)
       val batchKeys = batch.select(key(batch).as("__key")).distinct()
       // committed candidate lines, re-framed to the write Schema
       // ([[framedLines]]) so `key` evaluates identically on both sides
@@ -1922,26 +2012,15 @@ object WeatherLakeV2Sink {
                 .map(_.getString(0)).toSeq
           }
         }
-      // PARTIAL superseding: only the manifests owning a touched file are
-      // superseded, and only THEIR untouched lines are re-listed (stats
-      // intact) — every other live manifest stays live untouched, so a
-      // concurrent commit over disjoint manifests coexists instead of
-      // conflicting
-      val touchedSet = touched.toSet
-      val touchedManifests = byManifest.collect {
-        case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
-      }
-      val touchedManifestSet = touchedManifests.toSet
-      val untouched = byManifest
-        .filter { case (n, _) => touchedManifestSet(n) }
-        .flatMap(_._2)
-        .filterNot(l => touchedSet(entryPath(l)))
+      val sup = snap.supersedeFiles(touched)
+      // the touched files' lines, re-framed once for the rewrite and the
+      // change log
+      lazy val tf = framedLines(spark, basePath, touched)
       // 3. survivors of touched files + the batch's UPSERT rows (delete
       // rows removed their committed copy via the anti-join above and
       // bring nothing back), routed to directories
       def isDelete(df: org.apache.spark.sql.DataFrame) =
-        deleteMatched.map(d => org.apache.spark.sql.functions.coalesce(
-          d(df), lit(false))).getOrElse(lit(false))
+        deleteMatched.map(d => coalesce(d(df), lit(false))).getOrElse(lit(false))
       val batchRouted = batch.filter(!isDelete(batch)).select(
         org.apache.spark.sql.functions.concat_ws("/", lit(basePath),
           org.apache.spark.sql.functions.concat(lit("city="), col("city")),
@@ -1952,7 +2031,6 @@ object WeatherLakeV2Sink {
       val rewrite =
         if (touched.isEmpty) batchRouted
         else {
-          val tf = framedLines(spark, basePath, touched)
           val notMatched = tf
             .withColumn("__key", key(tf))
             .join(batchKeys, "__key", "left_anti")
@@ -1982,8 +2060,7 @@ object WeatherLakeV2Sink {
               batch.filter(!isDelete(batch)).select(lit("insert").as("change"),
                 col("raw_json").as("value"))
             else {
-              val tf2 = framedLines(spark, basePath, touched)
-              val oldKeyed = tf2.withColumn("__key", key(tf2))
+              val oldKeyed = tf.withColumn("__key", key(tf))
                 .select(col("__key"), col("value").as("__old"))
               val newKeyed = batch.select(key(batch).as("__key"),
                 col("raw_json").as("__new"), isDelete(batch).as("__del"))
@@ -2007,8 +2084,7 @@ object WeatherLakeV2Sink {
               deleteNotMatchedBySource match {
                 case None => batchChanges
                 case Some(nmbs) =>
-                  val tf3 = framedLines(spark, basePath, touched)
-                  val gone = tf3.withColumn("__key", key(tf3))
+                  val gone = tf.withColumn("__key", key(tf))
                     .join(batchKeys, "__key", "left_anti")
                   batchChanges.unionByName(
                     gone.filter(coalesce(nmbs(gone), lit(false)))
@@ -2021,9 +2097,8 @@ object WeatherLakeV2Sink {
       // 4. validate-and-publish ONE manifest: old view or new view, never
       // a mix; conflicts with concurrent commits are loud, disjoint ones
       // coexist (see publishCommit)
-      publishCommit(basePath, "merge", snapshot = snapshotNames,
-        supersedes = touchedManifests,
-        lines = untouched ++ newFiles ++ changeLines,
+      publishCommit(basePath, "merge", snapshot = snap.live,
+        supersedes = sup.manifests, lines = sup.lines(newFiles ++ changeLines),
         readDomain = Some(inReadDomain))
       MergeStats(touched.size, newFiles.size)
     }
@@ -2092,71 +2167,67 @@ object WeatherLakeV2Sink {
       targetBytes: Long = 128L * 1024 * 1024,
       statsFields: Seq[String] = Nil,
       changeLog: Boolean = false): DeleteStats = {
-      import org.apache.spark.sql.functions.{coalesce, col, count, lit, not}
-      require(targetBytes > 0, "targetBytes must be positive")
-      val snapshotNames = liveManifests(basePath)
-      // lines resolved from THE SNAPSHOT, per manifest (partial
-      // superseding; a second live pass would double-count a racing
-      // append)
-      val byManifest = entryLinesByManifest(basePath, snapshotNames)
-      val committedLines = byManifest.flatMap(_._2)
-      // 1. driver-side candidate pruning over the entry LINES (each line
-      // carries the file path and, when measured, its stats payload).
-      // The same fail-open test is the publish-time read domain: a
-      // concurrent commit whose new lines survive it may hold rows this
-      // delete should have removed — loud conflict, not a silent miss.
-      def inReadDomain(l: String): Boolean =
-        prune(partitionValues(basePath, entryPath(l)), lineStats(l))
-      val candidates = committedLines.collect {
-        case l if inReadDomain(l) => entryPath(l)
+    import org.apache.spark.sql.functions.{col, lit, not}
+    rewriteMatches(spark, basePath, "delete", predicate, prune, targetBytes,
+        statsFields, changeLog)(
+      // survivors: predicate NOT TRUE (null keeps the row)
+      (tf, hit) => tf.filter(not(hit(tf))).select(col("dir"), col("value")),
+      (tf, hit) => tf.filter(hit(tf)).select(lit("delete").as("change"),
+        col("value")))
+      .map { case (m, newFiles) =>
+        DeleteStats(m.touched.size, newFiles, m.count) }
+      .getOrElse(DeleteStats(0, 0, 0L))
+  }
+
+  /** The copy-on-write DELETE/UPDATE core over the JSON-line payload:
+    * ONE snapshot read; the predicate pass ([[LakeSnapshot.matchPass]]:
+    * fail-open `prune` over each entry line's partition values and stats
+    * — also the publish-time read domain, so a concurrent commit whose
+    * new lines survive it conflicts loudly instead of being silently
+    * missed — then one distributed count of definite matches per file);
+    * the touched files re-framed ([[framedLines]]) and rewritten as
+    * `rewrite(frame, hit)` through the rolled writer; the change log,
+    * when on, from `changes(frame, hit)`; ONE partially-superseding
+    * publish. `hit` is the predicate under SQL NULL semantics (NULL is
+    * not a match). None when no row matched — nothing is published.
+    * Returns the matches and the number of files written.
+    */
+  private def rewriteMatches(spark: org.apache.spark.sql.SparkSession,
+      basePath: String, op: String,
+      predicate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column,
+      prune: (Map[String, String], Map[String, FieldStats]) => Boolean,
+      targetBytes: Long, statsFields: Seq[String], changeLog: Boolean)(
+      rewrite: (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.DataFrame,
+      changes: (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.DataFrame): Option[(Matches, Int)] = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    require(targetBytes > 0, "targetBytes must be positive")
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload("json", "the JSON-line row-level operation")
+    def inReadDomain(l: String): Boolean =
+      prune(partitionValues(basePath, entryPath(l)), lineStats(l))
+    def hit(df: org.apache.spark.sql.DataFrame) =
+      coalesce(predicate(df), lit(false))
+    snap.matchPass(inReadDomain, "file", framedLines(spark, basePath, _), hit)
+      .map { m =>
+        val sup = snap.supersedeFiles(m.touched)
+        val tf = framedLines(spark, basePath, m.touched)
+        val newFiles = writeRolled(rewrite(tf, hit), op, basePath,
+          targetBytes, statsFields = statsFields)
+        val changeLines =
+          if (!changeLog) Seq.empty
+          else writeChangeLog(changes(tf, hit), op, basePath, targetBytes,
+            statsFields)
+        publishCommit(basePath, op, snapshot = snap.live,
+          supersedes = sup.manifests,
+          lines = sup.lines(newFiles ++ changeLines),
+          readDomain = Some(inReadDomain))
+        (m, newFiles.size)
       }
-      if (candidates.isEmpty) DeleteStats(0, 0, 0L)
-      else {
-        def hit(df: org.apache.spark.sql.DataFrame) =
-          coalesce(predicate(df), lit(false))
-        // 2. one pass: definite matches per candidate file — bounded
-        // driver metadata (O(touched files)), the only data read before
-        // the rewrite, and only of candidate files
-        val cand = framedLines(spark, basePath, candidates)
-        val perFile = cand.filter(hit(cand))
-          .groupBy(col("file")).agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val touched = perFile.map(_._1).toSeq
-        val deletedRows = perFile.map(_._2).sum
-        if (touched.isEmpty) DeleteStats(0, 0, 0L)
-        else {
-          val touchedSet = touched.toSet
-          val touchedManifests = byManifest.collect {
-            case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
-          }
-          val touchedManifestSet = touchedManifests.toSet
-          val untouched = byManifest
-            .filter { case (n, _) => touchedManifestSet(n) }
-            .flatMap(_._2)
-            .filterNot(l => touchedSet(entryPath(l)))
-          // 3. survivors: predicate NOT TRUE (null keeps the row)
-          val tf = framedLines(spark, basePath, touched)
-          val survivors = tf.filter(not(hit(tf)))
-            .select(col("dir"), col("value"))
-          val newFiles = writeRolled(survivors, "delete", basePath,
-            targetBytes, statsFields = statsFields)
-          val changeLines =
-            if (!changeLog) Seq.empty
-            else writeChangeLog(tf.filter(hit(tf)).select(
-                org.apache.spark.sql.functions.lit("delete").as("change"),
-                col("value")),
-              "delete", basePath, targetBytes, statsFields)
-          // 4. validate-and-publish: only the touched manifests are
-          // superseded; disjoint concurrent commits coexist, conflicting
-          // ones lose loudly (publishCommit)
-          publishCommit(basePath, "delete", snapshot = snapshotNames,
-            supersedes = touchedManifests,
-            lines = untouched ++ newFiles ++ changeLines,
-            readDomain = Some(inReadDomain))
-          DeleteStats(touched.size, newFiles.size, deletedRows)
-        }
-      }
-    }
+  }
 
   // -----------------------------------------------------------------
   // manifest checkpointing (metadata-only history rollup)
@@ -2192,7 +2263,8 @@ object WeatherLakeV2Sink {
     * that superseded a snapshot manifest makes it lose loudly).
     */
   def checkpointManifests(basePath: String): Int = {
-      val snapshot = liveManifests(basePath)
+      val snap = loadSnapshot(basePath)
+      val snapshot = snap.live
       if (snapshot.size <= 1) 0
       else {
         // resolve entry lines from the SNAPSHOT, never from a second
@@ -2208,8 +2280,7 @@ object WeatherLakeV2Sink {
         // committed view itself; dropping a directive at checkpoint would
         // resurrect its deleted rows. Data paths are re-listed unchanged,
         // so every carried directive's target stays valid.
-        val lines = entryLinesByManifest(basePath, snapshot).flatMap(_._2) ++
-          morDirectivesOf(basePath, snapshot)
+        val lines = snap.liveEntryLines ++ snap.morDirectives(snapshot)
         // the whole-set rollup: supersedes everything it snapshotted;
         // appends landing after the snapshot stay live untouched, and a
         // concurrent commit that superseded a snapshot member first
@@ -2217,12 +2288,9 @@ object WeatherLakeV2Sink {
         // Payload-format-agnostic (it re-lists lines, never reads data),
         // but the rollup manifest must CARRY the table's payload
         // declaration — dropping it would demote a typed table to v1.
-        val payload = payloadFormat(basePath) match {
-          case "json" => None
-          case p => Some(p)
-        }
         publishCommit(basePath, "checkpoint", snapshot = snapshot,
-          supersedes = snapshot, lines = lines, payload = payload)
+          supersedes = snapshot, lines = lines,
+          payload = snap.payloadDirective)
         snapshot.size
       }
     }
@@ -2270,11 +2338,12 @@ object WeatherLakeV2Sink {
     * restore delta from the commit structure.
     */
   def rollbackTo(basePath: String, snap: Seq[String]): RollbackStats = {
-    val live = liveManifests(basePath)
+    val cur = loadSnapshot(basePath)
+    val live = cur.live
     val asOfEntries = entryLinesAsOf(basePath, snap)
     val asOfMor = morDirectiveLinesAsOf(basePath, snap)
-    val curEntries = entryLinesByManifest(basePath, live).flatMap(_._2)
-    val curMor = morDirectivesOf(basePath, live)
+    val curEntries = cur.liveEntryLines
+    val curMor = cur.morDirectives(live)
     val asOfFiles = asOfEntries.map(entryPath).toSet
     val curFiles = curEntries.map(entryPath).toSet
     def delPath(l: String): String =
@@ -2296,17 +2365,13 @@ object WeatherLakeV2Sink {
         s"files no longer on disk (partially vacuumed history): " +
         s"${missing.toSeq.sorted.take(5).mkString(", ")}" +
         (if (missing.size > 5) s" … (${missing.size} total)" else ""))
-    val payload = payloadFormat(basePath) match {
-      case "json" => None
-      case p => Some(p)
-    }
     // strict ancestry (requireLiveExactly): the restore's input is the
     // WHOLE live view — an append racing between this function's
     // snapshot and the publish must fail the rollback loudly, not
     // survive it (supersedes-only validation would let its rows ride
     // through a commit that claims to have restored version V)
     publishCommit(basePath, "rollback", snapshot = live, supersedes = live,
-      lines = asOfEntries ++ asOfMor, payload = payload,
+      lines = asOfEntries ++ asOfMor, payload = cur.payloadDirective,
       requireLiveExactly = Some(live.toSet))
     RollbackStats((asOfFiles -- curFiles).size, (curFiles -- asOfFiles).size,
       (asOfDel -- curDel).size, (curDel -- asOfDel).size)
@@ -2360,69 +2425,25 @@ object WeatherLakeV2Sink {
       targetBytes: Long = 128L * 1024 * 1024,
       statsFields: Seq[String] = Nil,
       changeLog: Boolean = false): UpdateStats = {
-      import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
-      require(targetBytes > 0, "targetBytes must be positive")
-      val snapshotNames = liveManifests(basePath)
-      // lines resolved from THE SNAPSHOT, per manifest (partial
-      // superseding; a second live pass would double-count a racing
-      // append)
-      val byManifest = entryLinesByManifest(basePath, snapshotNames)
-      val committedLines = byManifest.flatMap(_._2)
-      def inReadDomain(l: String): Boolean =
-        prune(partitionValues(basePath, entryPath(l)), lineStats(l))
-      val candidates = committedLines.collect {
-        case l if inReadDomain(l) => entryPath(l)
-      }
-      if (candidates.isEmpty) UpdateStats(0, 0, 0L)
-      else {
-        def hit(df: org.apache.spark.sql.DataFrame) =
-          coalesce(predicate(df), lit(false))
-        val cand = framedLines(spark, basePath, candidates)
-        val perFile = cand.filter(hit(cand))
-          .groupBy(col("file")).agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val touched = perFile.map(_._1).toSeq
-        val updatedRows = perFile.map(_._2).sum
-        if (touched.isEmpty) UpdateStats(0, 0, 0L)
-        else {
-          val touchedSet = touched.toSet
-          val touchedManifests = byManifest.collect {
-            case (n, ls) if ls.exists(l => touchedSet(entryPath(l))) => n
-          }
-          val touchedManifestSet = touchedManifests.toSet
-          val untouched = byManifest
-            .filter { case (n, _) => touchedManifestSet(n) }
-            .flatMap(_._2)
-            .filterNot(l => touchedSet(entryPath(l)))
-          val tf = framedLines(spark, basePath, touched)
-          val rewrite = tf.select(col("dir"),
-            when(hit(tf), transform(tf)).otherwise(col("value")).as("value"))
-          val newFiles = writeRolled(rewrite, "update", basePath,
-            targetBytes, statsFields = statsFields)
-          val changeLines =
-            if (!changeLog) Seq.empty
-            else {
-              import org.apache.spark.sql.functions.{lit, not => fnot}
-              // no-op transforms (new line == old line) are NOT changes,
-              // the same suppression rule as changesBetween
-              val tWith = tf.withColumn("__new", transform(tf))
-              val changed = tWith.filter(hit(tWith) &&
-                fnot(col("__new") <=> col("value")))
-              writeChangeLog(
-                changed.select(lit("update_preimage").as("change"), col("value"))
-                  .unionByName(changed.select(
-                    lit("update_postimage").as("change"),
-                    col("__new").as("value"))),
-                "update", basePath, targetBytes, statsFields)
-            }
-          publishCommit(basePath, "update", snapshot = snapshotNames,
-            supersedes = touchedManifests,
-            lines = untouched ++ newFiles ++ changeLines,
-            readDomain = Some(inReadDomain))
-          UpdateStats(touched.size, newFiles.size, updatedRows)
-        }
-      }
-    }
+    import org.apache.spark.sql.functions.{col, lit, not, when}
+    rewriteMatches(spark, basePath, "update", predicate, prune, targetBytes,
+        statsFields, changeLog)(
+      (tf, hit) => tf.select(col("dir"),
+        when(hit(tf), transform(tf)).otherwise(col("value")).as("value")),
+      (tf, hit) => {
+        // no-op transforms (new line == old line) are NOT changes, the
+        // same suppression rule as changesBetween
+        val tWith = tf.withColumn("__new", transform(tf))
+        val changed = tWith.filter(hit(tWith) &&
+          not(col("__new") <=> col("value")))
+        changed.select(lit("update_preimage").as("change"), col("value"))
+          .unionByName(changed.select(lit("update_postimage").as("change"),
+            col("__new").as("value")))
+      })
+      .map { case (m, newFiles) =>
+        UpdateStats(m.touched.size, newFiles, m.count) }
+      .getOrElse(UpdateStats(0, 0, 0L))
+  }
 
   // -----------------------------------------------------------------
   // manifest-driven small-file compaction
@@ -2491,45 +2512,11 @@ object WeatherLakeV2Sink {
       statsFields: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(targetBytes > 0, "targetBytes must be positive")
-    requirePayload(basePath, "json", "compact")
-    val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    val snapshot = liveManifests(basePath)
-    val byManifest = entryLinesByManifest(basePath, snapshot)
-    // entry LINES grouped by directory: untouched directories re-list
-    // their original lines verbatim, so per-file stats survive compaction
-    val entriesByDir = byManifest.flatMap(_._2)
-      .groupBy(l => new Path(entryPath(l)).getParent.toString)
-    // small-file candidates only: >1 file and mean size under half the
-    // target — a healthy directory (however many bounded files) is left
-    // alone, so repeated maintenance runs converge instead of churning.
-    // Clustered runs widen candidacy (see the ZORDER paragraph above).
-    // O(candidate files) driver-side metadata calls, same order as the
-    // manifest read itself.
-    val multi = entriesByDir.view.mapValues(_.map(entryPath)).filter {
-      case (_, fls) =>
-        val sizes = fls.map(f => fs.getFileStatus(new Path(f)).getLen)
-        if (clusterExpr.isDefined)
-          fls.size > 1 || sizes.sum > targetBytes
-        else
-          fls.size > 1 && sizes.sum.toDouble / fls.size < targetBytes / 2.0
-    }.toMap
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload("json", "compact")
+    val (multi, sup) = compactionPlan(snap, targetBytes, clusterExpr.isDefined)
     if (multi.isEmpty) 0
     else {
-      val compactedDirs = multi.keySet
-      def inCompactedDir(l: String): Boolean =
-        compactedDirs(new Path(entryPath(l)).getParent.toString)
-      // partial superseding: only manifests contributing a file to a
-      // compacted directory are superseded; their entries OUTSIDE those
-      // directories are re-listed verbatim, every other live manifest
-      // stays live — a concurrent disjoint commit coexists
-      val touchedManifests = byManifest.collect {
-        case (n, ls) if ls.exists(inCompactedDir) => n
-      }
-      val touchedManifestSet = touchedManifests.toSet
-      val keep = byManifest
-        .filter { case (n, _) => touchedManifestSet(n) }
-        .flatMap(_._2)
-        .filterNot(inCompactedDir)
       val session = spark
       import session.implicits._
       // full-path join, same reason as mergeCommitted: basenames are not
@@ -2549,10 +2536,40 @@ object WeatherLakeV2Sink {
       // after the snapshot live in manifests this commit never touches,
       // so a concurrent append can't invalidate it; the supersedes check
       // alone catches a racing rewrite of the same manifests
-      publishCommit(basePath, "compact", snapshot = snapshot,
-        supersedes = touchedManifests, lines = keep ++ newFiles)
+      publishCommit(basePath, "compact", snapshot = snap.live,
+        supersedes = sup.manifests, lines = sup.lines(newFiles))
       multi.size
     }
+  }
+
+  /** Compaction candidacy, classic and typed: the live entry lines
+    * grouped by directory; a directory is rewritten when `force` selects
+    * one of its lines, or by the small-file rule — >1 file and mean size
+    * under half `targetBytes`, so a healthy directory (however many
+    * bounded files) is left alone and repeated maintenance converges
+    * instead of churning. `clustered` runs widen candidacy to any
+    * multi-file directory or a single file over the target (reclustering
+    * and splitting are the point). O(candidate files) driver-side size
+    * stats, the order of the manifest read itself. Returns the candidate
+    * directories' files and the partial supersession rewriting them:
+    * untouched directories re-list their lines verbatim, so per-file
+    * stats survive compaction, and every other live manifest stays live.
+    */
+  private[sources] def compactionPlan(snap: LakeSnapshot, targetBytes: Long,
+      clustered: Boolean, force: String => Boolean = _ => false):
+      (Map[String, Seq[String]], Supersession) = {
+    val fs = new Path(snap.basePath).getFileSystem(LakeIO.conf)
+    def dirOf(l: String): String = new Path(entryPath(l)).getParent.toString
+    val multi = snap.liveEntryLines.groupBy(dirOf).view.filter {
+      case (_, ls) =>
+        val fls = ls.map(entryPath)
+        val sizes = fls.map(f => fs.getFileStatus(new Path(f)).getLen)
+        ls.exists(force) || {
+          if (clustered) fls.size > 1 || sizes.sum > targetBytes
+          else fls.size > 1 && sizes.sum.toDouble / fls.size < targetBytes / 2.0
+        }
+    }.mapValues(_.map(entryPath)).toMap
+    (multi, snap.supersede(l => multi.contains(dirOf(l))))
   }
 
   /** Backfill per-file min/max stats onto the CURRENT committed view
@@ -2579,10 +2596,9 @@ object WeatherLakeV2Sink {
       basePath: String, fields: Seq[String]): Int = {
     require(fields.nonEmpty,
       "measureStats needs at least one raw_json field name to measure")
-    requirePayload(basePath, "json", "measureStats")
-    val snapshot = liveManifests(basePath)
-    val byManifest = entryLinesByManifest(basePath, snapshot)
-    val lines = byManifest.flatMap(_._2)
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload("json", "measureStats")
+    val lines = snap.liveEntryLines
     if (lines.isEmpty) return 0
     val files = lines.map(entryPath)
     val fieldsB = fields.toIndexedSeq
@@ -2606,14 +2622,27 @@ object WeatherLakeV2Sink {
         f -> fieldsB.zip(accs).flatMap { case (fd, a) =>
           a.stats.map(fd -> _) }.toMap
       }.collect().toMap
-    val newLines = lines.map { l =>
+    publishMeasured(snap, computed.getOrElse(_, Map.empty))
+    files.size
+  }
+
+  /** Publish a stats backfill, classic and typed: ONE layout-only commit
+    * superseding the whole snapshot that re-lists every live entry line
+    * with `measured(path)` merged over its stats (other fields survive,
+    * measured fields are replaced). The live mor directives ride the
+    * rollup — dropping one would resurrect its deleted rows — and so
+    * does the table's payload declaration.
+    */
+  private[sources] def publishMeasured(snap: LakeSnapshot,
+      measured: String => Map[String, FieldStats]): Unit = {
+    val lines = snap.liveEntryLines.map { l =>
       val p = entryPath(l)
-      val merged = lineStats(l) ++ computed.getOrElse(p, Map.empty)
+      val merged = lineStats(l) ++ measured(p)
       if (merged.isEmpty) p else s"$p\t${statsToJson(merged)}"
     }
-    publishCommit(basePath, "measure", snapshot = snapshot,
-      supersedes = snapshot, lines = newLines)
-    files.size
+    publishCommit(snap.basePath, "measure", snapshot = snap.live,
+      supersedes = snap.live, lines = lines ++ snap.morDirectives(snap.live),
+      payload = snap.payloadDirective)
   }
 
   /** Reclaim space after [[compact]]: delete data files referenced ONLY
@@ -2657,8 +2686,9 @@ object WeatherLakeV2Sink {
           "true)) only when no reader can be behind this table's head.")
     val fs = new Path(basePath).getFileSystem(LakeIO.conf)
     val mdir = new Path(basePath, ManifestDir)
-    val live = liveManifests(basePath)
-    val liveFiles = committedFiles(basePath).toSet
+    val snap = loadSnapshot(basePath)
+    val live = snap.live
+    val liveFiles = snap.liveEntryLines.map(entryPath).toSet
     // the CHANGE-FEED RETENTION CONTRACT (`cdfRetentionMs` table
     // property, resolved by the CALL face): a declared bootstrap/replay
     // window that even a forced zero-age vacuum honors — history
@@ -2671,14 +2701,14 @@ object WeatherLakeV2Sink {
     // be a horizon that resolves to missing paths.
     val cutoff = System.currentTimeMillis() -
       math.max(minAgeMs, cdfRetentionMs)
-    val superseded = manifestNames(basePath).filterNot(live.toSet)
+    val superseded = snap.names.filterNot(live.toSet)
     // live manifests' CHANGE-LOG and MOR-DELETE files are protected like
     // live data (a CDF stream that hasn't consumed the manifest still
     // needs its change files; live delete rows are part of the committed
     // VIEW); superseded manifests' auxiliary files are reclaimable with
     // their data
     val liveChanges = live.flatMap { n =>
-      val ls = readLines(fs, new Path(mdir, n))
+      val ls = snap.lines(n)
       changePaths(ls) ++ morDeletePaths(ls)
     }.toSet
     // TAGGED snapshots are RETENTION ROOTS (Iceberg refs): every file a
@@ -2695,8 +2725,8 @@ object WeatherLakeV2Sink {
     val tagSnaps = tagNames(basePath).map(n => readTag(basePath, n)) ++
       branchNames(basePath).map(n => readBranchBase(basePath, n))
     val taggedManifests = tagSnaps.flatten.toSet
-    val taggedFiles = tagSnaps.flatMap { snap =>
-      filesAsOf(basePath, snap) ++ snap.flatMap { n =>
+    val taggedFiles = tagSnaps.flatMap { tagged =>
+      filesAsOf(basePath, tagged) ++ tagged.flatMap { n =>
         val ls = readLines(fs, new Path(mdir, n))
         changePaths(ls) ++ morDeletePaths(ls)
       }
@@ -2716,7 +2746,7 @@ object WeatherLakeV2Sink {
     val candidates = scala.collection.mutable.Set.empty[String]
     val supersedesOf = scala.collection.mutable.Map.empty[String, Seq[String]]
     superseded.foreach { n =>
-      val lines = readLines(fs, new Path(mdir, n))
+      val lines = snap.lines(n)
       supersedesOf(n) = lines.filter(_.startsWith(SupersedesPrefix))
         .map(_.stripPrefix(SupersedesPrefix).trim)
       val present = (lines
@@ -2829,7 +2859,17 @@ object WeatherLakeV2Sink {
         s"CALL lake.system.drop_tag first to re-point it")
     val snap = liveManifests(basePath)
     require(snap.nonEmpty, s"cannot tag $basePath before its first commit")
-    fs.mkdirs(new Path(basePath, RefsDir))
+    writeRef(file, snap, s"tag '$name' already exists on $basePath (lost " +
+      "a concurrent create) — tags are IMMUTABLE; drop it first")
+    snap
+  }
+
+  /** Pin `snap` in a ref file (a JSON array of manifest names), atomic
+    * fail-if-exists: losing a concurrent create fails with `lostRace`.
+    */
+  private def writeRef(file: Path, snap: Seq[String], lostRace: String): Unit = {
+    val fs = file.getFileSystem(LakeIO.conf)
+    fs.mkdirs(file.getParent)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val arr = mapper.createArrayNode()
     snap.sorted.foreach(arr.add)
@@ -2840,18 +2880,25 @@ object WeatherLakeV2Sink {
         // connectors throw plain IOException — re-classify only when
         // the file verifiably appeared (a real IO fault stays an error)
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(
-            s"tag '$name' already exists on $basePath (lost a concurrent " +
-              "create) — tags are IMMUTABLE; drop it first")
+          throw new IllegalArgumentException(lostRace)
         case e: java.io.IOException if fs.exists(file) =>
-          throw new IllegalArgumentException(
-            s"tag '$name' already exists on $basePath (lost a concurrent " +
-              "create) — tags are IMMUTABLE; drop it first", e)
+          throw new IllegalArgumentException(lostRace, e)
       }
     try out.write(mapper.writeValueAsString(arr)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    snap
+  }
+
+  /** The manifest names a ref file pins ([[writeRef]]). */
+  private def readRef(file: Path): Seq[String] = {
+    val fs = file.getFileSystem(LakeIO.conf)
+    val in = fs.open(file)
+    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    val names = Seq.newBuilder[String]
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+      .forEach(n => names += n.asText())
+    names.result()
   }
 
   /** The manifest set a tag pins — loud on an unknown name, listing the
@@ -2864,14 +2911,7 @@ object WeatherLakeV2Sink {
       s"unknown ref '$name' on $basePath — existing tags: " +
         s"[${tagNames(basePath).mkString(", ")}]; branches: " +
         s"[${branchNames(basePath).mkString(", ")}]")
-    val in = fs.open(file)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(txt)
-    val names = Seq.newBuilder[String]
-    node.forEach(n => names += n.asText())
-    names.result()
+    readRef(file)
   }
 
   /** Drop a tag: the snapshot stops being a retention root and the next
@@ -2947,25 +2987,8 @@ object WeatherLakeV2Sink {
     // brand-new table's first commits are a legitimate thing to stage —
     // fast_forward then requires main to still be empty
     val snap = liveManifests(basePath)
-    fs.mkdirs(new Path(basePath, RefsDir))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    snap.sorted.foreach(arr.add)
-    val out =
-      try LakeIO.newOutput(fs, file, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(
-            s"branch '$name' already exists on $basePath (lost a " +
-              "concurrent create)")
-        case e: java.io.IOException if fs.exists(file) =>
-          throw new IllegalArgumentException(
-            s"branch '$name' already exists on $basePath (lost a " +
-              "concurrent create)", e)
-      }
-    try out.write(mapper.writeValueAsString(arr)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeRef(file, snap,
+      s"branch '$name' already exists on $basePath (lost a concurrent create)")
     snap
   }
 
@@ -2978,14 +3001,7 @@ object WeatherLakeV2Sink {
     if (!fs.exists(file)) throw new IllegalArgumentException(
       s"unknown branch '$name' on $basePath — existing branches: " +
         s"[${branchNames(basePath).mkString(", ")}]")
-    val in = fs.open(file)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(txt)
-    val names = Seq.newBuilder[String]
-    node.forEach(n => names += n.asText())
-    names.result()
+    readRef(file)
   }
 
   /** Names of a branch's staged manifests (its own commit history). */

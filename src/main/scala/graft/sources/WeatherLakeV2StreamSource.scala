@@ -234,27 +234,14 @@ object WeatherLakeV2StreamSource {
             // range over such a history would silently misattribute or
             // drop changes. Same loud contract as the streaming feed's
             // earliest bootstrap.
-            locally {
-              val fsv = new Path(path).getFileSystem(LakeIO.conf)
-              val mdirv = new Path(path, WeatherLakeV2Sink.ManifestDir)
-              val present = history.toSet
-              val missing = history.flatMap { n =>
-                val in = fsv.open(new Path(mdirv, n))
-                val ls =
-                  try scala.io.Source.fromInputStream(in, "UTF-8")
-                    .getLines().toList
-                  finally in.close()
-                ls.filter(_.startsWith(WeatherLakeV2Sink.SupersedesPrefix))
-                  .map(_.stripPrefix(WeatherLakeV2Sink.SupersedesPrefix).trim)
-              }.filterNot(present).distinct.sorted
-              if (missing.nonEmpty) throw new IllegalStateException(
-                "batch readChangeFeed: the commit history was vacuumed " +
-                  s"(superseded commits ${missing.mkString(", ")} were " +
-                  "reclaimed), so positional versions no longer denote " +
-                  "the original commits and the reclaimed changes are " +
-                  "unrecoverable. Read the live snapshot, or stream the " +
-                  "feed with startingAt = 'latest'.")
-            }
+            val log = WeatherLakeV2Sink.loadSnapshot(path)
+            if (log.reclaimed.nonEmpty) throw new IllegalStateException(
+              "batch readChangeFeed: the commit history was vacuumed " +
+                s"(superseded commits ${log.reclaimed.mkString(", ")} were " +
+                "reclaimed), so positional versions no longer denote " +
+                "the original commits and the reclaimed changes are " +
+                "unrecoverable. Read the live snapshot, or stream the " +
+                "feed with startingAt = 'latest'.")
             val start = version("startingVersion").getOrElse(
               throw new IllegalArgumentException(
                 "batch readChangeFeed requires startingVersion (the " +
@@ -272,15 +259,9 @@ object WeatherLakeV2StreamSource {
             val keep: String => Boolean =
               if (prune.isNoop) _ => true else prune.keepLine(path, _)
             history.slice(start, end + 1).flatMap { n =>
-              val p = new Path(mdir, n)
-              val commitTs = fs.getFileStatus(p).getModificationTime
-              val in = fs.open(p)
-              val lines =
-                try scala.io.Source.fromInputStream(in, "UTF-8")
-                  .getLines().toList
-                finally in.close()
-              WeatherLakeV2Sink.checkFormatVersion(n, lines)
-              cdcPartitions(n, commitTs, lines, keep)
+              val commitTs = fs.getFileStatus(new Path(mdir, n))
+                .getModificationTime
+              cdcPartitions(n, commitTs, log.lines(n), keep)
             }.toArray
           }
           override def planInputPartitions(): Array[InputPartition] = partitions
@@ -360,18 +341,7 @@ object WeatherLakeV2StreamSource {
       */
     override def initialOffset(): Offset = {
       if (cdc && !startLatest) {
-        val present = WeatherLakeV2Sink.manifestNames(path).toSet
-        val fs = new Path(path).getFileSystem(LakeIO.conf)
-        val mdir = new Path(path, WeatherLakeV2Sink.ManifestDir)
-        val supersededNames = present.toSeq.flatMap { n =>
-          val in = fs.open(new Path(mdir, n))
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            finally in.close()
-          lines.filter(_.startsWith(WeatherLakeV2Sink.SupersedesPrefix))
-            .map(_.stripPrefix(WeatherLakeV2Sink.SupersedesPrefix).trim)
-        }
-        val missing = supersededNames.filterNot(present).distinct.sorted
+        val missing = WeatherLakeV2Sink.loadSnapshot(path).reclaimed
         if (missing.nonEmpty) throw new IllegalStateException(
           "WeatherLakeV2StreamSource: readChangeFeed from 'earliest' " +
             "predates the vacuum horizon — superseded commits " +

@@ -149,14 +149,43 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "totally unrelated words here"))
       .toDF("doc_id", "text")
-    val sh = Dedup.simhash(docs).cache()
-    val a = sh.as("a"); val b = sh.as("b")
-    val d = a.join(b, col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id"),
-        Dedup.hammingDist(col("a.simhash"), col("b.simhash")).as("d"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    def distances(df: DataFrame, textCol: String): Map[(Long, Long), Long] = {
+      val sh = Dedup.simhash(df, textCol = textCol)
+      val a = sh.as("a"); val b = sh.as("b")
+      a.join(b, col("a.id") < col("b.id"))
+        .select(col("a.id"), col("b.id"),
+          Dedup.hammingDist(col("a.simhash"), col("b.simhash")).as("d"))
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    }
+    val d = distances(docs, "text")
     assert(d((1L, 2L)) == 0L)
     assert(d((1L, 3L)) > 0L)
+    // the text column is referenced as a column, never spliced into SQL
+    // text: a name that needs quoting yields the same distances
+    assert(distances(docs.withColumnRenamed("text", "body text"),
+      "body text") == d)
+  }
+
+  test("charGramJaccardPairs: renamed text and block columns give the " +
+      "same pairs as the defaults") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "web", "the quick brown fox jumps over the lazy dog"),
+      (2L, "web", "the quick brown fox jumps over the lazy dog!"),
+      (3L, "web", "an entirely different sentence about parquet"),
+      (4L, "news", "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "source", "text")
+    def pairs(df: DataFrame, blockCol: String, textCol: String) =
+      Dedup.charGramJaccardPairs(df, blockCol, 5, 0.6, textCol = textCol)
+        .select(col("doc_a"), col("doc_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(docs, "source", "text")
+    // 1 and 2 share a block and nearly every 5-gram; 4 is identical to 1
+    // but in another block, 3 shares no block-mate's grams
+    assert(got == Set((1L, 2L)))
+    assert(pairs(docs.withColumnRenamed("text", "body text")
+      .withColumnRenamed("source", "doc source"), "doc source",
+      "body text") == got)
   }
 
   test("connectedComponents labels chains and keeps components separate") {

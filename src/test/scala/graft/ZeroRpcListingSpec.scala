@@ -121,6 +121,18 @@ class ZeroRpcListingSpec extends SparkSpec {
     assert(CountingFs.lists.get() == dirsOf(pq))
   }
 
+  test("a list mixing filesystems resolves each path through its own") {
+    val (_, txt) = prepared
+    val localHead = "file:" + new Path(txt.head).toUri.getPath
+    CountingFs.reset()
+    val df = DriverListing.textFrame(spark, localHead +: txt.tail)
+    // the store paths still take the batched-listing branch
+    assert(CountingFs.stats.get() == 0,
+      s"getFileStatus during construction: ${CountingFs.stats.get()}")
+    assert(CountingFs.lists.get() == dirsOf(txt.tail))
+    assert(df.count() == 40)
+  }
+
   test("a manifest-listed file missing from its directory fails loudly") {
     val (pq, _) = prepared
     val ghost = new Path(pq.head).getParent.toString + "/part-ghost.parquet"
