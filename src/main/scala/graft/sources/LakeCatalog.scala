@@ -660,12 +660,6 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  /** Resolve a procedure's `table` argument ('t' or 'ns.t', within this
-    * catalog) to the lake path.
-    */
-  private[sources] def resolveTableArg(tableName: String): String =
-    resolveTableProps(tableName)._1
-
   /** (location, marker properties) of a procedure's table argument — the
     * properties carry the typed schema when present, so maintenance verbs
     * can route to the right payload's implementation.
@@ -1406,8 +1400,8 @@ object LakeCatalog {
                 override def createBatchWriterFactory(
                     pi: org.apache.spark.sql.connector.write.PhysicalWriteInfo):
                     org.apache.spark.sql.connector.write.DataWriterFactory =
-                  new TypedLakeWriterFactory(path, tbl.tableSchema,
-                    tbl.partCols, sf, mrpf, tbl.bucketSpec)
+                  new WeatherLakeV2Sink.LakeWriterFactory(PayloadCodec.Parquet(
+                    path, tbl.tableSchema, tbl.partCols, sf, mrpf, tbl.bucketSpec))
                 override def commit(
                     messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
                   val entries = messages.collect {
@@ -1463,8 +1457,8 @@ object LakeCatalog {
                 override def createStreamingWriterFactory(
                     pi: org.apache.spark.sql.connector.write.PhysicalWriteInfo):
                     org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-                  new TypedLakeStreamingWriterFactory(path, tbl.tableSchema,
-                    tbl.partCols, sf, mrpf, tbl.bucketSpec)
+                  new WeatherLakeV2Sink.LakeWriterFactory(PayloadCodec.Parquet(
+                    path, tbl.tableSchema, tbl.partCols, sf, mrpf, tbl.bucketSpec))
                 override def commit(epochId: Long,
                     messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
                   tbl.wapBranch.foreach { b =>
@@ -2067,8 +2061,8 @@ object LakeCatalog {
       * `SparkPath` string is scheme-qualified and URL-encoded exactly
       * ONCE relative to the entry path (an escaped partition dir's
       * literal `%` arrives as `%25`) — `URI.getPath` strips the scheme
-      * and undoes that one encoding. Never apply `manifestJoinKey`
-      * here: it RE-encodes, and a literal-`%` path would double-encode
+      * and undoes that one encoding. Never key on the entry's raw URI
+      * path here: it RE-encodes, and a literal-`%` path would double-encode
       * past the delete targets (resurrecting their rows).
       */
     private def skipKeyOf(
@@ -2826,18 +2820,19 @@ object LakeCatalog {
         s"MorCompensatedCountScan: expected count(*) columns, got $s")
     }
 
-    /** Per-target deleted-ordinal COUNTS (raw disk-path keys) — one tiny
-      * job over the delete files, O(deleted rows).
+    /** Per-target deleted-ordinal COUNTS (raw disk-path keys): one
+      * distributed count of DISTINCT ordinals per target file (two delete
+      * files may name the same row), so the driver receives one row per
+      * targeted file, never the deleted rows themselves.
       */
     private lazy val skipCounts: Map[String, Long] = {
-      val spark = SparkSession.active
+      import org.apache.spark.sql.functions.{col, countDistinct}
       val files = morDeleteLines.map(WeatherLakeV2Sink.entryPath)
-      DriverListing.parquetFrame(spark, files, TypedLake.MorPosSchema)
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rows) =>
-          k -> rows.map(_.getLong(1)).distinct.length.toLong
-        }
+      DriverListing.parquetFrame(SparkSession.active, files,
+          TypedLake.MorPosSchema)
+        .groupBy(col(TypedLake.MorTargetCol))
+        .agg(countDistinct(col(TypedLake.MorPosCol)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
     override def toBatch: Batch = {
@@ -2929,24 +2924,6 @@ object LakeCatalog {
         case TypedBatchPartition(inner, factory) =>
           factory.supportColumnarReads(inner)
         case _ => false
-      }
-  }
-
-  class TypedLakeStreamingWriterFactory(path: String, schema: StructType,
-      partCols: Seq[String], statsFields: Seq[String],
-      maxRecordsPerFile: Long,
-      bucketSpec: Option[(String, Int)] = None)
-      extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long, epochId: Long):
-        org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-      new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-        private val w = new TypedLake.TypedTaskWriter(path, "b", schema,
-          partCols, statsFields, maxRecordsPerFile, bucketSpec)
-        override def write(row: InternalRow): Unit = w.write(row)
-        override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
-          WeatherLakeV2Sink.FilesWritten(w.closeAll())
-        override def abort(): Unit = w.abortAll()
-        override def close(): Unit = ()
       }
   }
 
@@ -3067,24 +3044,6 @@ object LakeCatalog {
       } // replace: nothing published — the table is untouched
 
     private def fs(dir: String) = new Path(dir).getFileSystem(conf)
-  }
-
-  class TypedLakeWriterFactory(path: String, schema: StructType,
-      partCols: Seq[String], statsFields: Seq[String],
-      maxRecordsPerFile: Long,
-      bucketSpec: Option[(String, Int)] = None)
-      extends org.apache.spark.sql.connector.write.DataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long):
-        org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-      new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-        private val w = new TypedLake.TypedTaskWriter(path, "b", schema,
-          partCols, statsFields, maxRecordsPerFile, bucketSpec)
-        override def write(row: InternalRow): Unit = w.write(row)
-        override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
-          WeatherLakeV2Sink.FilesWritten(w.closeAll())
-        override def abort(): Unit = w.abortAll()
-        override def close(): Unit = ()
-      }
   }
 
   /** Scan with the two standard pushdowns. Column pruning reaches the

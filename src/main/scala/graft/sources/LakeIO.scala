@@ -22,7 +22,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  2. Hadoop's local-FS create tax: without libhadoop (none in this
   *     container class), `RawLocalFileSystem.setPermission` shells out to
   *     `chmod` for EVERY created file (16 of 60 samples inside
-  *     `ProcessImpl.forkAndExec` under `writeRolled`), and
+  *     `ProcessImpl.forkAndExec` under the classic rewrite), and
   *     `ChecksumFileSystem` doubles the file count and write volume with
   *     `.crc` siblings. Both are pure overhead here: the manifest commit
   *     protocol (staged write + atomic rename publish) is what guards

@@ -2,16 +2,10 @@ package graft.sources
 
 import java.util.UUID
 
-import scala.collection.mutable
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, SafeProjection, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, lit, raise_error}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
 import org.apache.spark.sql.types._
 
 /** TYPED, Parquet-backed lake tables — the general form of the manifest
@@ -35,8 +29,8 @@ import org.apache.spark.sql.types._
   *    pruning and filter pushdown to the Parquet scan, footer/row-group
   *    stats skipping, partition columns recovered from `k=v` directories
   *    — nothing reimplemented;
-  *  - WRITES are a DSv2 `DataWriter[InternalRow]` around the engine's
-  *    [[ParquetOutputWriter]], routing each row to its partition
+  *  - WRITES go through [[PayloadCodec.Parquet]], a task writer around
+  *    the engine's `ParquetOutputWriter`, routing each row to its partition
   *    directory and accumulating per-file min/max for `statsFields`
   *    FROM THE TYPED COLUMN VALUES into the manifest entry lines — the
   *    same stats format the driver-side skipping layer already prunes
@@ -54,7 +48,7 @@ import org.apache.spark.sql.types._
   * whole-line JSON parsing.
   */
 object TypedLake {
-  import WeatherLakeV2Sink.{FieldAcc, FieldStats, LakeSnapshot, entryPath, lineStats, loadSnapshot, manifestJoinKey, partitionValues, statsToJson}
+  import WeatherLakeV2Sink.{FieldStats, LakeSnapshot, entryPath, lineStats, loadSnapshot, partitionValues}
 
   val Payload = "parquet"
 
@@ -196,250 +190,6 @@ object TypedLake {
   def dataSchema(schema: StructType, partCols: Seq[String]): StructType =
     StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
 
-  /** The Hadoop conf a Parquet write task needs: the engine's
-    * [[ParquetWriteSupport]] reads these keys in `init` (normally set by
-    * ParquetFileFormat.prepareWrite from the session conf — here pinned
-    * to the modern defaults so executor tasks need no session).
-    */
-  private[sources] def parquetTaskConf(data: StructType,
-      bloomFor: Seq[String] = Nil): Configuration = {
-    // copy, not fresh: this conf is mutated below, but the copy
-    // constructor clones the already-parsed properties instead of
-    // re-reading the default XML resources per writer task
-    val conf = new Configuration(LakeIO.conf)
-    conf.set("parquet.write.support.class", classOf[ParquetWriteSupport].getName)
-    ParquetWriteSupport.setSchema(data, conf)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    conf.set("parquet.compression", "snappy")
-    // BLOOM FILTERS for the stats-tracked columns: min/max prunes point
-    // lookups on a high-cardinality key only when the layout is sorted
-    // (post-ZORDER); the bloom filter prunes row groups regardless of
-    // layout — `WHERE doc_id = <k>` on an unsorted table skips every
-    // row group the key cannot be in, at a few bits per distinct value.
-    // The engine's parquet READER consults them automatically
-    // (parquet.filter.bloom.enabled defaults true) for pushed equality
-    // predicates — no read-side change needed.
-    bloomFor.foreach(c => conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
-    conf
-  }
-
-  private def taskAttemptContext(conf: Configuration):
-      org.apache.hadoop.mapreduce.TaskAttemptContext = {
-    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
-      new TaskAttemptID(new TaskID(new JobID("graft-typed", 0),
-        TaskType.MAP, 0), 0))
-  }
-
-  /** Executor-side rolling Parquet writer for ONE task: routes each
-    * [[InternalRow]] (full table schema) into its partition directory,
-    * writes the DATA columns through the engine's [[ParquetOutputWriter]],
-    * rolls at `maxRecordsPerFile` (0 = never), and accumulates per-file
-    * min/max for `statsFields` from the typed values (rendered through
-    * `CAST(col AS STRING)`, the same comparison domain [[FieldStats]]
-    * prunes in). `closeAll()` returns the MANIFEST ENTRY LINES — files
-    * are invisible until a manifest lists them, exactly the classic
-    * discipline.
-    */
-  private[sources] final class TypedTaskWriter(basePath: String, op: String,
-      schema: StructType, partCols: Seq[String], statsFields: Seq[String],
-      maxRecordsPerFile: Long,
-      bucketSpec: Option[(String, Int)] = None) {
-    // (column index, type, bucket count) of a hash-bucketed table —
-    // every row routes to the file of its bucket ([[bucketId]])
-    private val bucket: Option[(Int, DataType, Int)] = bucketSpec.map {
-      case (c, n) =>
-        val i = schema.fieldIndex(c)
-        (i, schema(i).dataType, n)
-    }
-    private val partIdx = partCols.map(schema.fieldIndex).toArray
-    private val dataFields = schema.fields.zipWithIndex
-      .filterNot { case (_, i) => partIdx.contains(i) }
-    private val data = StructType(dataFields.map(_._1))
-    private val dataProj = UnsafeProjection.create(dataFields.map {
-      case (f, i) => BoundReference(i, f.dataType, f.nullable) }.toSeq)
-    // one canonical rendering per partition value: CAST(col AS STRING)
-    // (dates → yyyy-MM-dd), escaped with the engine's own path escaping
-    // so read-side partition recovery (InMemoryFileIndex unescape)
-    // round-trips exactly
-    private val partProj = SafeProjection.create(partIdx.toSeq.map { i =>
-      Cast(BoundReference(i, schema(i).dataType, schema(i).nullable),
-        StringType, Some("UTC"))
-    })
-    private val statsIdx = statsFields.map(schema.fieldIndex).toArray
-    private val statsProj = SafeProjection.create(statsIdx.toSeq.map { i =>
-      Cast(BoundReference(i, schema(i).dataType, schema(i).nullable),
-        StringType, Some("UTC"))
-    })
-    // stats-tracked DATA columns also get parquet bloom filters
-    // (partition columns live in the path, not in the file). The conf
-    // key must carry the data field's EXACT name — a statsField spelled
-    // in different case (tolerated everywhere else) would otherwise
-    // silently write no bloom filter
-    private val conf = parquetTaskConf(data,
-      bloomFor = statsFields.flatMap(f =>
-        data.fieldNames.find(_.equalsIgnoreCase(f))))
-    private val ctx = taskAttemptContext(conf)
-
-    private final class OpenFile(val path: String) {
-      val writer = new ParquetOutputWriter(path, ctx)
-      var rows = 0L
-      // the stats comparison domain is pinned by the DECLARED column type
-      // (numeric columns → numeric min/max, everything else → lexical),
-      // matching measureStatsTyped — a string column of numeric-looking
-      // values must still carry LEXICAL endpoints, because its runtime
-      // comparisons are lexical
-      val accs: Array[FieldAcc] = statsIdx.map(i => new FieldAcc(
-        forceDomain = Some(schema(i).dataType.isInstanceOf[NumericType])))
-      def entryLine(): String = {
-        val st = statsFields.zip(accs)
-          .flatMap { case (f, a) => a.stats.map(f -> _) }.toMap
-        if (st.isEmpty) path else s"$path\t${statsToJson(st)}"
-      }
-    }
-    private val open = mutable.Map.empty[String, OpenFile]
-    private val entries = mutable.ArrayBuffer.empty[String]
-
-    private def dirOf(row: InternalRow): String = {
-      var k = 0
-      while (k < partIdx.length) {
-        if (row.isNullAt(partIdx(k))) throw new IllegalArgumentException(
-          s"TypedLake: NULL in partition column '${partCols(k)}' — " +
-            "partition values are path segments and cannot be null")
-        k += 1
-      }
-      if (partIdx.isEmpty) basePath
-      else {
-        val rendered = partProj(row)
-        val sb = new StringBuilder(basePath)
-        var i = 0
-        while (i < partIdx.length) {
-          sb.append('/').append(partCols(i)).append('=')
-            .append(ExternalCatalogUtils.escapePathName(
-              rendered.getUTF8String(i).toString))
-          i += 1
-        }
-        sb.toString
-      }
-    }
-
-    def write(row: InternalRow): Unit = {
-      val dir = dirOf(row)
-      val b = bucket.map { case (i, dt, n) =>
-        bucketId(if (row.isNullAt(i)) null else row.get(i, dt), dt, n)
-      }
-      val key = b.map(k => s"$dir#$k").getOrElse(dir)
-      var f = open.getOrElseUpdate(key, newFile(dir, b))
-      if (maxRecordsPerFile > 0 && f.rows >= maxRecordsPerFile) {
-        f.writer.close()
-        entries += f.entryLine()
-        f = newFile(dir, b)
-        open.update(key, f)
-      }
-      if (statsIdx.nonEmpty) {
-        val rendered = statsProj(row)
-        var k = 0
-        while (k < statsIdx.length) {
-          if (!row.isNullAt(statsIdx(k)))
-            f.accs(k).add(rendered.getUTF8String(k).toString)
-          k += 1
-        }
-      }
-      f.writer.write(dataProj(row))
-      f.rows += 1
-    }
-
-    private def newFile(dir: String, b: Option[Int] = None): OpenFile = {
-      val fs = new Path(dir).getFileSystem(conf)
-      fs.mkdirs(new Path(dir))
-      // the count suffix stamps the file's bucket GENERATION — what a
-      // later bucket-count evolution classifies files by (legacy
-      // unstamped markers resolve to the pre-evolution count)
-      val prefix = b.map(k => s"part-b${k}c${bucket.get._3}")
-        .getOrElse("part")
-      new OpenFile(new Path(dir,
-        s"$prefix-$op-${UUID.randomUUID().toString}.parquet").toString)
-    }
-
-    /** Close every open file and return all entry lines written by this
-      * task (path, or path + TAB + stats JSON).
-      */
-    def closeAll(): Seq[String] = {
-      open.values.foreach { f => f.writer.close(); entries += f.entryLine() }
-      open.clear()
-      entries.toSeq
-    }
-
-    /** Abort: close and delete everything this task wrote (nothing was
-      * published — the files would only ever be unreferenced orphans, but
-      * a failed task can clean its own mess immediately).
-      */
-    def abortAll(): Unit = {
-      open.values.foreach { f =>
-        try f.writer.close() catch { case _: Exception => () }
-        val p = new Path(f.path)
-        try p.getFileSystem(conf).delete(p, false)
-        catch { case _: Exception => () }
-      }
-      open.clear()
-    }
-  }
-
-  /** Distributed rewrite used by the typed DML ops: write `df` (full
-    * table schema, any column order) as partition-routed Parquet files
-    * and return their manifest ENTRY LINES. Rows are shuffled by the
-    * partition columns first so each directory's rows land in few tasks
-    * (same move as the classic writeRolled's repartition-by-dir).
-    */
-  private[sources] def writeTypedFrame(df: DataFrame, basePath: String,
-      op: String, schema: StructType, partCols: Seq[String],
-      statsFields: Seq[String], maxRecordsPerFile: Long,
-      bucketSpec: Option[(String, Int)] = None): Seq[String] = {
-    val aligned = df.select(schema.fieldNames.map(col).toSeq: _*)
-    // bucketed tables (flat on disk) cluster by the routing hash so each
-    // bucket's rows land in ONE task → one marked file per bucket per
-    // write; identity-partitioned tables shuffle by their directories
-    val routed = bucketSpec match {
-      case Some((c, n)) =>
-        aligned.repartition(n, org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.hash(col(c)), lit(n)))
-      case None if partCols.isEmpty => aligned
-      case None => aligned.repartition(partCols.map(col): _*)
-    }
-    writeArranged(routed, basePath, op, schema, partCols, statsFields,
-      maxRecordsPerFile, bucketSpec)
-  }
-
-  /** Write `rows` (the table's columns, in order) as already arranged —
-    * one [[TypedTaskWriter]] per partition, no re-shuffle, so a sort
-    * within partitions survives into the rolled files — and return the
-    * entry lines.
-    */
-  private def writeArranged(rows: DataFrame, basePath: String, op: String,
-      schema: StructType, partCols: Seq[String], statsFields: Seq[String],
-      maxRecordsPerFile: Long,
-      bucketSpec: Option[(String, Int)] = None): Seq[String] = {
-    val base = basePath
-    val sch = schema
-    val pc = partCols
-    val sf = statsFields
-    val mrpf = maxRecordsPerFile
-    val bs = bucketSpec
-    rows.queryExecution.toRdd.mapPartitions { it =>
-      val w = new TypedTaskWriter(base, op, sch, pc, sf, mrpf, bs)
-      try {
-        it.foreach(w.write)
-        w.closeAll().iterator
-      } catch { case e: Throwable => w.abortAll(); throw e }
-    }.collect().toSeq // bounded: entry lines, O(written files) metadata
-  }
-
   // -----------------------------------------------------------------
   // column RENAME via name mapping (schema-metadata-carried)
   // -----------------------------------------------------------------
@@ -543,8 +293,8 @@ object TypedLake {
     }
     if (manifestId.exists(WeatherLakeV2Sink.manifestExists(basePath, _)))
       return // exactly-once replay: already published
-    val entries = writeTypedFrame(df, basePath, "b", schema, partCols,
-      statsFields, maxRecordsPerFile, bucketSpec)
+    val entries = PayloadCodec.Parquet(basePath, schema, partCols, statsFields,
+      maxRecordsPerFile, bucketSpec).write(df, "b")
     WeatherLakeV2Sink.writeManifest(basePath, id, entries,
       payload = Some(Payload))
   }
@@ -562,8 +312,8 @@ object TypedLake {
     // main appends (the catalog's WAP path shares main's writer and
     // only swaps the commit destination) — staged files carry their
     // markers, so the zero-exchange layout survives fast_forward
-    val entries = writeTypedFrame(df, basePath, "b", schema, partCols,
-      statsFields, maxRecordsPerFile = 0L, bucketSpec = bucketSpec)
+    val entries = PayloadCodec.Parquet(basePath, schema, partCols, statsFields,
+      bucketSpec = bucketSpec).write(df, "b")
     WeatherLakeV2Sink.branchCommit(basePath, branch,
       UUID.randomUUID().toString, entries, payload = Some(Payload))
   }
@@ -582,48 +332,6 @@ object TypedLake {
       k -> ExternalCatalogUtils.unescapePathName(v)
     }
 
-  /** The spellings the engine's `_metadata.file_path` can report for
-    * `file`, MOST AUTHORITATIVE FIRST — computed once per file on the
-    * DRIVER, so the scan side carries no per-row path normalization at
-    * all (`file_path` is constant per reader split; the old
-    * `regexp_replace(input_file_name(), …)` paid a regex per data row).
-    * The engine reports `scheme:` + URL-ENCODED raw path
-    * (probe-verified `file:/…%20…` for an escaped partition dir) —
-    * that form leads; the decoded qualified string, the caller's
-    * spelling and the bare join key ride along as aliases.
-    */
-  private def filePathSpellings(file: String,
-      fs: org.apache.hadoop.fs.FileSystem): Seq[String] = {
-    val p = new Path(file)
-    val q = fs.makeQualified(p)
-    val u = q.toUri
-    val auth = Option(u.getAuthority).map("//" + _).getOrElse("")
-    val encodedQualified = s"${u.getScheme}:$auth${u.getRawPath}"
-    Seq(encodedQualified, q.toString, file, manifestJoinKey(file)).distinct
-  }
-
-  /** The broadcast (reported spelling → manifest entry path) map of a
-    * framed read. Alias spellings of one file can collide with another
-    * file's authoritative form (a literal `%20` vs an escaped space):
-    * each spelling keeps its HIGHEST-priority owner, and the engine
-    * always reports the priority-0 form — a lookup can never land on a
-    * shadowed alias. ONE Configuration + cached FileSystem for the
-    * whole list — constructing a Configuration is an XML parse, and
-    * per-file construction turns O(files) driver work into seconds on
-    * an accumulated table.
-    */
-  private def filePathMap(files: Seq[String]): Seq[(String, String)] = {
-    if (files.isEmpty) return Seq.empty
-    val fs = new Path(files.head).getFileSystem(LakeIO.conf)
-    files
-      .flatMap { f =>
-        filePathSpellings(f, fs).zipWithIndex
-          .map { case (s, pri) => (s, f, pri) }
-      }
-      .groupBy(_._1).valuesIterator
-      .map(_.minBy(_._3)).map(t => (t._1, t._2)).toSeq
-  }
-
   /** Candidate files of a typed op as a frame carrying `__file` (the
     * manifest-joinable path) and — when `withPos` — `__pos`, the row's
     * ordinal within its data file (the engine's `_metadata.row_index`,
@@ -637,32 +345,15 @@ object TypedLake {
   private[graft] def framedTyped(spark: SparkSession, basePath: String,
       schema: StructType, files: Seq[String],
       withPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     val session = spark
     import session.implicits._
-    val keyed = filePathMap(files)
-    val base = DriverListing.parquetFrame(spark, files,
-      widenedSchema(schema), Map("basePath" -> basePath))
-    // ONE select over the raw relation: `_metadata` is a metadata column
-    // and must be projected before any other Project hides it; renamed
-    // columns fold their historical spellings here too
-    val cols = (if (withPos)
-        Seq(col("_metadata.row_index").as(PosFrameCol)) else Seq.empty) ++
-      Seq(col("_metadata.file_path").as("__path")) ++
-      schema.fieldNames.toSeq.map(mappedCol(schema))
-    // LEFT join + loud per-row guard, not an inner join: an engine
-    // spelling the driver map did not anticipate (a Spark/Hadoop upgrade
-    // changing SparkPath's encoding or authority rendering) must FAIL the
-    // rewrite, never silently drop that file's rows from a DELETE/UPDATE/
-    // MERGE (which would be data loss). The guard is a constant-per-split
-    // coalesce, zero cost on the matched path.
-    base.select(cols: _*)
-      .join(broadcast(keyed.toDF("__path", "__file")), Seq("__path"), "left")
-      .withColumn("__file", coalesce(col("__file"), raise_error(concat(
-        lit("TypedLake.framedTyped: engine-reported file_path spelling " +
-          "not in the driver spelling map (path-encoding drift?): "),
-        col("__path")))))
-      .drop("__path")
+    // renamed columns fold their historical spellings in the same select
+    PayloadCodec.tiedToEntries(
+      DriverListing.parquetFrame(spark, files, widenedSchema(schema),
+        Map("basePath" -> basePath)),
+      (if (withPos) Seq(col("_metadata.row_index").as(PosFrameCol))
+       else Seq.empty) ++ schema.fieldNames.toSeq.map(mappedCol(schema)),
+      PayloadCodec.entrySpellings(files).toDF("__path", "__file"))
   }
 
   // -----------------------------------------------------------------
@@ -939,11 +630,10 @@ object TypedLake {
     // plus the table's stats columns over the OLD IMAGES, so a
     // predicate-filtered read can skip whole delete files whose deleted
     // rows provably cannot match ([[applicableDeleteLines]])
-    writeTypedFrame(routed, s"$basePath/$MorDeleteDir", "mordelete",
-      morDeleteSchema(schema), Seq.empty,
-      MorTargetCol +: statsFields.filter(f =>
+    PayloadCodec.Parquet(s"$basePath/$MorDeleteDir", morDeleteSchema(schema),
+      statsFields = MorTargetCol +: statsFields.filter(f =>
         schema.fieldNames.exists(_.equalsIgnoreCase(f))),
-      maxRecordsPerFile)
+      maxRecordsPerFile = maxRecordsPerFile).write(routed, "mordelete")
   }
 
   /** Write a frame of POSITION delete rows ([[MorPosSchema]] shape)
@@ -957,8 +647,9 @@ object TypedLake {
       maxRecordsPerFile: Long): Seq[String] = {
     val routed = if (deletedRows <= MorDeleteCoalesceRows)
       deleteRows.coalesce(1) else deleteRows
-    writeTypedFrame(routed, s"$basePath/$MorDeleteDir", "morpos",
-      MorPosSchema, Seq.empty, Seq(MorTargetCol), maxRecordsPerFile)
+    PayloadCodec.Parquet(s"$basePath/$MorDeleteDir", MorPosSchema,
+      statsFields = Seq(MorTargetCol), maxRecordsPerFile = maxRecordsPerFile)
+      .write(routed, "morpos")
   }
 
   /** MERGE-ON-READ DELETE — the rewrite-amplification answer (Delta
@@ -1033,9 +724,9 @@ object TypedLake {
             col("__file").as(MorTargetCol) +:
               schema.fieldNames.toSeq.map(col): _*),
             m.count, basePath, schema, maxRecordsPerFile, statsFields)
-        val dataFiles = images(m.rows).toSeq.flatMap(writeTypedFrame(_,
-          basePath, s"mor$op", schema, partCols, statsFields,
-          maxRecordsPerFile, bucketSpec))
+        val dataFiles = images(m.rows).toSeq.flatMap(PayloadCodec.Parquet(basePath,
+          schema, partCols, statsFields, maxRecordsPerFile, bucketSpec)
+          .write(_, s"mor$op"))
         publishMor(snap, s"mor$op", dataFiles, deleteFiles, inReadDomain)
         (m, dataFiles.size + deleteFiles.size)
       }
@@ -1137,8 +828,8 @@ object TypedLake {
     // appended data files carry the table's write-time stats like every
     // other append — mor-merged data must not quietly fall out of the
     // skipping/bloom layer until a compaction
-    val newDataFiles = writeTypedFrame(appendRows, basePath, "mormerge",
-      schema, partCols, statsFields, maxRecordsPerFile, bucketSpec)
+    val newDataFiles = PayloadCodec.Parquet(basePath, schema, partCols, statsFields,
+      maxRecordsPerFile, bucketSpec).write(appendRows, "mormerge")
     if (newDeleteFiles.isEmpty && newDataFiles.isEmpty)
       return WeatherLakeV2Sink.MergeStats(0, 0) // true no-op: no commit
     publishMor(snap, "mormerge", newDataFiles, newDeleteFiles, inReadDomain)
@@ -1221,8 +912,8 @@ object TypedLake {
           framedTyped(spark, basePath, schema, targets,
             withPos = liveDeletes.exists(isPosDelete)), liveDeletes)
           .select(schema.fieldNames.toSeq.map(col): _*)
-        writeTypedFrame(resolved, basePath, "reconcile", schema, partCols,
-          statsFields, maxRecordsPerFile, bucketSpec)
+        PayloadCodec.Parquet(basePath, schema, partCols, statsFields, maxRecordsPerFile,
+          bucketSpec).write(resolved, "reconcile")
       }
     // every live directive is consumed (all applicable targets rewritten,
     // the rest dangling), so NOTHING is carried over — that is the point.
@@ -1325,10 +1016,7 @@ object TypedLake {
         // construction; the count sizes the coalesce like every mor write
         val n = rows.count()
         if (n == 0L) Seq.empty
-        else writeTypedFrame(
-          if (n <= MorDeleteCoalesceRows) rows.coalesce(1) else rows,
-          s"$basePath/$MorDeleteDir", "morpos", MorPosSchema, Seq.empty,
-          Seq(MorTargetCol), maxRecordsPerFile)
+        else writeMorPosDeleteFiles(rows, n, basePath, maxRecordsPerFile)
     }
     // every directive-carrying manifest is superseded with its DATA lines
     // re-listed verbatim; its directives are replaced, not carried
@@ -1397,9 +1085,8 @@ object TypedLake {
     def hit(df: DataFrame) = coalesce(predicate(df), lit(false))
     snap.matchPass(inReadDomain, "__file", resolved, hit).map { m =>
       val sup = snap.supersedeFiles(m.touched)
-      val newFiles = writeTypedFrame(rewrite(resolved(m.touched), hit),
-        basePath, op, schema, partCols, statsFields, maxRecordsPerFile,
-        bucketSpec)
+      val newFiles = PayloadCodec.Parquet(basePath, schema, partCols, statsFields,
+        maxRecordsPerFile, bucketSpec).write(rewrite(resolved(m.touched), hit), op)
       WeatherLakeV2Sink.publishCommit(basePath, op, snapshot = snap.live,
         supersedes = sup.manifests, lines = sup.lines(newFiles),
         readDomain = Some(inReadDomain), payload = Some(Payload))
@@ -1543,8 +1230,8 @@ object TypedLake {
       .as(n)
     }
     val rewrite = joined.filter(keepRow).select(outCols: _*)
-    val newFiles = writeTypedFrame(rewrite, basePath, "merge", schema,
-      partCols, statsFields, maxRecordsPerFile, bucketSpec)
+    val newFiles = PayloadCodec.Parquet(basePath, schema, partCols, statsFields,
+      maxRecordsPerFile, bucketSpec).write(rewrite, "merge")
     WeatherLakeV2Sink.publishCommit(basePath, "merge", snapshot = snap.live,
       supersedes = sup.manifests, lines = sup.lines(newFiles),
       readDomain = Some(inReadDomain), payload = Some(Payload))
@@ -1651,72 +1338,40 @@ object TypedLake {
     */
   def changesBetweenTyped(spark: SparkSession, basePath: String,
       schema: StructType, keyCols: Seq[String],
-      from: Seq[String], to: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{array, explode, struct, when}
+      from: Seq[String], to: Seq[String]): DataFrame =
+    typedChanges(spark, schema, keyCols)(
+      WeatherLakeV2Sink.resolvedAsOf(basePath, from),
+      WeatherLakeV2Sink.resolvedAsOf(basePath, to))
+
+  /** [[WeatherLakeV2Sink.changeDiff]] over typed frames. MERGE-ON-READ
+    * widening: a mor delete changes NO file set — its effect lives in the
+    * delete-file DIFFERENCE. Files present on BOTH sides whose applicable
+    * delete rows changed are re-read on both sides (each side resolved
+    * through ITS OWN delete set) and key-diffed like rewritten files;
+    * cost stays O(changed files + delete bytes), never O(table).
+    */
+  private def typedChanges(spark: SparkSession, schema: StructType,
+      keyCols: Seq[String])(from: LakeSnapshot, to: LakeSnapshot): DataFrame = {
     val names = schema.fieldNames.toSeq
     require(keyCols.nonEmpty && keyCols.forall(names.contains),
       s"TypedLake: CDF key columns (${keyCols.mkString(", ")}) must be " +
         s"table columns (${names.mkString(", ")})")
-    val dataCols = names.filterNot(keyCols.contains)
-    val fromFiles = WeatherLakeV2Sink.filesAsOf(basePath, from).toSet
-    val toFiles = WeatherLakeV2Sink.filesAsOf(basePath, to).toSet
-    val fromDeleteLines = WeatherLakeV2Sink.morDeleteLinesAsOf(basePath, from)
-    val toDeleteLines = WeatherLakeV2Sink.morDeleteLinesAsOf(basePath, to)
-    val fromDeletes = fromDeleteLines.map(entryPath)
-    val toDeletes = toDeleteLines.map(entryPath)
-    val removed = (fromFiles -- toFiles).toSeq.sorted
-    val added = (toFiles -- fromFiles).toSeq.sorted
-    // MERGE-ON-READ widening: a mor delete changes NO file set — its
-    // effect lives in the delete-file DIFFERENCE. Files present on BOTH
-    // sides whose applicable delete rows changed are re-read on both
-    // sides (each side resolved through ITS OWN delete set) and
-    // key-diffed like rewritten files; cost stays O(changed files +
-    // delete bytes), never O(table).
-    val deleteDiff = ((fromDeletes.toSet -- toDeletes.toSet) ++
-      (toDeletes.toSet -- fromDeletes.toSet)).toSeq.sorted
-    val changedTargets: Seq[String] =
-      if (deleteDiff.isEmpty) Seq.empty
-      else morDeleteTargets(spark, schema, deleteDiff)
-        .filter(t => fromFiles(t) && toFiles(t)).toSeq.sorted
-    def resolvedSide(files: Seq[String], deleteLines: Seq[String]): DataFrame =
-      readResolvedSplit(spark, basePath, schema, files, deleteLines)
-    def tagged(df: DataFrame, change: String): DataFrame =
-      df.select(lit(change).as("_change") +: names.map(col): _*)
-    val oldOnlyEmpty = removed.isEmpty && changedTargets.isEmpty
-    val newOnlyEmpty = added.isEmpty && changedTargets.isEmpty
-    if (oldOnlyEmpty && newOnlyEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(StructField("_change", StringType, nullable = false) +:
-          schema.fields))
-    else if (oldOnlyEmpty)
-      tagged(resolvedSide(added, toDeleteLines), "insert")
-    else if (newOnlyEmpty)
-      tagged(resolvedSide(removed, fromDeleteLines), "delete")
-    else {
-      def side(files: Seq[String], deleteLines: Seq[String], tag: String): DataFrame =
-        resolvedSide(files, deleteLines).select(
-          keyCols.map(col) :+
-            struct(names.map(col): _*).as(s"__row_$tag"): _*)
-      val joined = side(removed ++ changedTargets, fromDeleteLines, "old")
-        .join(side(added ++ changedTargets, toDeleteLines, "new"),
-          keyCols, "full_outer")
-      val old = col("__row_old"); val neu = col("__row_new")
-      // all-column equality decides "changed" — dataCols compared
-      // null-safely; key-only rows (no data columns) never differ
-      val same = dataCols.map(c => old(c) <=> neu(c))
-        .foldLeft(lit(true))(_ && _)
-      joined.select(explode(
-          when(old.isNull,
-            array(struct(lit("insert").as("change"), neu.as("row"))))
-          .when(neu.isNull,
-            array(struct(lit("delete").as("change"), old.as("row"))))
-          .when(!same, array(
-            struct(lit("update_preimage").as("change"), old.as("row")),
-            struct(lit("update_postimage").as("change"), neu.as("row"))))
-          .otherwise(array())).as("c"))
-        .select(col("c.change").as("_change") +:
-          names.map(n => col(s"c.row.$n").as(n)): _*)
-    }
+    WeatherLakeV2Sink.changeDiff(spark, from, to, Payload,
+      "changesBetweenTyped",
+      StructType(StructField("_change", StringType, nullable = false) +:
+        schema.fields))(
+      (files, side) => readResolvedSplit(spark, side.basePath, schema, files,
+        side.liveMorDeleteLines),
+      df => keyCols.map(df(_)),
+      (fromFiles, toFiles) => {
+        val fromDeletes = from.liveMorDeleteLines.map(entryPath).toSet
+        val toDeletes = to.liveMorDeleteLines.map(entryPath).toSet
+        val deleteDiff =
+          ((fromDeletes -- toDeletes) ++ (toDeletes -- fromDeletes)).toSeq.sorted
+        if (deleteDiff.isEmpty) Seq.empty
+        else morDeleteTargets(spark, schema, deleteDiff)
+          .filter(t => fromFiles(t) && toFiles(t)).toSeq.sorted
+      })
   }
 
   /** Incremental typed CHANGE feed over a manifest cursor —
@@ -1731,20 +1386,9 @@ object TypedLake {
     */
   def readNewChangesTyped(spark: SparkSession, basePath: String,
       schema: StructType, keyCols: Seq[String], cursorPath: String):
-      (DataFrame, Seq[String]) = {
-    WeatherLakeV2Sink.requirePayload(basePath, Payload, "readNewChangesTyped")
-    val consumed = WeatherLakeV2Sink.consumedManifests(cursorPath).toSeq.sorted
-    // every manifest since the cursor, including already-superseded
-    // intermediates: they carry the supersedes CHAIN that tombstones the
-    // consumer's old manifests inside the `to` resolution (the classic
-    // reader's double-count rule, spec-pinned there)
-    val fresh = WeatherLakeV2Sink.manifestNames(basePath)
-      .filterNot(consumed.toSet)
-    val to = (consumed ++ fresh).distinct
-    (changesBetweenTyped(spark, basePath, schema, keyCols,
-      from = consumed, to = to),
-      WeatherLakeV2Sink.liveWithin(basePath, to))
-  }
+      (DataFrame, Seq[String]) =
+    WeatherLakeV2Sink.changesSinceCursor(basePath, cursorPath)(
+      typedChanges(spark, schema, keyCols))
 
   // -----------------------------------------------------------------
   // maintenance (typed)
@@ -1753,66 +1397,22 @@ object TypedLake {
   /** Typed stats backfill — [[WeatherLakeV2Sink.measureStats]]'s role
     * (ANALYZE: stats live in manifest entry lines, so re-measuring is a
     * metadata-only commit) with the measurement as ONE distributed
-    * aggregation over the typed columns: per-file min/max via
-    * `groupBy(input_file_name)`, numeric comparison domain decided by the
-    * column TYPE (not per-value parsing — the typed schema already knows).
+    * aggregation over the typed columns ([[PayloadCodec.Parquet.measure]]:
+    * per-file min/max, numeric comparison domain decided by the column
+    * TYPE, not per-value parsing — the typed schema already knows).
     */
   def measureStatsTyped(spark: SparkSession, basePath: String,
       schema: StructType, fields: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.{max, min}
     require(fields.nonEmpty,
       "measureStatsTyped needs at least one column name to measure")
-    val snap = loadSnapshot(basePath)
-    snap.requirePayload(Payload, "measureStatsTyped")
     val names = schema.fieldNames.toSeq
     fields.foreach { f =>
       require(names.contains(f),
         s"TypedLake: measure of unknown column '$f' (schema: " +
           s"${names.mkString(", ")})")
     }
-    val lines = snap.liveEntryLines
-    if (lines.isEmpty) return 0
-    val files = lines.map(entryPath)
-    val numericOf = fields.map(f =>
-      f -> schema(f).dataType.isInstanceOf[NumericType]).toMap
-    // aggregate the NATIVE values and render driver-side with the
-    // writer's exact canonical cast (`Cast(x AS STRING)` with the zone
-    // PINNED to UTC — statsProj's rendering). A DataFrame-level
-    // `.cast(StringType)` renders timestamps in the SESSION zone, so a
-    // non-UTC session's ANALYZE would write endpoints in a different
-    // domain than the write-time stats, the pruning layer's render()
-    // and the manifest-stats answer path (all UTC-pinned) — silently
-    // unsound pruning and wrong manifest-answered aggregates there.
-    val aggs = fields.flatMap(f => Seq(
-      min(col(f)).as(s"__min_$f"), max(col(f)).as(s"__max_$f")))
-    def canon(v: Any): Option[String] = Option(v).flatMap { x =>
-      val lit = org.apache.spark.sql.catalyst.expressions.Literal.create(x)
-      Option(Cast(lit, StringType, Some("UTC")).eval(null)).map(_.toString)
-    }
-    val perFile = framedTyped(spark, basePath, schema, files)
-      .groupBy(col("__file")).agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val stats = fields.zipWithIndex.flatMap { case (f, i) =>
-          val mn = canon(r.get(1 + 2 * i))
-          val mx = canon(r.get(2 + 2 * i))
-          (mn, mx) match {
-            case (Some(lo), Some(hi)) =>
-              // NaN poisons a numeric range (the engine orders NaN
-              // greatest and NaN = NaN holds, so no finite endpoint
-              // witnesses NaN rows): emit no stats for the field — fail
-              // open (FieldAcc applies the same rule at write time)
-              if (numericOf(f) && (lo == "NaN" || hi == "NaN")) None
-              else Some(f -> FieldStats(lo, hi, numericOf(f)))
-            case _ => None
-          }
-        }.toMap
-        r.getString(0) -> stats
-      }.toMap // O(files x fields) driver metadata, the manifest-read class
-    // stats are measured from FILE bytes, mor-unresolved — sound (a
-    // superset's min/max bounds the resolved rows)
-    WeatherLakeV2Sink.publishMeasured(snap, p =>
-      perFile.getOrElse(manifestJoinKey(p), perFile.getOrElse(p, Map.empty)))
-    files.size
+    WeatherLakeV2Sink.measureCommitted(spark,
+      PayloadCodec.Parquet(basePath, schema), fields, "measureStatsTyped")
   }
 
   /** BUCKET-PRESERVING compaction for hash-bucketed tables: every
@@ -1873,9 +1473,9 @@ object TypedLake {
     val rows = readResolvedSplit(spark, basePath, schema, victims,
       snap.liveMorDeleteLines)
     // route through the bucket writer: one task per bucket, markers on
-    val newFiles = writeTypedFrame(rows, basePath, "compact", schema,
-      Seq.empty, statsFields, maxRecordsPerFile,
-      Some((bucketCol, numBuckets)))
+    val newFiles = PayloadCodec.Parquet(basePath, schema, statsFields = statsFields,
+      maxRecordsPerFile = maxRecordsPerFile,
+      bucketSpec = Some((bucketCol, numBuckets))).write(rows, "compact")
     WeatherLakeV2Sink.publishCommit(basePath, "compact",
       snapshot = snap.live, supersedes = sup.manifests,
       lines = sup.lines(newFiles),
@@ -1953,22 +1553,11 @@ object TypedLake {
             (targetBytes.toDouble / (inputBytes.toDouble / inputRows)).toLong)
         }
       }
-    val arranged = clusterExpr match {
-      case Some(e) if partCols.nonEmpty =>
-        rows.repartition(partCols.map(col): _*)
-          .sortWithinPartitions(partCols.map(col) :+ e(rows): _*)
-      case Some(e) => rows.repartition(1).sortWithinPartitions(e(rows))
-      case None => rows
-    }
-    // writeTypedFrame re-shuffles only when clusterExpr is absent (its
-    // own repartition); for clustered runs write the arranged frame
-    // directly so the sort survives into the rolled files
-    val newFiles =
-      if (clusterExpr.isDefined)
-        writeArranged(arranged.select(schema.fieldNames.map(col).toSeq: _*),
-          basePath, "compact", schema, partCols, statsFields, effectiveMrpf)
-      else writeTypedFrame(rows, basePath, "compact", schema, partCols,
+    // clustered runs sort each partition directory's rows by the
+    // expression after the route, so the sort survives into rolled files
+    val newFiles = PayloadCodec.Parquet(basePath, schema, partCols,
         statsFields, effectiveMrpf)
+      .write(rows, "compact", sortWithin = clusterExpr.map(e => e(rows)).toSeq)
     // the empty read domain arms the directive-conflict scan: a mor
     // delete/merge publishing since this compaction's snapshot targets
     // data-file paths this rewrite may have just replaced — loud

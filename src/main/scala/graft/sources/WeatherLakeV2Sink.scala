@@ -3,8 +3,6 @@ package graft.sources
 import java.util
 import java.util.UUID
 
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -20,8 +18,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * V2 form of `Weather.writeLake`. The reference's S3 writer routes each
   * raw JSON payload to a Hive-style key
   * `city=<c>/ds=<yyyy-mm-dd>/hour=<hh>/` (s3_writer.py:59-61); here every
-  * executor-side [[LakeDataWriter]] does that routing for its partition of
-  * rows — fully distributed, no driver involvement per row.
+  * executor-side task writer ([[PayloadCodec.JsonLines]]) does that
+  * routing for its partition of rows — fully distributed, no driver
+  * involvement per row.
   *
   * {{{
   * df.select(col("city"), col("ds"), col("hour"),
@@ -191,7 +190,7 @@ object WeatherLakeV2Sink {
                 "semantics; use batch INSERT OVERWRITE")
             override def createStreamingWriterFactory(
                 pi: PhysicalWriteInfo): StreamingDataWriterFactory =
-              new LakeStreamingWriterFactory(path, statsFields)
+              new LakeWriterFactory(path, statsFields)
             override def commit(epochId: Long,
                 messages: Array[WriterCommitMessage]): Unit = {
               val files = messages.collect { case FilesWritten(ps) => ps }
@@ -204,13 +203,6 @@ object WeatherLakeV2Sink {
         }
       }
     }
-  }
-
-  class LakeStreamingWriterFactory(path: String, statsFields: Seq[String])
-      extends StreamingDataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long,
-        epochId: Long): DataWriter[InternalRow] =
-      new LakeDataWriter(path, partitionId, taskId, statsFields)
   }
 
   /** Directory of per-job manifests under the lake root. */
@@ -374,8 +366,11 @@ object WeatherLakeV2Sink {
     * "parquet" (typed tables). O(1): payload is uniform across a table's
     * manifests (enforced at publish), so ONE manifest answers for all.
     */
-  def payloadFormat(basePath: String): String = {
-    val names = manifestNames(basePath)
+  def payloadFormat(basePath: String): String =
+    payloadOf(basePath, manifestNames(basePath))
+
+  /** [[payloadFormat]] decided from a listing already taken. */
+  private def payloadOf(basePath: String, names: Seq[String]): String =
     if (names.isEmpty) "json"
     else {
       val fs = new Path(basePath).getFileSystem(LakeIO.conf)
@@ -383,20 +378,20 @@ object WeatherLakeV2Sink {
       checkFormatVersion(names.head, lines)
       manifestPayload(lines).getOrElse("json")
     }
-  }
 
   /** Loud payload gate for format-specific data paths: the JSON-line
     * functions must never scan Parquet bytes as text (and vice versa) —
     * a misrouted read is garbage, not an error, so the route is checked.
     */
-  private[sources] def requirePayload(basePath: String, expected: String,
+  private[graft] def requirePayload(basePath: String, expected: String,
       who: String): Unit = {
     // an EMPTY lake (no manifests yet) has no committed payload to
     // misread — any route may be its first writer (the first MERGE into
     // a fresh typed table is legitimate; the gate exists to stop a
     // mis-routed read of COMMITTED bytes, not first contact)
-    if (manifestNames(basePath).isEmpty) return
-    checkPayload(basePath, expected, payloadFormat(basePath), who)
+    val names = manifestNames(basePath)
+    if (names.nonEmpty)
+      checkPayload(basePath, expected, payloadOf(basePath, names), who)
   }
 
   private def checkPayload(basePath: String, expected: String,
@@ -517,7 +512,7 @@ object WeatherLakeV2Sink {
     val existing = manifestNames(basePath)
     if (existing.nonEmpty) {
       val declared = payload.getOrElse("json")
-      val actual = payloadFormat(basePath)
+      val actual = payloadOf(basePath, existing)
       if (declared != actual) throw new IllegalStateException(
         s"WeatherLakeV2Sink: refusing to publish a '$declared'-payload " +
           s"manifest into the lake at $basePath whose commits hold " +
@@ -1148,6 +1143,18 @@ object WeatherLakeV2Sink {
   def readNewChanges(spark: org.apache.spark.sql.SparkSession,
       basePath: String, cursorPath: String,
       key: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column):
+      (org.apache.spark.sql.DataFrame, Seq[String]) =
+    changesSinceCursor(basePath, cursorPath)(classicChanges(spark, key))
+
+  /** The cursor step of both incremental change feeds: the consumer's
+    * integrated view (the consumed manifests) and the view after every
+    * manifest since, each resolved once as a captured snapshot; `diff`
+    * classifies the rows between them. Returns the changes and the LIVE
+    * resolution of the new view, the set [[replaceCursor]] records.
+    */
+  private[sources] def changesSinceCursor(basePath: String,
+      cursorPath: String)(diff: (LakeSnapshot, LakeSnapshot) =>
+        org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, Seq[String]) = {
     val consumed = consumedManifests(cursorPath).toSeq.sorted
     // fresh = EVERY manifest since the cursor, including ones already
@@ -1158,19 +1165,9 @@ object WeatherLakeV2Sink {
     // leave the old manifests un-tombstoned in-set and double-count
     // every untouched row (spec-pinned).
     val fresh = manifestNames(basePath).filterNot(consumed.toSet)
-    val to = (consumed ++ fresh).distinct
-    (changesBetween(spark, basePath, from = consumed, to = to, key),
-      liveWithin(basePath, to))
+    val to = resolvedAsOf(basePath, (consumed ++ fresh).distinct)
+    (diff(resolvedAsOf(basePath, consumed), to), to.live.sorted)
   }
-
-  /** The manifests of `set` that still contribute files after in-set
-    * supersedes resolution — the NAMES twin of [[filesAsOf]]'s file
-    * resolution (same present/tombstone rules; a member vacuum
-    * reclaimed is simply absent). Shared by the classic and typed feeds.
-    */
-  private[sources] def liveWithin(basePath: String,
-      set: Seq[String]): Seq[String] =
-    snapshotWithin(basePath, set).live.sorted
 
   /** Durably mark manifests consumed: rewrite the cursor with the union of
     * old and new names ([[replaceCursor]] mechanics). The commit readers'
@@ -1302,6 +1299,16 @@ object WeatherLakeV2Sink {
     */
   private def survivingLinesAsOf(basePath: String,
       snap: Seq[String]): Seq[String] = {
+    val within = resolvedAsOf(basePath, snap)
+    within.live.flatMap(within.lines)
+  }
+
+  /** A captured snapshot resolved within itself: supersedes honored only
+    * inside the set, and a member vacuum reclaimed without a superseding
+    * replacement in the set fails loudly.
+    */
+  private[sources] def resolvedAsOf(basePath: String,
+      snap: Seq[String]): LakeSnapshot = {
     val within = snapshotWithin(basePath, snap)
     // vacuum reclaims superseded manifests with their files: a snapshot
     // manifest that is GONE but superseded within the snapshot is exactly
@@ -1316,7 +1323,7 @@ object WeatherLakeV2Sink {
         "WeatherLakeV2Sink.readAsOf: snapshot predates the vacuum horizon; " +
           s"manifests reclaimed without a superseding replacement: " +
           lost.toSeq.sorted.mkString(", "))
-    within.live.flatMap(within.lines)
+    within
   }
 
   /** CHANGE DATA FEED between two captured snapshots (the Delta CDF /
@@ -1337,47 +1344,92 @@ object WeatherLakeV2Sink {
     *
     * Returns (change, value): change ∈ insert / delete /
     * update_preimage / update_postimage; value is the raw committed
-    * line. The change classification is one full-outer equi-join on the
-    * key over only the differing files, then a single codegen'd
-    * explode — no second pass, no driver data.
+    * line. Classified by [[changeDiff]].
     */
   def changesBetween(spark: org.apache.spark.sql.SparkSession,
       basePath: String, from: Seq[String], to: Seq[String],
       key: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column):
+      org.apache.spark.sql.DataFrame =
+    classicChanges(spark, key)(resolvedAsOf(basePath, from),
+      resolvedAsOf(basePath, to))
+
+  /** [[changeDiff]] over JSON lines: the row is the raw line, keyed over
+    * the [[Schema]]-framed frame; classic tables carry no mor deletions.
+    */
+  private def classicChanges(spark: org.apache.spark.sql.SparkSession,
+      key: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column)(
+      from: LakeSnapshot, to: LakeSnapshot): org.apache.spark.sql.DataFrame =
+    changeDiff(spark, from, to, "json", "changesBetween",
+      StructType(Seq(StructField("change", StringType),
+        StructField("value", StringType))))(
+      (files, snap) => framedLines(spark, snap.basePath, files),
+      df => Seq(key(df)))
+
+  /** The snapshot-diff core of both change feeds, classic and typed:
+    * rows are compared only inside the file-set DIFFERENCE of `from` and
+    * `to` — files common to both are untouched by construction and never
+    * read, so the cost is O(changed files), not O(table) — plus
+    * `reread(fromFiles, toFiles)`, common files whose mor deletions
+    * changed. `read(files, side)` frames a side's files (resolved through
+    * that side's own deletions); `key` is the row identity over that
+    * frame (unique per snapshot — duplicates would fan the join out).
+    * `shape` is the output: the change column, then the row columns.
+    *
+    * A key only in `to` emits `insert`; only in `from`, `delete`; in both
+    * with any row column different (null-safe), `update_preimage` +
+    * `update_postimage`; in both with equal rows it is a copy-on-write
+    * survivor rewrite, NOT a change, and emits nothing. One full-outer
+    * equi-join on the key, then one codegen'd explode — no second pass,
+    * no driver data. Both snapshots are payload-checked from their own
+    * read.
+    */
+  private[sources] def changeDiff(spark: org.apache.spark.sql.SparkSession,
+      from: LakeSnapshot, to: LakeSnapshot, payload: String, who: String,
+      shape: StructType)(
+      read: (Seq[String], LakeSnapshot) => org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.DataFrame => Seq[org.apache.spark.sql.Column],
+      reread: (Set[String], Set[String]) => Seq[String] = (_, _) => Nil):
       org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
-    requirePayload(basePath, "json", "changesBetween")
-    val fromFiles = filesAsOf(basePath, from).toSet
-    val toFiles = filesAsOf(basePath, to).toSet
-    val removed = (fromFiles -- toFiles).toSeq.sorted
-    val added = (toFiles -- fromFiles).toSeq.sorted
-    def keyed(files: Seq[String], valueAs: String): org.apache.spark.sql.DataFrame = {
-      val f = framedLines(spark, basePath, files)
-      f.select(key(f).as("__key"), col("value").as(valueAs))
+    from.requirePayload(payload, who)
+    to.requirePayload(payload, who)
+    val fromFiles = from.liveEntryLines.map(entryPath).toSet
+    val toFiles = to.liveEntryLines.map(entryPath).toSet
+    val again = reread(fromFiles, toFiles)
+    val removed = (fromFiles -- toFiles).toSeq.sorted ++ again
+    val added = (toFiles -- fromFiles).toSeq.sorted ++ again
+    val changeCol = shape.fieldNames.head
+    val out = shape.fieldNames.toSeq.tail
+    def tagged(df: DataFrame, change: String): DataFrame =
+      df.select(lit(change).as(changeCol) +: out.map(df(_)): _*)
+    def side(files: Seq[String], snap: LakeSnapshot, as: String): DataFrame = {
+      val df = read(files, snap)
+      df.select(key(df).zipWithIndex.map { case (k, i) => k.as(s"__key$i") } :+
+        struct(out.map(df(_)): _*).as(as): _*)
     }
-    val session = spark
-    import session.implicits._
-    def tagged(files: Seq[String], change: String): org.apache.spark.sql.DataFrame =
-      framedLines(session, basePath, files)
-        .select(lit(change).as("change"), col("value"))
     if (removed.isEmpty && added.isEmpty)
-      session.emptyDataset[(String, String)].toDF("change", "value")
-    else if (removed.isEmpty) tagged(added, "insert")
-    else if (added.isEmpty) tagged(removed, "delete")
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), shape)
+    else if (removed.isEmpty) tagged(read(added, to), "insert")
+    else if (added.isEmpty) tagged(read(removed, from), "delete")
     else {
-      val changes = keyed(removed, "__old")
-        .join(keyed(added, "__new"), Seq("__key"), "full_outer")
+      val olds = side(removed, from, "__old")
+      val old = col("__old"); val neu = col("__new")
+      val same = out.map(c => old(c) <=> neu(c)).reduce(_ && _)
+      olds.join(side(added, to, "__new"),
+          olds.columns.toSeq.filter(_.startsWith("__key")), "full_outer")
         .select(explode(
-          when(col("__old").isNull,
-            array(struct(lit("insert").as("change"), col("__new").as("value"))))
-          .when(col("__new").isNull,
-            array(struct(lit("delete").as("change"), col("__old").as("value"))))
-          .when(col("__old") =!= col("__new"),
-            array(
-              struct(lit("update_preimage").as("change"), col("__old").as("value")),
-              struct(lit("update_postimage").as("change"), col("__new").as("value"))))
-          .otherwise(array())).as("c")) // identical line: survivor rewrite
-      changes.select(col("c.change").as("change"), col("c.value").as("value"))
+          when(old.isNull,
+            array(struct(lit("insert").as("change"), neu.as("row"))))
+          .when(neu.isNull,
+            array(struct(lit("delete").as("change"), old.as("row"))))
+          .when(!same, array(
+            struct(lit("update_preimage").as("change"), old.as("row")),
+            struct(lit("update_postimage").as("change"), neu.as("row"))))
+          .otherwise(array())).as("c"))
+        .select(col("c.change").as(changeCol) +:
+          out.map(n => col(s"c.row.$n").as(n)): _*)
     }
   }
 
@@ -1701,121 +1753,6 @@ object WeatherLakeV2Sink {
       readDomain = Some(conflictDomain), payload = payload)
   }
 
-  /** Strips `scheme:` AND `//authority` from a URI string, leaving the
-    * raw path — `hdfs://nn:8020/p` → `/p`, `file:/tmp/x` → `/tmp/x`,
-    * `file:///tmp/x` → `/tmp/x`, a bare `/tmp/x` unchanged. The ONE
-    * normalization both sides of the read-line ↔ manifest-entry join
-    * apply: an earlier form stripped only the scheme and collapsed the
-    * slashes (`hdfs://nn:8020/p` → `/nn:8020/p`), which could never
-    * match the manifest side's `toUri.getRawPath` (`/p`) — on any
-    * filesystem URI with an authority the inner join matched zero rows
-    * and silently turned merge into a blind append (spec-pinned against
-    * [[manifestJoinKey]] on authority-bearing URIs now).
-    */
-  private[graft] val SchemeAuthorityPattern = "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"
-
-  private[graft] def stripSchemeAuthority(uri: String): String =
-    uri.replaceFirst(SchemeAuthorityPattern, "")
-
-  /** The scan row's source file as a scheme-and-authority-stripped path,
-    * comparable to [[manifestJoinKey]] — the join key that ties a read
-    * line back to its manifest entry unambiguously (basenames are NOT
-    * assumed unique across directories). `input_file_name()` reports the
-    * URI form, i.e. URL-ENCODED (`city=New%20York`), so the manifest
-    * side must key on the RAW (encoded) URI path too — a decoded
-    * `toUri.getPath` key would never match a path containing any
-    * URL-encodable character and the inner join would silently drop
-    * those directories' rows.
-    */
-  private def filePathCol: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{input_file_name, regexp_replace}
-    regexp_replace(input_file_name(), SchemeAuthorityPattern, "")
-  }
-
-  /** The manifest-entry twin of [[filePathCol]]: the file's raw
-    * (URL-encoded) URI path, exactly what `input_file_name()` reports
-    * minus scheme and authority.
-    */
-  private[graft] def manifestJoinKey(file: String): String =
-    new Path(file).toUri.getRawPath
-
-  /** Distributed rolling writer shared by [[compact]],
-    * [[mergeCommitted]] and [[deleteCommitted]]: routes (dir, value)
-    * rows so each directory's lines land in `part-<op>-<uuid>` files
-    * rolled at `targetBytes`, returning the MANIFEST ENTRY LINES for
-    * the written files. Files are INVISIBLE until a manifest lists
-    * them — a died job leaves only manifest-less orphans.
-    *
-    * `sortWithin` clusters each directory's rows before writing (the
-    * OPTIMIZE ZORDER move: rolling a sorted stream at `targetBytes`
-    * gives every output file a TIGHT, near-disjoint value range, which
-    * is what makes the per-file stats below prunable). `statsFields`
-    * re-collects per-file min/max for the named raw_json fields into
-    * the returned entry lines — maintenance then REFRESHES skipping
-    * stats instead of erasing them on every rewrite.
-    */
-  private def writeRolled(rows: org.apache.spark.sql.DataFrame, op: String,
-      basePath: String, targetBytes: Long,
-      sortWithin: Seq[org.apache.spark.sql.Column] = Nil,
-      statsFields: Seq[String] = Nil): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val routed = rows.repartition(col("dir"))
-    val arranged =
-      if (sortWithin.isEmpty) routed
-      else routed.sortWithinPartitions(col("dir") +: sortWithin: _*)
-    arranged
-      .select(col("dir"), col("value"))
-      .mapPartitions { it =>
-        val pfs = new Path(basePath).getFileSystem(LakeIO.conf)
-        // per-dir open stream + bytes written since its last roll
-        val streams = mutable.Map.empty[String,
-          (java.io.OutputStream, Long)]
-        val entries = mutable.ArrayBuffer.empty[String]
-        val accs = mutable.Map.empty[String, Array[FieldAcc]]
-        val fileOfDir = mutable.Map.empty[String, String]
-        def entryLine(path: String): String = {
-          val st = accs.get(path).map(a =>
-            statsFields.zip(a).flatMap { case (f, acc) =>
-              acc.stats.map(f -> _) }.toMap).getOrElse(Map.empty)
-          if (st.isEmpty) path else s"$path\t${statsToJson(st)}"
-        }
-        def open(dir: String): (java.io.OutputStream, Long) = {
-          val f = new Path(dir, s"part-$op-${UUID.randomUUID().toString}.json")
-          fileOfDir(dir) = f.toString
-          if (statsFields.nonEmpty)
-            accs(f.toString) = Array.fill(statsFields.length)(new FieldAcc)
-          (LakeIO.newOutput(pfs, f, false), 0L)
-        }
-        it.foreach { row =>
-          val dir = row.getString(0)
-          val json = row.getString(1)
-          val bytes = json.getBytes("UTF-8")
-          var (out, n) = streams.getOrElseUpdate(dir, open(dir))
-          if (n > 0 && n + bytes.length + 1 > targetBytes) { // roll at the target
-            out.close()
-            entries += entryLine(fileOfDir(dir)) // flush the rolled file's entry
-            val fresh = open(dir)
-            out = fresh._1; n = fresh._2
-          }
-          if (statsFields.nonEmpty) {
-            val acc = accs(fileOfDir(dir))
-            var k = 0
-            while (k < statsFields.length) {
-              extractJsonField(json, statsFields(k)).foreach(acc(k).add)
-              k += 1
-            }
-          }
-          out.write(bytes)
-          out.write('\n')
-          streams.update(dir, (out, n + bytes.length + 1))
-        }
-        streams.values.foreach(_._1.close())
-        fileOfDir.values.foreach(entries += entryLine(_)) // still-open files
-        entries.iterator
-      }(org.apache.spark.sql.Encoders.STRING)
-      .collect().toSeq
-  }
-
   /** Write a commit's classified change rows — a (change, value) frame —
     * as rolled files under `_changes/` and return their manifest
     * DIRECTIVE lines ([[ChangesPrefix]]). The directives publish in the
@@ -1835,8 +1772,8 @@ object WeatherLakeV2Sink {
     // measured — extractJsonField finds the payload's top-level fields
     // through the change-kind prefix), so the CDC scan can stats-prune
     // change files exactly like data files
-    val directives = writeRolled(routed, s"changes-$op", basePath,
-      targetBytes, statsFields = statsFields)
+    val directives = PayloadCodec.JsonLines(basePath, statsFields, targetBytes)
+      .write(routed, s"changes-$op")
       .map(l => s"$ChangesPrefix$l")
     // zero net changes still mark the commit as LOGGED (see
     // [[ChangeLogEmptyDirective]]) — an #op merge/update manifest with
@@ -1845,34 +1782,33 @@ object WeatherLakeV2Sink {
   }
 
   /** Committed files re-framed to the write [[Schema]], shared by the
-    * copy-on-write row-level operations ([[mergeCommitted]],
-    * [[deleteCommitted]]): each line rides with its source `file`, its
-    * directory `dir` (survivor routing), its partition values recovered
-    * on the DRIVER via [[partitionValues]] (so the careful
-    * true-descendant logic isn't re-implemented in columns), and the
-    * line itself as `raw_json`. Per-file metadata rides a BROADCAST
-    * equi-join on the FULL scheme-stripped path (NOT the basename: a
-    * task-scoped writer may create same-named files in every directory
-    * it routes to, and a basename join would fan each line out to all
-    * of them).
+    * row-level operations, compaction and the change diff: each line
+    * rides with its manifest entry `file` (tied through
+    * `_metadata.file_path` and the driver's spelling map —
+    * [[PayloadCodec.tiedToEntries]]; basenames are NOT assumed unique
+    * across directories), its directory `dir` (survivor routing), its
+    * partition values recovered on the DRIVER via [[partitionValues]]
+    * (raw strings, the true-descendant rule — nothing is inferred over
+    * text), and the line itself as `raw_json`.
     */
   private def framedLines(spark: org.apache.spark.sql.SparkSession,
       basePath: String, files: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val session = spark
     import session.implicits._
-    val dirOf = files.map { f =>
+    val meta = files.map { f =>
       val pv = partitionValues(basePath, f)
-      (manifestJoinKey(f), f, new Path(f).getParent.toString,
+      f -> (new Path(f).getParent.toString,
         pv.get("city").orNull, pv.get("ds").orNull, pv.get("hour").orNull)
-    }
-    textFrame(session, files)
-      .select(filePathCol.as("path"), col("value"))
-      .join(broadcast(
-        dirOf.toDF("path", "file", "dir", "city", "ds", "hour")), "path")
-      .select(col("file"), col("dir"), col("value"),
-        col("city"), col("ds"), col("hour"),
-        col("value").as("raw_json"))
+    }.toMap
+    val entries = PayloadCodec.entrySpellings(files).map { case (s, f) =>
+      val (dir, city, ds, hour) = meta(f)
+      (s, f, dir, city, ds, hour)
+    }.toDF("__path", "__file", "dir", "city", "ds", "hour")
+    PayloadCodec.tiedToEntries(DriverListing.textFrame(session, files),
+        Seq(col("value")), entries)
+      .select(col("__file").as("file"), col("dir"), col("value"),
+        col("city"), col("ds"), col("hour"), col("value").as("raw_json"))
   }
 
   // -----------------------------------------------------------------
@@ -1917,11 +1853,11 @@ object WeatherLakeV2Sink {
     *     driver metadata against a broadcast-sized tuple set, no IO;
     *  2. ONE distributed pass finds the files actually touched: candidate
     *     lines semi-joined to batch keys (broadcast when small), distinct
-    *     `input_file_name` — the only data read before the rewrite, and
+    *     source files — the only data read before the rewrite, and
     *     only of candidate files;
     *  3. rewrite = surviving lines of touched files (anti-join on key)
     *     unioned with the batch, rolled to `targetBytes` files per
-    *     directory ([[writeRolled]] — distributed, no driver data);
+    *     directory ([[PayloadCodec.write]] — distributed, no driver data);
     *  4. validate-and-publish ONE manifest by atomic rename
     *     ([[publishCommit]]), superseding ONLY the manifests owning a
     *     touched file and re-listing their untouched entries verbatim —
@@ -2043,8 +1979,8 @@ object WeatherLakeV2Sink {
             .select(col("dir"), col("value"))
           survivors.unionByName(batchRouted)
         }
-      val newFiles = writeRolled(rewrite, "merge", basePath, targetBytes,
-        statsFields = statsFields)
+      val newFiles = PayloadCodec.JsonLines(basePath, statsFields, targetBytes)
+        .write(rewrite, "merge")
       val changeLines =
         if (!changeLog) Seq.empty
         else {
@@ -2143,7 +2079,7 @@ object WeatherLakeV2Sink {
     *     re-list their ORIGINAL manifest entry lines verbatim (per-file
     *     stats survive, exactly as merge/compact re-list);
     *  3. survivors of touched files (predicate not true) are rewritten
-    *     into rolled files ([[writeRolled]] — distributed, no driver
+    *     into rolled files ([[PayloadCodec.write]] — distributed, no driver
     *     data); a file whose every row matched simply vanishes;
     *  4. ONE manifest validated-and-published by atomic rename
     *     ([[publishCommit]]) supersedes only the touched manifests —
@@ -2215,8 +2151,8 @@ object WeatherLakeV2Sink {
       .map { m =>
         val sup = snap.supersedeFiles(m.touched)
         val tf = framedLines(spark, basePath, m.touched)
-        val newFiles = writeRolled(rewrite(tf, hit), op, basePath,
-          targetBytes, statsFields = statsFields)
+        val newFiles = PayloadCodec.JsonLines(basePath, statsFields,
+          targetBytes).write(rewrite(tf, hit), op)
         val changeLines =
           if (!changeLog) Seq.empty
           else writeChangeLog(changes(tf, hit), op, basePath, targetBytes,
@@ -2510,28 +2446,18 @@ object WeatherLakeV2Sink {
       clusterExpr: Option[org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.Column] = None,
       statsFields: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     require(targetBytes > 0, "targetBytes must be positive")
     val snap = loadSnapshot(basePath)
     snap.requirePayload("json", "compact")
     val (multi, sup) = compactionPlan(snap, targetBytes, clusterExpr.isDefined)
     if (multi.isEmpty) 0
     else {
-      val session = spark
-      import session.implicits._
-      // full-path join, same reason as mergeCommitted: basenames are not
-      // unique across directories (a task routes same-named files into
-      // every directory it touches)
-      val dirOfPath = multi.toSeq.flatMap { case (d, fls) =>
-        fls.map(f => (manifestJoinKey(f), d)) }
-      val rows = DriverListing
-        .textFrame(session, multi.values.flatten.toSeq)
-        .select(filePathCol.as("path"), col("value"))
-        .join(broadcast(dirOfPath.toDF("path", "dir")), "path")
+      // each line keeps its own file's directory (the candidacy key)
+      val rows = framedLines(spark, basePath, multi.values.flatten.toSeq)
         .select(col("dir"), col("value"))
-      val newFiles = writeRolled(rows, "compact", basePath, targetBytes,
-        sortWithin = clusterExpr.map(e => e(rows)).toSeq,
-        statsFields = statsFields)
+      val newFiles = PayloadCodec.JsonLines(basePath, statsFields, targetBytes)
+        .write(rows, "compact", sortWithin = clusterExpr.map(e => e(rows)).toSeq)
       // no readDomain: compaction rewrites LAYOUT only — rows committed
       // after the snapshot live in manifests this commit never touches,
       // so a concurrent append can't invalidate it; the supersedes check
@@ -2580,69 +2506,49 @@ object WeatherLakeV2Sink {
     * metadata commit, not a data rewrite.
     *
     * One task per committed file runs the exact accumulator the writer
-    * uses ([[FieldAcc]] over [[extractJsonField]] — identical numeric/
-    * lexicographic semantics, so a backfilled file prunes exactly like a
-    * write-time-measured one), the driver collects O(files x fields)
-    * stats (bounded metadata, the same class as the manifest read
-    * itself), and ONE layout-only superseding manifest re-lists every
-    * entry line with the merged stats — existing stats for OTHER fields
-    * survive, requested fields are recomputed. The commit is validated
-    * at publish like checkpoint: a racing append stays live untouched, a
-    * racing rewrite of a snapshot manifest makes this commit lose
-    * loudly. The change feed ignores it (layout-only `#op measure`).
+    * uses ([[PayloadCodec.JsonLines.measure]]), the driver collects
+    * O(files x fields) stats (bounded metadata, the same class as the
+    * manifest read itself), and ONE layout-only superseding manifest
+    * re-lists every entry line with the merged stats ([[measureCommitted]]).
     * Returns the number of files measured.
     */
   def measureStats(spark: org.apache.spark.sql.SparkSession,
       basePath: String, fields: Seq[String]): Int = {
     require(fields.nonEmpty,
       "measureStats needs at least one raw_json field name to measure")
-    val snap = loadSnapshot(basePath)
-    snap.requirePayload("json", "measureStats")
-    val lines = snap.liveEntryLines
-    if (lines.isEmpty) return 0
-    val files = lines.map(entryPath)
-    val fieldsB = fields.toIndexedSeq
-    val computed: Map[String, Map[String, FieldStats]] =
-      spark.sparkContext.parallelize(files, files.size).map { f =>
-        val fs = new Path(f).getFileSystem(LakeIO.conf)
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(fs.open(new Path(f)), "UTF-8"))
-        val accs = Array.fill(fieldsB.length)(new FieldAcc)
-        try {
-          var line = in.readLine()
-          while (line != null) {
-            var k = 0
-            while (k < fieldsB.length) {
-              extractJsonField(line, fieldsB(k)).foreach(accs(k).add)
-              k += 1
-            }
-            line = in.readLine()
-          }
-        } finally in.close()
-        f -> fieldsB.zip(accs).flatMap { case (fd, a) =>
-          a.stats.map(fd -> _) }.toMap
-      }.collect().toMap
-    publishMeasured(snap, computed.getOrElse(_, Map.empty))
-    files.size
+    measureCommitted(spark, PayloadCodec.JsonLines(basePath), fields,
+      "measureStats")
   }
 
-  /** Publish a stats backfill, classic and typed: ONE layout-only commit
-    * superseding the whole snapshot that re-lists every live entry line
-    * with `measured(path)` merged over its stats (other fields survive,
-    * measured fields are replaced). The live mor directives ride the
-    * rollup — dropping one would resurrect its deleted rows — and so
-    * does the table's payload declaration.
+  /** The stats backfill, classic and typed: ONE snapshot read and payload
+    * check; an empty lake measures nothing; otherwise `codec` measures
+    * `fields` per live file and ONE layout-only commit superseding the
+    * whole snapshot re-lists every live entry line with the measured
+    * stats merged over its own (other fields survive, measured fields are
+    * replaced). The live mor directives ride the rollup — dropping one
+    * would resurrect its deleted rows — and so does the table's payload
+    * declaration. Validated at publish like checkpoint: a racing append
+    * stays live untouched, a racing rewrite of a snapshot manifest makes
+    * this commit lose loudly; the change feed ignores it (layout-only
+    * `#op measure`). Returns the number of files measured.
     */
-  private[sources] def publishMeasured(snap: LakeSnapshot,
-      measured: String => Map[String, FieldStats]): Unit = {
+  private[sources] def measureCommitted(
+      spark: org.apache.spark.sql.SparkSession, codec: PayloadCodec,
+      fields: Seq[String], who: String): Int = {
+    val snap = loadSnapshot(codec.basePath)
+    snap.requirePayload(codec.payload, who)
+    val files = snap.liveEntryLines.map(entryPath)
+    if (files.isEmpty) return 0
+    val measured = codec.measure(spark, files, fields)
     val lines = snap.liveEntryLines.map { l =>
       val p = entryPath(l)
-      val merged = lineStats(l) ++ measured(p)
+      val merged = lineStats(l) ++ measured.getOrElse(p, Map.empty)
       if (merged.isEmpty) p else s"$p\t${statsToJson(merged)}"
     }
     publishCommit(snap.basePath, "measure", snapshot = snap.live,
       supersedes = snap.live, lines = lines ++ snap.morDirectives(snap.live),
       payload = snap.payloadDirective)
+    files.size
   }
 
   /** Reclaim space after [[compact]]: delete data files referenced ONLY
@@ -3038,8 +2944,9 @@ object WeatherLakeV2Sink {
       lines: Seq[String], payload: Option[String] = None): Unit = {
     if (!branchExists(basePath, name)) createBranch(basePath, name)
     val declared = payload.getOrElse("json")
-    val actual = payloadFormat(basePath)
-    if (manifestNames(basePath).nonEmpty && declared != actual)
+    val names = manifestNames(basePath)
+    lazy val actual = payloadOf(basePath, names)
+    if (names.nonEmpty && declared != actual)
       throw new IllegalStateException(
         s"WeatherLakeV2Sink: refusing to stage a '$declared'-payload " +
           s"branch commit on the lake at $basePath whose commits hold " +
@@ -3179,10 +3086,30 @@ object WeatherLakeV2Sink {
 
   final case class FilesWritten(paths: Seq[String]) extends WriterCommitMessage
 
-  class LakeWriterFactory(path: String, statsFields: Seq[String] = Seq.empty)
-      extends DataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-      new LakeDataWriter(path, partitionId, taskId, statsFields)
+  /** The DSv2 writer factory of every lake write face, batch and
+    * streaming, classic and typed: each task drives one
+    * [[PayloadCodec.TaskWriter]] of `codec`, commits its entry lines as
+    * [[FilesWritten]], and deletes its files on abort.
+    */
+  class LakeWriterFactory private[sources] (codec: PayloadCodec)
+      extends DataWriterFactory with StreamingDataWriterFactory {
+    /** The classic (JSON-line) append factory. */
+    def this(path: String, statsFields: Seq[String] = Seq.empty) =
+      this(PayloadCodec.JsonLines(path, statsFields, byPartition = true))
+
+    override def createWriter(partitionId: Int,
+        taskId: Long): DataWriter[InternalRow] =
+      new DataWriter[InternalRow] {
+        private val w = codec.taskWriter(codec.appendOp(partitionId, taskId))
+        override def write(row: InternalRow): Unit = w.write(row)
+        override def commit(): WriterCommitMessage = FilesWritten(w.closeAll())
+        override def abort(): Unit = w.abortAll()
+        override def close(): Unit = ()
+      }
+
+    override def createWriter(partitionId: Int, taskId: Long,
+        epochId: Long): DataWriter[InternalRow] =
+      createWriter(partitionId, taskId)
   }
 
   /** Per-file accumulator for one stats field: tracks lexical AND numeric
@@ -3294,81 +3221,5 @@ object WeatherLakeV2Sink {
       } else from = i + needle.length // matched inside a value; keep looking
     }
     None
-  }
-
-  /** Routes each row's JSON line into its `city=/ds=/hour=` directory,
-    * keeping one open stream per partition directory seen (bounded by the
-    * distinct key combinations in this task's rows), and — when
-    * `statsFields` is set — a per-file min/max accumulator per field,
-    * flushed into the manifest entry at commit. Production threads
-    * the real Hadoop conf through the factory; the default conf resolves
-    * local and default-FS paths, which is what this sandbox exercises.
-    */
-  class LakeDataWriter(basePath: String, partitionId: Int, taskId: Long,
-      statsFields: Seq[String] = Seq.empty)
-      extends DataWriter[InternalRow] {
-    private val fs = new Path(basePath).getFileSystem(LakeIO.conf)
-    private val streams = mutable.Map.empty[String, java.io.OutputStream]
-    private val written = mutable.ArrayBuffer.empty[String]
-    private val fileOfDir = mutable.Map.empty[String, String]
-    private val accs = mutable.Map.empty[String, Array[FieldAcc]]
-
-    override def write(row: InternalRow): Unit = {
-      // the catalog face's read schema is nullable (partition values are
-      // path-recovered), so the engine's write-side null check may not
-      // fire — without this guard a NULL key would interpolate into the
-      // path as the literal string "null" and silently become a real
-      // partition value
-      var c = 0
-      while (c < 4) {
-        if (row.isNullAt(c)) throw new IllegalArgumentException(
-          "WeatherLakeV2Sink: NULL in write column " +
-            s"'${Schema.fieldNames(c)}' — the lake row is three non-null " +
-            "partition keys plus one non-null payload line")
-        c += 1
-      }
-      val dir = s"city=${row.getString(0)}/ds=${row.getString(1)}/hour=${row.getString(2)}"
-      val out = streams.getOrElseUpdate(dir, {
-        // uuid per FILE (not per task): a task writing many directories
-        // must not reuse one basename across them — maintenance joins and
-        // human debugging both want globally unique names
-        val f = new Path(basePath,
-          s"$dir/part-$partitionId-$taskId-${UUID.randomUUID().toString}.json")
-        written += f.toString
-        fileOfDir(dir) = f.toString
-        accs(f.toString) = Array.fill(statsFields.length)(new FieldAcc)
-        LakeIO.newOutput(fs, f, false)
-      })
-      val json = row.getString(3)
-      if (statsFields.nonEmpty) {
-        val acc = accs(fileOfDir(dir)) // dir → file is 1:1 in this writer
-        var k = 0
-        while (k < statsFields.length) {
-          extractJsonField(json, statsFields(k)).foreach(acc(k).add)
-          k += 1
-        }
-      }
-      out.write(json.getBytes("UTF-8"))
-      out.write('\n')
-    }
-
-    override def commit(): WriterCommitMessage = {
-      streams.values.foreach(_.close())
-      val lines = written.toSeq.map { p =>
-        val st = accs.get(p).map(a =>
-          statsFields.zip(a).flatMap { case (f, acc) =>
-            acc.stats.map(f -> _) }.toMap).getOrElse(Map.empty)
-        if (st.isEmpty) p else s"$p\t${statsToJson(st)}"
-      }
-      FilesWritten(lines)
-    }
-
-    override def abort(): Unit = {
-      streams.values.foreach(s => try s.close() catch { case _: Exception => })
-      written.foreach(p => try fs.delete(new Path(p), false)
-        catch { case _: Exception => })
-    }
-
-    override def close(): Unit = ()
   }
 }

@@ -73,11 +73,6 @@ object Weather {
     df.withColumn("ds", date_format(col(tsCol), "yyyy-MM-dd"))
       .withColumn("hour", date_format(col(tsCol), "HH"))
 
-  /** O4: half-open extract window (etl_openmeteo.py:73-74). */
-  def windowFilter(df: DataFrame, startIso: String, endIso: String): DataFrame =
-    df.filter(col("timestamp") >= lit(startIso).cast("timestamp") &&
-      col("timestamp") < lit(endIso).cast("timestamp"))
-
   /** O5: local-time cutoff — drop hours at/after `cutoffHour` local time on
     * `cutoffDate` and everything after that date, in `tz`
     * (fetch_october_2025.py:93-97). Timezone-aware predicate over UTC ts.

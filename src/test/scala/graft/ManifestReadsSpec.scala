@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.sources.{LakeIO, TypedLake, WeatherLakeV2Sink}
 
 /** A local filesystem under its own scheme that counts opens of lake
-  * manifest files (`_manifests/manifest-*`).
+  * manifest files (`_manifests/manifest-*`) and listings of `_manifests/`.
   */
 class ManifestCountingFs extends RawLocalFileSystem {
   override def getScheme: String = "mcfs"
@@ -23,10 +23,16 @@ class ManifestCountingFs extends RawLocalFileSystem {
       ManifestCountingFs.opens.incrementAndGet()
     super.open(f, bufferSize)
   }
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == WeatherLakeV2Sink.ManifestDir)
+      ManifestCountingFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
 }
 
 object ManifestCountingFs {
   val opens = new AtomicInteger(0)
+  val listings = new AtomicInteger(0)
 }
 
 /** Every commit operation reads the table's manifest log once: one
@@ -160,5 +166,25 @@ class ManifestReadsSpec extends SparkSpec {
     }
     assert(typedRows(lake) == Set((1L, "n-1", "r1"), (2L, "n-2", "r2"),
       (3L, "merged", "r3"), (9L, "fresh", "r9")))
+  }
+
+  test("a classic append and the payload gate each list _manifests once") {
+    val lake = tmp("mreads_listing")
+    def append(city: String): Unit =
+      payload(Seq((city, 0L, 0L))).write
+        .format("graft.sources.WeatherLakeV2Sink").mode("append").save(lake)
+    // a non-empty lake: the payload gate has a committed manifest to read
+    append("a")
+    ManifestCountingFs.listings.set(0)
+    append("b")
+    assert(ManifestCountingFs.listings.get() == 1,
+      s"append listed _manifests ${ManifestCountingFs.listings.get()} times")
+    ManifestCountingFs.listings.set(0)
+    WeatherLakeV2Sink.requirePayload(lake, "json", "spec")
+    assert(ManifestCountingFs.listings.get() == 1,
+      s"requirePayload listed _manifests " +
+        s"${ManifestCountingFs.listings.get()} times")
+    assert(kv(lake) == Map(0L -> 0L) &&
+      WeatherLakeV2Sink.manifestNames(lake).size == 2)
   }
 }

@@ -170,6 +170,18 @@ class TypedLakeMorScanPhysicsSpec extends SparkSpec {
     spark.sql("DELETE FROM mpc.t WHERE id IN (3, 7, 90)")
     assert(WeatherLakeV2Sink.committedMorDeleteFiles(s"$w/t")
       .forall(TypedLake.isPosDelete))
+    // a second position-delete file naming the SAME (file, ordinal)s: the
+    // compensation subtracts distinct ordinals per file, never delete rows
+    val posFile = new java.io.File(new java.net.URI(
+      WeatherLakeV2Sink.committedMorDeleteFiles(s"$w/t").head).getPath)
+    val twin = new java.io.File(posFile.getParentFile,
+      s"part-morpos-${java.util.UUID.randomUUID()}.parquet")
+    Files.copy(posFile.toPath, twin.toPath)
+    WeatherLakeV2Sink.publishForTest(s"$w/t", "mordelete",
+      snapshot = WeatherLakeV2Sink.liveManifests(s"$w/t"), supersedes = Nil,
+      lines = Seq(WeatherLakeV2Sink.MorDeletePrefix + twin.getPath),
+      payload = Some(TypedLake.Payload))
+    assert(WeatherLakeV2Sink.committedMorDeleteFiles(s"$w/t").size == 2)
 
     def scanDescs(df: DataFrame): Seq[String] = {
       df.collect()

@@ -9,6 +9,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.weather.Weather
 
+/** A local filesystem under its own scheme whose `create` of compaction
+  * output (`part-compact-*`) fails once `FailingCreateFs.allow` such
+  * creates have succeeded.
+  */
+class FailingCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "fcfs"
+  override def getUri: java.net.URI = java.net.URI.create("fcfs:///")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable):
+      org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.getName.startsWith("part-compact-") &&
+        FailingCreateFs.allow.getAndDecrement() <= 0)
+      throw new java.io.IOException(s"injected create failure: $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailingCreateFs {
+  val allow = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
+}
+
 /** The DSv2 write path (WeatherLakeV2Sink) must be a drop-in twin of
   * Weather.writeLake: identical Hive partition directory layout, and
   * readLake parses both lakes into identical rows.
@@ -1311,34 +1333,64 @@ class WeatherLakeV2SinkSpec extends SparkSpec {
     assert(merged == Seq("""{"k":1}""", """{"k":2,"u":1}"""), merged.toString)
   }
 
-  test("scan↔manifest join keys agree on AUTHORITY-bearing URIs: both " +
-      "sides strip scheme+authority to the raw path (a scheme-only " +
-      "strip would turn hdfs://nn:8020/p into /nn:8020/p and the " +
-      "maintenance join would silently match zero rows)") {
-    import graft.sources.WeatherLakeV2Sink
+  test("every spelling the engine reports for a scanned file resolves to " +
+      "its manifest entry, AUTHORITY-bearing and URL-encoded ones included " +
+      "(a key dropping the authority or the encoding would make the " +
+      "maintenance join match zero rows)") {
+    import graft.sources.PayloadCodec
     // (manifest entry string: literal characters, as the writer records
-    //  them; input_file_name() report: URL-encoded URI; the shared key)
+    //  them; the engine's _metadata.file_path report: scheme + authority +
+    //  URL-encoded raw path)
     val cases = Seq(
       ("hdfs://nn:8020/warehouse/lake/city=a/part-1.json",
-        "hdfs://nn:8020/warehouse/lake/city=a/part-1.json",
-        "/warehouse/lake/city=a/part-1.json"),
+        "hdfs://nn:8020/warehouse/lake/city=a/part-1.json"),
       ("s3a://bucket/lake/city=new york/part-2.json",
-        "s3a://bucket/lake/city=new%20york/part-2.json",
-        "/lake/city=new%20york/part-2.json"),
-      ("file:///tmp/lake/part-3.json", "file:///tmp/lake/part-3.json",
-        "/tmp/lake/part-3.json"),
-      ("file:/tmp/lake/part-4.json", "file:/tmp/lake/part-4.json",
-        "/tmp/lake/part-4.json"),
-      ("/tmp/lake/part-5.json", "file:/tmp/lake/part-5.json",
-        "/tmp/lake/part-5.json"))
-    cases.foreach { case (entry, reported, want) =>
-      // the column side (what input_file_name feeds) …
-      assert(WeatherLakeV2Sink.stripSchemeAuthority(reported) == want,
-        s"stripSchemeAuthority($reported)")
-      // … and the manifest-entry side must produce the SAME key
-      assert(WeatherLakeV2Sink.manifestJoinKey(entry) == want,
-        s"manifestJoinKey($entry)")
+        "s3a://bucket/lake/city=new%20york/part-2.json"),
+      ("file:///tmp/lake/part-3.json", "file:/tmp/lake/part-3.json"),
+      ("file:/tmp/lake/part-4.json", "file:/tmp/lake/part-4.json"),
+      ("/tmp/lake/part-5.json", "file:/tmp/lake/part-5.json"))
+    val spellings = PayloadCodec.entrySpellings(cases.map(_._1)).toMap
+    cases.foreach { case (entry, reported) =>
+      assert(spellings.get(reported).contains(entry),
+        s"$reported must resolve to $entry: $spellings")
     }
+  }
+
+  test("a classic rewrite whose task fails after opening a file leaves " +
+      "none of its files on disk (the failed task deletes what it wrote)") {
+    import graft.sources.{LakeIO, WeatherLakeV2Sink}
+    val impl = classOf[FailingCreateFs].getName
+    spark.sparkContext.hadoopConfiguration.set("fs.fcfs.impl", impl)
+    LakeIO.conf.set("fs.fcfs.impl", impl)
+    val local = Files.createTempDirectory("lakev2abort").toString + "/lake"
+    val lake = s"fcfs:$local"
+    val s = spark
+    import s.implicits._
+    // four one-line files in one directory: a clustered-compaction candidate
+    (1 to 4).foreach { k =>
+      Seq(("a", "2024-01-01", "00", s"""{"k":$k}"""))
+        .toDF("city", "ds", "hour", "raw_json")
+        .write.format("graft.sources.WeatherLakeV2Sink")
+        .mode("append").save(lake)
+    }
+    def rows: Seq[String] = WeatherLakeV2Sink.readCommitted(spark, lake)
+      .collect().map(_.getString(0)).sorted.toSeq
+    val before = rows
+    val manifests = WeatherLakeV2Sink.manifestNames(lake)
+    // a 1-byte target rolls after every line: the first output file opens
+    // and takes a line, the roll's second create fails the task
+    FailingCreateFs.allow.set(1)
+    try intercept[Exception] {
+      WeatherLakeV2Sink.compact(spark, lake, targetBytes = 1L,
+        clusterExpr = Some(f => f("value")))
+    } finally FailingCreateFs.allow.set(Int.MaxValue)
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val left = walk(new File(local)).map(_.getName)
+      .filter(_.startsWith("part-compact-"))
+    assert(left.isEmpty, s"failed compaction left files on disk: $left")
+    assert(WeatherLakeV2Sink.manifestNames(lake) == manifests)
+    assert(rows == before)
   }
 
   test("reserved maintenance manifestId prefixes are rejected loudly on " +
