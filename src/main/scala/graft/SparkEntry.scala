@@ -6228,7 +6228,7 @@ object SparkEntry {
         "would diverge from SQL semantics on unmatched delete rows and " +
         "is refused). The delete condition binds over the SOURCE and " +
         "rides the batch as a marker into mergeCommitted's deleteMatched " +
-        "— distributed, no driver key lists; the batch carries deletes " +
+        "— one bounded evaluation of the batch; the batch carries deletes " +
         "(doc_id%11==5, incl. one key that never existed — a no-op), " +
         "updates (doc_id%7==0 outside the delete class, val doubled) and " +
         "fresh negative-key inserts in one statement. Every pass " +

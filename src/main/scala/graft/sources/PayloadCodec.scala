@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, SafeProjection, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, hash, lit, pmod, raise_error}
+import org.apache.spark.sql.functions.{coalesce, col, concat, hash, lit, pmod, raise_error, udf}
 import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 
 import WeatherLakeV2Sink.{FieldAcc, FieldStats, extractJsonField, statsToJson}
@@ -72,9 +72,19 @@ private[graft] sealed trait PayloadCodec extends Serializable {
       case (r, Some(n)) => a.repartition(n, r: _*)
       case (r, None) => a.repartition(r: _*)
     }
-    val arranged =
+    writeTasks(
       if (sortWithin.isEmpty) routed
-      else routed.sortWithinPartitions(route ++ sortWithin: _*)
+      else routed.sortWithinPartitions(route ++ sortWithin: _*), op)
+  }
+
+  /** [[write]] for rows whose partitioning already keeps each
+    * directory's rows in few tasks (a scan of existing files, a small
+    * local batch): no route shuffle, each task writes the rows it holds.
+    */
+  final def writeInPlace(rows: DataFrame, op: String): Seq[String] =
+    writeTasks(aligned(rows), op)
+
+  private def writeTasks(arranged: DataFrame, op: String): Seq[String] = {
     val codec = this
     arranged.queryExecution.toRdd.mapPartitions { it =>
       val w = codec.taskWriter(op)
@@ -504,23 +514,34 @@ private[graft] object PayloadCodec {
   }
 
   /** `scan` (a raw file relation) projected to `cols`, each row tied to
-    * its manifest entry as `__file` through `entries` — a broadcast of
-    * [[entrySpellings]] as `(__path, __file)` plus any per-file columns.
-    * A LEFT join with a loud per-row guard, not an inner join: an engine
-    * spelling the driver map did not anticipate (a Spark/Hadoop upgrade
-    * changing path encoding) must FAIL the read, never silently drop that
-    * file's rows from a DELETE/UPDATE/MERGE. The guard is a
-    * constant-per-split coalesce, free on the matched path.
+    * its manifest entry as `__file` — plus `fileCols`, the entry's
+    * `fileValues` — through the [[entrySpellings]] map,
+    * shipped as a broadcast VARIABLE: building it runs no Spark job (a
+    * broadcast join's build side is a job of its own), and a row resolves
+    * its constant-per-split spelling with one hash lookup. The lookup is
+    * a loud per-row guard, not a filter: an engine spelling the driver
+    * map did not anticipate (a Spark/Hadoop upgrade changing path
+    * encoding) must FAIL the read, never silently drop that file's rows
+    * from a DELETE/UPDATE/MERGE. A read that uses no entry column is
+    * pruned of the lookup by the optimizer.
     */
   private[sources] def tiedToEntries(scan: DataFrame, cols: Seq[Column],
-      entries: DataFrame): DataFrame =
+      files: Seq[String],
+      fileCols: Seq[String] = Nil,
+      fileValues: String => Seq[String] = _ => Nil): DataFrame = {
+    val entry = files.distinct.map(f => f -> (f +: fileValues(f))).toMap
+    val bySpelling = scan.sparkSession.sparkContext.broadcast(
+      entrySpellings(files).map { case (s, f) => s -> entry(f) }.toMap)
+    val entryOf = udf((p: String) => bySpelling.value.getOrElse(p, null))
+    val path = col("_metadata.file_path")
     // ONE select over the raw relation: `_metadata` is a metadata column
     // and must be projected before any other Project hides it
-    scan.select(cols :+ col("_metadata.file_path").as("__path"): _*)
-      .join(broadcast(entries), Seq("__path"), "left")
-      .withColumn("__file", coalesce(col("__file"), raise_error(concat(
-        lit("lake scan: engine-reported file_path spelling not in the " +
-          "driver spelling map (path-encoding drift?): "),
-        col("__path")))))
-      .drop("__path")
+    val tied = scan.select(cols :+ coalesce(entryOf(path), raise_error(concat(
+      lit("lake scan: engine-reported file_path spelling not in the " +
+        "driver spelling map (path-encoding drift?): "), path))).as("__entry"): _*)
+    tied.select(tied.columns.toSeq.init.map(c =>
+        tied.col("`" + c.replace("`", "``") + "`")) ++
+      ("__file" +: fileCols).zipWithIndex.map { case (n, i) =>
+        col("__entry")(i).as(n) }: _*)
+  }
 }

@@ -338,22 +338,20 @@ object TypedLake {
     * stable under pushed filters and row-group skipping: it is the
     * PHYSICAL position, which is what makes position-delete targeting
     * sound). Reads only `files`, typed. `__file` derives from
-    * `_metadata.file_path` — a per-split CONSTANT — against a
-    * driver-built broadcast spelling map: zero per-row path work on the
-    * scan side.
+    * `_metadata.file_path` — a per-split CONSTANT — through the
+    * driver-built spelling map ([[PayloadCodec.tiedToEntries]]): one hash
+    * lookup per row, no path normalization and no Spark job.
     */
   private[graft] def framedTyped(spark: SparkSession, basePath: String,
       schema: StructType, files: Seq[String],
       withPos: Boolean = false): DataFrame = {
-    val session = spark
-    import session.implicits._
     // renamed columns fold their historical spellings in the same select
     PayloadCodec.tiedToEntries(
       DriverListing.parquetFrame(spark, files, widenedSchema(schema),
         Map("basePath" -> basePath)),
       (if (withPos) Seq(col("_metadata.row_index").as(PosFrameCol))
        else Seq.empty) ++ schema.fieldNames.toSeq.map(mappedCol(schema)),
-      PayloadCodec.entrySpellings(files).toDF("__path", "__file"))
+      files)
   }
 
   // -----------------------------------------------------------------
@@ -1261,7 +1259,7 @@ object TypedLake {
       s"TypedLake: merge key columns (${keyCols.mkString(", ")}) must be " +
         s"table columns (${names.mkString(", ")})")
     val inReadDomain = WeatherLakeV2Sink.mergeReadDomain(snap.basePath,
-      batch, partCols,
+      WeatherLakeV2Sink.batchTuples(batch, partCols), partCols,
       prunable = partCols.nonEmpty && partCols.forall(keyCols.contains) &&
         !fullSync,
       decode = ExternalCatalogUtils.unescapePathName)

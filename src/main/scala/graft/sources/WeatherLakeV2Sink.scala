@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -296,23 +297,6 @@ object WeatherLakeV2Sink {
     survivingLinesAsOf(basePath, snap)
       .filter(_.startsWith(MorDeletePrefix))
       .map(_.stripPrefix(MorDeletePrefix).trim)
-
-  /** Surviving data ENTRY lines (path + stats, re-publishable verbatim)
-    * of a captured snapshot — [[filesAsOf]] keeping the full lines, the
-    * resolution [[rollbackTo]] re-lists. Same within-set supersede rules
-    * and loud vacuum-horizon failure.
-    */
-  def entryLinesAsOf(basePath: String, snap: Seq[String]): Seq[String] =
-    survivingLinesAsOf(basePath, snap)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-
-  /** Surviving `#mordelete` directive lines of a captured snapshot with
-    * the PREFIX KEPT (re-publishable verbatim) — [[morDeleteLinesAsOf]]'s
-    * carry-over twin, for commits that must re-list an as-of deletion
-    * state wholesale ([[rollbackTo]]).
-    */
-  def morDirectiveLinesAsOf(basePath: String, snap: Seq[String]): Seq[String] =
-    survivingLinesAsOf(basePath, snap).filter(_.startsWith(MorDeletePrefix))
 
   /** Directive stamped when a row-level commit RAN with `changeLog =
     * true` but its net change set is EMPTY (an idempotent batch replay,
@@ -741,29 +725,69 @@ object WeatherLakeV2Sink {
     * key column) and no NOT MATCHED BY SOURCE clause reads the whole
     * table, a committed line is in the domain iff its partition tuple —
     * path segments mapped through `decode` to logical values — appears
-    * among the batch's distinct tuples; a file missing any partition
-    * segment cannot be ruled out. Otherwise every line is in the domain.
-    * The domain prunes merge candidates on the driver and is the
-    * publish-time conflict domain; the batch's tuples are one bounded
-    * collect.
+    * among `batchParts`, the batch's distinct tuples (read only when
+    * prunable); a file missing any partition segment cannot be ruled
+    * out. Otherwise every line is in the domain. The domain prunes merge
+    * candidates on the driver and is the publish-time conflict domain.
     */
   private[sources] def mergeReadDomain(basePath: String,
-      batch: org.apache.spark.sql.DataFrame, partCols: Seq[String],
+      batchParts: => Set[Seq[String]], partCols: Seq[String],
       prunable: Boolean,
       decode: String => String = identity): String => Boolean =
     if (!prunable) _ => true
     else {
-      import org.apache.spark.sql.functions.col
-      val batchParts: Set[Seq[String]] = batch
-        .select(partCols.map(c => col(c).cast(StringType)): _*)
-        .distinct().collect()
-        .map(r => partCols.indices.map(i => r.getString(i)).toSeq).toSet
+      val parts = batchParts
       line => {
         val pv = partitionValues(basePath, entryPath(line))
         val tuple = partCols.map(pv.get)
-        tuple.exists(_.isEmpty) || batchParts(tuple.map(v => decode(v.get)))
+        tuple.exists(_.isEmpty) || parts(tuple.map(v => decode(v.get)))
       }
     }
+
+  /** A batch's distinct partition tuples (values cast to strings) — one
+    * distributed distinct; the driver receives one row per tuple, never
+    * the batch's rows.
+    */
+  private[sources] def batchTuples(batch: org.apache.spark.sql.DataFrame,
+      partCols: Seq[String]): Set[Seq[String]] = {
+    import org.apache.spark.sql.functions.col
+    batch.select(partCols.map(c => col(c).cast(StringType)): _*)
+      .distinct().collect()
+      .map(r => partCols.indices.map(i => r.getString(i)).toSeq).toSet
+  }
+
+  /** `df`'s rows on the driver when they fit Spark's broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`, the bound Spark itself puts
+    * on a relation it collects to share). Attempted only when the
+    * optimizer's size estimate fits; the ONE job that collects ships at
+    * most the threshold's even share per task, and a task over its share
+    * abandons the attempt — so the driver never holds more than the
+    * threshold in row bytes. None when the estimate or the actual rows
+    * do not fit, or broadcasting is off (threshold ≤ 0).
+    */
+  private def collectWithinBroadcast(df: org.apache.spark.sql.DataFrame):
+      Option[Array[InternalRow]] = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit <= 0 || df.queryExecution.optimizedPlan.stats.sizeInBytes > limit)
+      None
+    else {
+      val rdd = df.queryExecution.toRdd
+      val share = limit / math.max(1, rdd.getNumPartitions)
+      val schema = df.schema
+      val parts = rdd.mapPartitions { it =>
+        val toUnsafe = UnsafeProjection.create(schema)
+        val rows = Array.newBuilder[InternalRow]
+        var bytes = 0L
+        while (bytes <= share && it.hasNext) {
+          val r = toUnsafe(it.next()).copy()
+          bytes += r.getSizeInBytes
+          rows += r
+        }
+        Iterator.single(if (bytes > share) None else Some(rows.result()))
+      }.collect()
+      if (parts.exists(_.isEmpty)) None else Some(parts.flatMap(_.get))
+    }
+  }
 
   /** The live manifests' data ENTRY LINES (path, or path + tab + stats). */
   def committedEntryLines(basePath: String): Seq[String] =
@@ -782,9 +806,16 @@ object WeatherLakeV2Sink {
     * caller's schema (Weather.RawWeatherSchema for the weather lake).
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
-      basePath: String): org.apache.spark.sql.DataFrame = {
-    requirePayload(basePath, "json", "readCommitted")
-    textFrame(spark, committedFiles(basePath))
+      basePath: String): org.apache.spark.sql.DataFrame =
+    textFrame(spark, gatedEntryLines(basePath, "readCommitted").map(entryPath))
+
+  /** The live entry lines of ONE manifest-log read, payload-gated from
+    * that same read — the classic read calls' one snapshot.
+    */
+  private def gatedEntryLines(basePath: String, who: String): Seq[String] = {
+    val snap = loadSnapshot(basePath)
+    snap.requirePayload("json", who)
+    snap.liveEntryLines
   }
 
   /** The `k=v` partition values encoded in a committed file's directory
@@ -847,10 +878,9 @@ object WeatherLakeV2Sink {
     */
   def readCommittedPruned(spark: org.apache.spark.sql.SparkSession,
       basePath: String)(
-      pred: Map[String, String] => Boolean): org.apache.spark.sql.DataFrame = {
-    requirePayload(basePath, "json", "readCommittedPruned")
-    textFrame(spark, committedFilesPruned(basePath)(pred))
-  }
+      pred: Map[String, String] => Boolean): org.apache.spark.sql.DataFrame =
+    textFrame(spark, gatedEntryLines(basePath, "readCommittedPruned")
+      .map(entryPath).filter(survivesPruning(basePath, pred)))
 
   /** DATA skipping on the per-file stats collected at write time (the
     * `statsFields` option): a data predicate — typically a range test via
@@ -865,7 +895,11 @@ object WeatherLakeV2Sink {
     */
   def committedFilesPrunedByStats(basePath: String)(
       pred: Map[String, FieldStats] => Boolean): Seq[String] =
-    committedEntryLines(basePath).filter { l =>
+    statsSurvivors(committedEntryLines(basePath), pred)
+
+  private def statsSurvivors(lines: Seq[String],
+      pred: Map[String, FieldStats] => Boolean): Seq[String] =
+    lines.filter { l =>
       val st = lineStats(l)
       st.isEmpty || pred(st)
     }.map(entryPath)
@@ -876,10 +910,9 @@ object WeatherLakeV2Sink {
     */
   def readCommittedStatsPruned(spark: org.apache.spark.sql.SparkSession,
       basePath: String)(
-      pred: Map[String, FieldStats] => Boolean): org.apache.spark.sql.DataFrame = {
-    requirePayload(basePath, "json", "readCommittedStatsPruned")
-    textFrame(spark, committedFilesPrunedByStats(basePath)(pred))
-  }
+      pred: Map[String, FieldStats] => Boolean): org.apache.spark.sql.DataFrame =
+    textFrame(spark, statsSurvivors(
+      gatedEntryLines(basePath, "readCommittedStatsPruned"), pred))
 
   // -----------------------------------------------------------------
   // exactly-once streaming ingest
@@ -948,7 +981,8 @@ object WeatherLakeV2Sink {
     * (commit_ts, commit — the same axis the stream admits by) wins, and
     * the net inserts/updates/deletes apply as ONE [[mergeCommitted]]
     * commit with `deleteMatched` marking the delete rows — O(epoch
-    * changes) work, one silver manifest, no driver-side key lists.
+    * changes) work, one silver manifest, driver-side keys only within
+    * [[mergeCommitted]]'s broadcast bound.
     * `route` derives the silver partition (city, ds, hour) from the
     * payload column — for delete rows it sees the preimage, which lands
     * the delete in the stored copy's own partition (the
@@ -1272,12 +1306,11 @@ object WeatherLakeV2Sink {
     */
   def readAsOf(spark: org.apache.spark.sql.SparkSession, basePath: String,
       snap: Seq[String]): org.apache.spark.sql.DataFrame = {
-    requirePayload(basePath, "json", "readAsOf")
-    val files = filesAsOf(basePath, snap)
-    if (files.isEmpty) {
-      import spark.implicits._
-      spark.emptyDataset[String].toDF("value")
-    } else DriverListing.textFrame(spark, files)
+    // payload-gated from the as-of read itself: a table's payload is
+    // uniform across its manifests, so any member answers for it
+    val within = resolvedAsOf(basePath, snap)
+    within.requirePayload("json", "readAsOf")
+    textFrame(spark, within.live.flatMap(within.entryLines).map(entryPath))
   }
 
   /** The data files a captured snapshot resolves to — [[readAsOf]]'s
@@ -1333,8 +1366,8 @@ object WeatherLakeV2Sink {
     * untouched by construction and never read, so the cost is O(changed
     * files), not O(table).
     *
-    * `key` is the row identity ([[mergeCommitted]]'s key contract —
-    * unique per snapshot; duplicate keys would fan the join out). A key
+    * `key` is the row identity over the committed line (`raw_json`) —
+    * unique per snapshot; duplicate keys would fan the join out. A key
     * only in `to` emits `insert`; only in `from` emits `delete`; in both
     * with a DIFFERENT line emits `update_preimage` + `update_postimage`;
     * in both with an identical line is a copy-on-write survivor rewrite,
@@ -1353,8 +1386,10 @@ object WeatherLakeV2Sink {
     classicChanges(spark, key)(resolvedAsOf(basePath, from),
       resolvedAsOf(basePath, to))
 
-  /** [[changeDiff]] over JSON lines: the row is the raw line, keyed over
-    * the [[Schema]]-framed frame; classic tables carry no mor deletions.
+  /** [[changeDiff]] over JSON lines: the row is the raw line (`value`,
+    * also readable as `raw_json`), keyed over that line alone — the diff
+    * reads no file column, so the files are plain text reads, never tied
+    * to their entries; classic tables carry no mor deletions.
     */
   private def classicChanges(spark: org.apache.spark.sql.SparkSession,
       key: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column)(
@@ -1362,7 +1397,10 @@ object WeatherLakeV2Sink {
     changeDiff(spark, from, to, "json", "changesBetween",
       StructType(Seq(StructField("change", StringType),
         StructField("value", StringType))))(
-      (files, snap) => framedLines(spark, snap.basePath, files),
+      (files, _) => {
+        val lines = DriverListing.textFrame(spark, files)
+        lines.select(lines("value"), lines("value").as("raw_json"))
+      },
       df => Seq(key(df)))
 
   /** The snapshot-diff core of both change feeds, classic and typed:
@@ -1782,7 +1820,7 @@ object WeatherLakeV2Sink {
   }
 
   /** Committed files re-framed to the write [[Schema]], shared by the
-    * row-level operations, compaction and the change diff: each line
+    * row-level operations and compaction: each line
     * rides with its manifest entry `file` (tied through
     * `_metadata.file_path` and the driver's spelling map —
     * [[PayloadCodec.tiedToEntries]]; basenames are NOT assumed unique
@@ -1794,19 +1832,12 @@ object WeatherLakeV2Sink {
   private def framedLines(spark: org.apache.spark.sql.SparkSession,
       basePath: String, files: Seq[String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val session = spark
-    import session.implicits._
-    val meta = files.map { f =>
-      val pv = partitionValues(basePath, f)
-      f -> (new Path(f).getParent.toString,
-        pv.get("city").orNull, pv.get("ds").orNull, pv.get("hour").orNull)
-    }.toMap
-    val entries = PayloadCodec.entrySpellings(files).map { case (s, f) =>
-      val (dir, city, ds, hour) = meta(f)
-      (s, f, dir, city, ds, hour)
-    }.toDF("__path", "__file", "dir", "city", "ds", "hour")
-    PayloadCodec.tiedToEntries(DriverListing.textFrame(session, files),
-        Seq(col("value")), entries)
+    PayloadCodec.tiedToEntries(DriverListing.textFrame(spark, files),
+        Seq(col("value")), files, Seq("dir", "city", "ds", "hour"), f => {
+          val pv = partitionValues(basePath, f)
+          new Path(f).getParent.toString +:
+            Seq("city", "ds", "hour").map(pv.get(_).orNull)
+        })
       .select(col("__file").as("file"), col("dir"), col("value"),
         col("city"), col("ds"), col("hour"), col("value").as("raw_json"))
   }
@@ -1846,24 +1877,39 @@ object WeatherLakeV2Sink {
     * file's directory path; a committed file outside any `k=v` directory
     * surfaces nulls there, so key on `raw_json` fields to merge those).
     *
-    * Plan shape, sized for 100 TB:
+    * Plan shape, sized for 100 TB, with a fixed job budget:
+    *  0. the batch is evaluated ONCE when it fits Spark's broadcast
+    *     threshold: one job collects its routed rows, keys and delete
+    *     flags to the driver ([[collectWithinBroadcast]] — at most the
+    *     threshold in bytes, the bound a broadcast join would put on the
+    *     same rows), and every later step reads that local copy. A batch
+    *     that does not fit (by estimate or in fact) stays distributed
+    *     and is re-read by each step below, with no driver key list;
     *  1. partition-prune candidates on the driver: only committed files
     *     whose (city, ds, hour) appears among the batch's distinct
     *     partition tuples can hold a conflicting key — O(committed files)
-    *     driver metadata against a broadcast-sized tuple set, no IO;
+    *     driver metadata against the tuple set, taken from the collected
+    *     rows (no job) or from one distributed distinct;
     *  2. ONE distributed pass finds the files actually touched: candidate
-    *     lines semi-joined to batch keys (broadcast when small), distinct
-    *     source files — the only data read before the rewrite, and
-    *     only of candidate files;
-    *  3. rewrite = surviving lines of touched files (anti-join on key)
-    *     unioned with the batch, rolled to `targetBytes` files per
-    *     directory ([[PayloadCodec.write]] — distributed, no driver data);
+    *     lines probed against the batch keys — an `InSet` of the
+    *     collected keys (one job, files deduplicated per task), or a join
+    *     with the batch's distinct keys — the only data read before the
+    *     rewrite, and only of candidate files;
+    *  3. rewrite = surviving lines of touched files (the same probe,
+    *     negated) unioned with the batch, rolled to `targetBytes` files
+    *     per directory ([[PayloadCodec.write]]: no driver data). The
+    *     collected batch needs no route shuffle — each touched file's
+    *     survivors stay in the task that reads it, the batch rows in one
+    *     task — so the rewrite is ONE write job; a distributed batch is
+    *     routed by directory first;
     *  4. validate-and-publish ONE manifest by atomic rename
     *     ([[publishCommit]]), superseding ONLY the manifests owning a
     *     touched file and re-listing their untouched entries verbatim —
     *     a concurrent reader resolves the old committed view or the new
     *     one, never a mix; concurrent APPENDS land after the snapshot
     *     and stay live untouched. Superseded data files await [[vacuum]].
+    * A collected batch costs three jobs (collect, touched pass, write);
+    * the change log, when on, adds its own.
     *
     * Concurrency is OPTIMISTIC: the rewrite runs lock-free, and the
     * publish step conflicts loudly when a concurrent commit superseded a
@@ -1883,7 +1929,10 @@ object WeatherLakeV2Sink {
     * touch detection (their keys find their files) and in the survivor
     * anti-join (the old copy goes away), but are excluded from the
     * rewrite union (nothing comes back); a delete row whose key does not
-    * exist is a no-op. Distributed throughout — no driver-side key list.
+    * exist is a no-op. Driver-side key lists are bounded: the keys reach
+    * the driver only inside the collected batch (step 0, at most the
+    * broadcast threshold in bytes); a larger batch keeps them on the
+    * executors.
     *
     * `deleteNotMatchedBySource` (evaluated over the TARGET frame — there
     * is no source row to reference) marks COMMITTED rows whose key is
@@ -1905,86 +1954,109 @@ object WeatherLakeV2Sink {
         org.apache.spark.sql.Column] = None,
       deleteNotMatchedBySource: Option[org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.Column] = None): MergeStats = {
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
+      import org.apache.spark.sql.functions.{coalesce, col, concat, concat_ws, lit}
       require(targetBytes > 0, "targetBytes must be positive")
       val snap = loadSnapshot(basePath)
       snap.requirePayload("json", "the JSON-line row-level operation")
+      val partCols = Seq("city", "ds", "hour")
+      // the batch as every step reads it: routed line, key, delete flag
+      // and partition tuple
+      val routed = batch.select(Seq(
+        concat_ws("/", lit(basePath) +:
+          partCols.map(c => concat(lit(s"$c="), col(c))): _*).as("dir"),
+        col("raw_json").as("value"), key(batch).as("__key"),
+        deleteMatched.map(d => coalesce(d(batch), lit(false)))
+          .getOrElse(lit(false)).as("__del")) ++
+        partCols.map(c => col(c).cast(StringType).as(c)): _*)
+      // 0. ONE evaluation of the batch when it fits the broadcast bound
+      val collected = collectWithinBroadcast(routed)
+      val source = collected.fold(routed) { rows =>
+        org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+            org.apache.spark.sql.catalyst.types.DataTypeUtils
+              .toAttributes(routed.schema), rows.toSeq))
+      }
       // 1. the merge's READ DOMAIN ([[mergeReadDomain]], bounded by the
       // batch's distinct partition tuples, never by batch rows), reused
       // twice: driver-side candidate pruning here, and publish-time
       // conflict detection against manifests that commit AFTER the
       // snapshot (a concurrent append inside the domain may hold a batch
       // key this merge decided to INSERT — committing would duplicate it)
-      val inReadDomain = mergeReadDomain(basePath, batch,
-        Seq("city", "ds", "hour"),
-        prunable = deleteNotMatchedBySource.isEmpty)
+      val inReadDomain = mergeReadDomain(basePath,
+        collected.fold(batchTuples(routed, partCols)) { rows =>
+          rows.map(r => partCols.indices.map(i =>
+            if (r.isNullAt(4 + i)) null else r.getUTF8String(4 + i).toString)
+            .toSeq).toSet
+        }, partCols, prunable = deleteNotMatchedBySource.isEmpty)
+      // the probe: each committed row flagged `__in` when its key is a
+      // batch key — an InSet of the collected keys (no join, no job of
+      // its own), else a join with the batch's distinct keys
+      val keyType = routed.schema("__key").dataType
+      val keySet = collected.map(_.collect {
+        case r if !r.isNullAt(2) => r.get(2, keyType) }.toSet[Any])
+      def probed(framed: org.apache.spark.sql.DataFrame) = {
+        val keyed = framed.withColumn("__key", key(framed))
+        keySet.filter(_ => keyed.schema("__key").dataType == keyType) match {
+          case Some(keys) => keyed.withColumn("__in", coalesce(
+            org.apache.spark.sql.GraftPlanBridge.columnOf(
+              org.apache.spark.sql.catalyst.expressions.InSet(
+                org.apache.spark.sql.GraftPlanBridge.expressionOf(
+                  keyed("__key")), keys)), lit(false)))
+          case None =>
+            keyed.join(source.select(col("__key")).distinct()
+                .withColumn("__in", lit(true)), Seq("__key"), "left")
+              .withColumn("__in", coalesce(col("__in"), lit(false)))
+        }
+      }
       val candidates = snap.liveEntryLines.filter(inReadDomain).map(entryPath)
-      val batchKeys = batch.select(key(batch).as("__key")).distinct()
-      // committed candidate lines, re-framed to the write Schema
+      // 2. committed candidate lines, re-framed to the write Schema
       // ([[framedLines]]) so `key` evaluates identically on both sides
       val touched: Seq[String] =
         if (candidates.isEmpty) Seq.empty
         else {
-          val cand = framedLines(spark, basePath, candidates)
-          val keyed = cand.withColumn("__key", key(cand))
-          deleteNotMatchedBySource match {
-            case None =>
-              keyed.join(batchKeys, "__key", "left_semi")
-                .select(col("file"))
-                .distinct().collect()
-                .map(_.getString(0)).toSeq
-            case Some(nmbs) =>
-              // a file is touched when it holds a batch key OR a
-              // survivor the full-sync condition deletes — one pass.
-              // No broadcast hint: a full-sync source can be table-sized,
-              // and a forced broadcast of its whole key set would OOM the
-              // driver — AQE elects broadcast when it is actually small
-              keyed.join(batchKeys.withColumn("__in", lit(true)),
-                  Seq("__key"), "left")
-                .filter(col("__in").isNotNull ||
-                  coalesce(nmbs(keyed), lit(false)))
-                .select(col("file"))
-                .distinct().collect()
-                .map(_.getString(0)).toSeq
-          }
+          val hits = probed(framedLines(spark, basePath, candidates))
+          // a full-sync merge also touches files holding a survivor the
+          // NOT MATCHED BY SOURCE condition deletes — the same pass
+          val files = hits.filter(deleteNotMatchedBySource.fold(col("__in"))(
+              nmbs => col("__in") || coalesce(nmbs(hits), lit(false))))
+            .select(col("file")).as[String](
+              org.apache.spark.sql.Encoders.STRING)
+          // a collected batch's probe never shuffles the scan (an InSet,
+          // or a broadcast of at most the threshold), so each file stays
+          // in the tasks that scanned it and per-task dedup ships at most
+          // one name per scanned split; else one distributed distinct
+          (if (keySet.isDefined) files.mapPartitions(_.toSet.iterator)(
+              org.apache.spark.sql.Encoders.STRING)
+           else files.distinct())
+            .collect().distinct.toSeq
         }
       val sup = snap.supersedeFiles(touched)
-      // the touched files' lines, re-framed once for the rewrite and the
-      // change log
+      // the touched files' lines, re-framed and probed once for the
+      // rewrite and the change log
       lazy val tf = framedLines(spark, basePath, touched)
+      lazy val notMatched = probed(tf).filter(!col("__in"))
       // 3. survivors of touched files + the batch's UPSERT rows (delete
-      // rows removed their committed copy via the anti-join above and
-      // bring nothing back), routed to directories
-      def isDelete(df: org.apache.spark.sql.DataFrame) =
-        deleteMatched.map(d => coalesce(d(df), lit(false))).getOrElse(lit(false))
-      val batchRouted = batch.filter(!isDelete(batch)).select(
-        org.apache.spark.sql.functions.concat_ws("/", lit(basePath),
-          org.apache.spark.sql.functions.concat(lit("city="), col("city")),
-          org.apache.spark.sql.functions.concat(lit("ds="), col("ds")),
-          org.apache.spark.sql.functions.concat(lit("hour="), col("hour")))
-          .as("dir"),
-        col("raw_json").as("value"))
+      // rows removed their committed copy via the probe and bring nothing
+      // back); a collected batch writes in place, its rows in one task
+      val upserts = source.filter(!col("__del")).select(col("dir"), col("value"))
+      val batchRows = if (collected.isDefined) upserts.coalesce(1) else upserts
       val rewrite =
-        if (touched.isEmpty) batchRouted
-        else {
-          val notMatched = tf
-            .withColumn("__key", key(tf))
-            .join(batchKeys, "__key", "left_anti")
+        if (touched.isEmpty) batchRows
+        else deleteNotMatchedBySource
           // full-sync: rows absent from the batch are DELETED where the
           // condition holds (SQL three-valued: NULL keeps the row)
-          val survivors = deleteNotMatchedBySource
-            .map(nmbs => notMatched.filter(
-              !coalesce(nmbs(notMatched), lit(false))))
-            .getOrElse(notMatched)
-            .select(col("dir"), col("value"))
-          survivors.unionByName(batchRouted)
-        }
-      val newFiles = PayloadCodec.JsonLines(basePath, statsFields, targetBytes)
-        .write(rewrite, "merge")
+          .map(nmbs => notMatched.filter(!coalesce(nmbs(notMatched), lit(false))))
+          .getOrElse(notMatched)
+          .select(col("dir"), col("value"))
+          .unionByName(batchRows)
+      val codec = PayloadCodec.JsonLines(basePath, statsFields, targetBytes)
+      val newFiles =
+        if (collected.isDefined) codec.writeInPlace(rewrite, "merge")
+        else codec.write(rewrite, "merge")
       val changeLines =
         if (!changeLog) Seq.empty
         else {
-          import org.apache.spark.sql.functions.{array, explode, lit, struct, when}
+          import org.apache.spark.sql.functions.{array, explode, struct, when}
           // classification mirrors changesBetween: a batch key with no
           // committed row is an insert; a differing line is a pre+post
           // pair; a batch row identical to the committed one is NOT a
@@ -1993,13 +2065,12 @@ object WeatherLakeV2Sink {
             if (touched.isEmpty)
               // no committed key matched: upsert rows are inserts, delete
               // rows were no-ops
-              batch.filter(!isDelete(batch)).select(lit("insert").as("change"),
-                col("raw_json").as("value"))
+              upserts.select(lit("insert").as("change"), col("value"))
             else {
               val oldKeyed = tf.withColumn("__key", key(tf))
                 .select(col("__key"), col("value").as("__old"))
-              val newKeyed = batch.select(key(batch).as("__key"),
-                col("raw_json").as("__new"), isDelete(batch).as("__del"))
+              val newKeyed = source.select(col("__key"),
+                col("value").as("__new"), col("__del"))
               val batchChanges = oldKeyed
                 .join(newKeyed, Seq("__key"), "right_outer")
                 .select(explode(
@@ -2020,10 +2091,8 @@ object WeatherLakeV2Sink {
               deleteNotMatchedBySource match {
                 case None => batchChanges
                 case Some(nmbs) =>
-                  val gone = tf.withColumn("__key", key(tf))
-                    .join(batchKeys, "__key", "left_anti")
                   batchChanges.unionByName(
-                    gone.filter(coalesce(nmbs(gone), lit(false)))
+                    notMatched.filter(coalesce(nmbs(notMatched), lit(false)))
                       .select(lit("delete").as("change"), col("value")))
               }
             }
@@ -2276,8 +2345,10 @@ object WeatherLakeV2Sink {
   def rollbackTo(basePath: String, snap: Seq[String]): RollbackStats = {
     val cur = loadSnapshot(basePath)
     val live = cur.live
-    val asOfEntries = entryLinesAsOf(basePath, snap)
-    val asOfMor = morDirectiveLinesAsOf(basePath, snap)
+    // ONE as-of read holds both halves of the restored view
+    val asOf = resolvedAsOf(basePath, snap)
+    val asOfEntries = asOf.live.flatMap(asOf.entryLines)
+    val asOfMor = asOf.morDirectives(asOf.live)
     val curEntries = cur.liveEntryLines
     val curMor = cur.morDirectives(live)
     val asOfFiles = asOfEntries.map(entryPath).toSet

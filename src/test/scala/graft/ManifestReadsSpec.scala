@@ -168,6 +168,56 @@ class ManifestReadsSpec extends SparkSpec {
       (3L, "merged", "r3"), (9L, "fresh", "r9")))
   }
 
+  test("each classic read call lists _manifests once and opens each " +
+      "manifest once") {
+    val lake = classicLake()
+    val n = WeatherLakeV2Sink.manifestNames(lake).size
+    val asOf = WeatherLakeV2Sink.manifestNames(lake).take(3)
+    def reads(what: String, listings: Int, opens: Int)(
+        read: => DataFrame): Unit = {
+      ManifestCountingFs.listings.set(0)
+      ManifestCountingFs.opens.set(0)
+      val df = read
+      assert(ManifestCountingFs.listings.get() == listings,
+        s"$what listed _manifests ${ManifestCountingFs.listings.get()} times")
+      assert(ManifestCountingFs.opens.get() == opens,
+        s"$what opened manifests ${ManifestCountingFs.opens.get()} times " +
+          s"reading $opens")
+      assert(df.count() > 0, what)
+    }
+    reads("readCommitted", 1, n)(WeatherLakeV2Sink.readCommitted(spark, lake))
+    reads("readCommittedPruned", 1, n)(
+      WeatherLakeV2Sink.readCommittedPruned(spark, lake)(_ => true))
+    reads("readCommittedStatsPruned", 1, n)(
+      WeatherLakeV2Sink.readCommittedStatsPruned(spark, lake)(_ => true))
+    // a pinned read resolves its own members: no listing at all
+    reads("readAsOf", 0, asOf.size)(
+      WeatherLakeV2Sink.readAsOf(spark, lake, asOf))
+  }
+
+  test("rollbackTo resolves its as-of snapshot once") {
+    val lake = tmp("mreads_rollback")
+    Seq("a", "b", "c", "d").zipWithIndex.foreach { case (c, i) =>
+      payload(Seq((c, i.toLong, i * 10L)))
+        .write.format("graft.sources.WeatherLakeV2Sink")
+        .mode("append").save(lake)
+    }
+    val before = WeatherLakeV2Sink.snapshot(lake)
+    WeatherLakeV2Sink.mergeCommitted(spark, lake,
+      payload(Seq(("a", 0L, 1L), ("b", 1L, 2L))), key)
+    val n = WeatherLakeV2Sink.manifestNames(lake).size
+    assert(n == 5)
+    ManifestCountingFs.opens.set(0)
+    WeatherLakeV2Sink.rollbackTo(lake, before)
+    // the op's snapshot (n), ONE as-of read, and the publish step's
+    // in-lock re-read (n) and payload gate (1)
+    val bound = 2 * n + 1 + before.size
+    assert(ManifestCountingFs.opens.get() <= bound,
+      s"rollbackTo opened manifests ${ManifestCountingFs.opens.get()} " +
+        s"times (bound $bound)")
+    assert(kv(lake) == Map(0L -> 0L, 1L -> 10L, 2L -> 20L, 3L -> 30L))
+  }
+
   test("a classic append and the payload gate each list _manifests once") {
     val lake = tmp("mreads_listing")
     def append(city: String): Unit =
